@@ -1,6 +1,7 @@
 package graft
 
-import graft.streaming.{AsOfStream, DocStreams, EventStreams, StatefulOps}
+import graft.streaming.{AsOfStream, DocStreams, EventStreams, TwsGates,
+  TwsStatefulOps}
 import org.apache.spark.sql.{DataFrame, Dataset, Encoder, SQLContext}
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
@@ -11,6 +12,8 @@ import org.apache.spark.sql.functions._
   * rows/sec. This is the regression canary for state-size mistakes — an
   * accidentally unbounded state store shows up as micro-batch times
   * growing batch over batch, which collapses the rows/sec number.
+  *
+  * Every stateful op runs on the session's RocksDB state store.
   *
   * Usage: runMain graft.BenchStream [nBatches]; reads
   * SPARK_GRAFT_SF_DIR (default sf0.01). One JSON line per op on stdout;
@@ -91,7 +94,7 @@ object BenchStream {
       .withColumn("ts", lit("2024-01-01 00:00:00").cast("timestamp"))
       .as[Doc].collect().toSeq
     lazy val userEvents = events.map(e =>
-      StatefulOps.UserEvent(e.user_id, e.event_type, e.value,
+      TwsStatefulOps.UserEvent(e.user_id, e.event_type, e.value,
         e.ts.getTime * 1000L, e.event_id))
     lazy val pairs = events.map(e => (e.event_type, e.user_id.toString))
 
@@ -145,13 +148,6 @@ object BenchStream {
       ds => EventStreams.sessionAggregates(ds.toDF()))
     run("dedup_events", events, "append")(
       ds => EventStreams.dedupEvents(ds.toDF()))
-    run("user_profiles", userEvents, "update")(
-      ds => StatefulOps.userProfiles(ds).toDF())
-    run("funnel_progress", userEvents, "update")(
-      ds => StatefulOps.funnelProgress(ds,
-        Seq("view", "click", "purchase")).toDF())
-    run("heavy_hitters_stream", pairs, "update")(
-      ds => StatefulOps.heavyHittersStream(ds, k = 8).toDF())
     run("click_purchase_join", events, "append")(ds =>
       EventStreams.clickPurchaseJoin(
         ds.toDF().filter(col("event_type") === "click"),
@@ -161,52 +157,29 @@ object BenchStream {
         ds.toDF().filter(col("event_type") === "click"),
         ds.toDF().filter(col("event_type") === "purchase")))
     lazy val sessionEvents = events.map(e =>
-      StatefulOps.SessionEvent(e.user_id, e.ts, e.ts.getTime * 1000L,
+      TwsStatefulOps.SessionEvent(e.user_id, e.ts, e.ts.getTime * 1000L,
         e.value, e.event_id))
     lazy val grpValues = events.map(e => (e.event_type, e.value))
-    run("sessionize_stream", sessionEvents, "append")(
-      ds => StatefulOps.sessionizeStream(ds,
+    run("user_profiles_tws", userEvents, "update")(
+      ds => TwsStatefulOps.userProfilesTws(ds).toDF())
+    run("funnel_progress_tws", userEvents, "update")(
+      ds => TwsStatefulOps.funnelProgressTws(ds,
+        Seq("view", "click", "purchase")).toDF())
+    run("heavy_hitters_tws", pairs, "update")(
+      ds => TwsStatefulOps.heavyHittersStreamTws(ds, k = 8).toDF())
+    run("sessionize_tws", sessionEvents, "append")(
+      ds => TwsStatefulOps.sessionizeStreamTws(ds,
         gapMicros = 30L * 60 * 1000000, watermarkDelay = "1 hour").toDF())
-    run("kll_quantiles_stream", grpValues, "update")(
-      ds => StatefulOps.kllQuantilesStream(ds, k = 200,
-        qs = Seq(0.5, 0.9, 0.99)).toDF())
-    // the StatefulOps family on the transformWithState engine (RocksDB):
-    // per-row deltas vs the fMGWS rows above on identical folds — with
-    // TwsGates and the as-of triple this completes the per-engine
-    // comparison across every stateful op in the library
-    locally {
-      val prevProv = spark.conf.getOption(
-        "spark.sql.streaming.stateStore.providerClass")
-      spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-      run("user_profiles_tws", userEvents, "update")(
-        ds => graft.streaming.TwsStatefulOps.userProfilesTws(ds).toDF())
-      run("funnel_progress_tws", userEvents, "update")(
-        ds => graft.streaming.TwsStatefulOps.funnelProgressTws(ds,
-          Seq("view", "click", "purchase")).toDF())
-      run("heavy_hitters_tws", pairs, "update")(
-        ds => graft.streaming.TwsStatefulOps.heavyHittersStreamTws(ds,
-          k = 8).toDF())
-      run("sessionize_tws", sessionEvents, "append")(
-        ds => graft.streaming.TwsStatefulOps.sessionizeStreamTws(ds,
-          gapMicros = 30L * 60 * 1000000, watermarkDelay = "1 hour").toDF())
-      run("kll_quantiles_tws", grpValues, "update")(
-        ds => graft.streaming.TwsStatefulOps.kllQuantilesStreamTws(ds,
-          k = 200, qs = Seq(0.5, 0.9, 0.99)).toDF())
-      // TWS-native histogram drift monitor: per-batch cost is the local
-      // bucket fold + O(touched buckets) MapState point-writes + one KL
-      // over ≤ |buckets| entries — state bounded by bucket count forever
-      run("hist_drift_stream", grpValues, "update")(
-        ds => graft.streaming.DriftStream.histDriftStream(ds,
-          edges = Seq(10.0, 25.0, 50.0, 75.0),
-          refProbs = Seq(0.2, 0.2, 0.2, 0.2, 0.2)).toDF())
-      prevProv match {
-        case Some(v) => spark.conf.set(
-          "spark.sql.streaming.stateStore.providerClass", v)
-        case None => spark.conf.unset(
-          "spark.sql.streaming.stateStore.providerClass")
-      }
-    }
+    run("kll_quantiles_tws", grpValues, "update")(
+      ds => TwsStatefulOps.kllQuantilesStreamTws(ds,
+        k = 200, qs = Seq(0.5, 0.9, 0.99)).toDF())
+    // TWS-native histogram drift monitor: per-batch cost is the local
+    // bucket fold + O(touched buckets) MapState point-writes + one KL
+    // over ≤ |buckets| entries — state bounded by bucket count forever
+    run("hist_drift_stream", grpValues, "update")(
+      ds => graft.streaming.DriftStream.histDriftStream(ds,
+        edges = Seq(10.0, 25.0, 50.0, 75.0),
+        refProbs = Seq(0.2, 0.2, 0.2, 0.2, 0.2)).toDF())
     // watermark-buffered forward/nearest as-of: per-batch cost is the
     // keyed state fold (buffer append + due-left resolution); state is
     // O(rate × horizon) per key, so batch times must stay flat
@@ -215,57 +188,22 @@ object BenchStream {
       .map(e => AsOfStream.AsOfEvent(e.user_id, e.event_type == "click",
         e.ts, e.ts.getTime * 1000L, e.event_id, e.value))
     run("asof_backward_stream", asofEvents, "append")(
-      ds => AsOfStream.backwardWithin(ds,
+      ds => AsOfStream.backwardWithinTws(ds,
         horizonMicros = 30L * 60 * 1000000L, "1 hour").toDF())
     run("asof_forward_stream", asofEvents, "append")(
-      ds => AsOfStream.forwardWithin(ds,
+      ds => AsOfStream.forwardWithinTws(ds,
         horizonMicros = 30L * 60 * 1000000L, "1 hour").toDF())
-    run("asof_nearest_stream", asofEvents, "append")(
-      ds => AsOfStream.nearestWithin(ds,
+    run("asof_nearest_tws", asofEvents, "append")(
+      ds => AsOfStream.nearestWithinTws(ds,
         horizonMicros = 30L * 60 * 1000000L, "1 hour").toDF())
-    // the heaviest as-of mode on the transformWithState engine (RocksDB,
-    // named-timer wakeups): delta vs the row above is the TWS+RocksDB
-    // overhead on the buffered per-key state shape
-    locally {
-      val prevProv = spark.conf.getOption(
-        "spark.sql.streaming.stateStore.providerClass")
-      spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-      run("asof_nearest_tws", asofEvents, "append")(
-        ds => AsOfStream.nearestWithinTws(ds,
-          horizonMicros = 30L * 60 * 1000000L, "1 hour").toDF())
-      prevProv match {
-        case Some(v) => spark.conf.set(
-          "spark.sql.streaming.stateStore.providerClass", v)
-        case None => spark.conf.unset(
-          "spark.sql.streaming.stateStore.providerClass")
-      }
-    }
     // per-source token quota gate: state is ONE long per source, so the
     // per-batch cost is the fold + commit floor at any feed size
     lazy val quotaDocs = events.zipWithIndex.map { case (e, i) =>
       DocStreams.QuotaDoc(e.event_type, e.event_id,
         10L + (math.abs(e.value) % 90).toLong, i.toLong)
     }
-    run("quota_stream", quotaDocs, "append")(
-      ds => DocStreams.tokenQuotaStream(ds, budget = 1000000L).toDF())
-    // the same gate on the transformWithState engine (RocksDB) — with
-    // the near-dup pair below, completes the per-engine comparison on
-    // both the lightest (one long/source) and heaviest (band-claim)
-    // state shapes
-    val prevProv = spark.conf.getOption(
-      "spark.sql.streaming.stateStore.providerClass")
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
     run("quota_stream_tws", quotaDocs, "append")(
-      ds => graft.streaming.TwsGates.tokenQuotaStreamTws(ds,
-        budget = 1000000L).toDF())
-    prevProv match {
-      case Some(v) => spark.conf.set(
-        "spark.sql.streaming.stateStore.providerClass", v)
-      case None => spark.conf.unset(
-        "spark.sql.streaming.stateStore.providerClass")
-    }
+      ds => TwsGates.tokenQuotaStreamTws(ds, budget = 1000000L).toDF())
     // SCD-2 point-in-time enrichment: stream-static join, no state store
     // — per-batch cost is the dimension re-plan + the key equi-join with
     // the interval residual (the dimension broadcasts at this size)
@@ -315,33 +253,14 @@ object BenchStream {
     // the FULL prefix: quality → exact dedup → near-dup gate → quota,
     // THREE stateful operators in one query (the checker's global-
     // watermark warning is acknowledged — no watermark-consuming op
-    // sits downstream of the fMGWS stages; see curatedNeardupQuota)
+    // sits downstream of the TWS stages; see curatedNeardupQuotaTws)
     val prevCheck = spark.conf.getOption(
       "spark.sql.streaming.statefulOperator.checkCorrectness.enabled")
     spark.conf.set(
       "spark.sql.streaming.statefulOperator.checkCorrectness.enabled",
       "false")
-    run("curated_neardup_quota_stream", curDocsM, "append")(
-      ds => DocStreams.curatedNeardupQuota(ds.toDF(), budget = 7000L).toDF())
-    // the same three-stateful-operator prefix on the transformWithState
-    // engine (RocksDB store, named-timer eviction in the claim stage):
-    // per-batch delta vs the row above is the TWS+RocksDB overhead on the
-    // heaviest composed state shape
-    locally {
-      val prevProv = spark.conf.getOption(
-        "spark.sql.streaming.stateStore.providerClass")
-      spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-      run("curated_neardup_quota_tws", curDocsM, "append")(
-        ds => graft.streaming.TwsGates.curatedNeardupQuotaTws(ds.toDF(),
-          budget = 7000L).toDF())
-      prevProv match {
-        case Some(v) => spark.conf.set(
-          "spark.sql.streaming.stateStore.providerClass", v)
-        case None => spark.conf.unset(
-          "spark.sql.streaming.stateStore.providerClass")
-      }
-    }
+    run("curated_neardup_quota_tws", curDocsM, "append")(
+      ds => TwsGates.curatedNeardupQuotaTws(ds.toDF(), budget = 7000L).toDF())
     prevCheck match {
       case Some(v) => spark.conf.set(
         "spark.sql.streaming.statefulOperator.checkCorrectness.enabled", v)
@@ -353,17 +272,8 @@ object BenchStream {
     // stateless per-doc fold — the near-dup twin of doc_curated's
     // exact-fingerprint dedup. Same state-bound class (rate × horizon)
     // with a ×bands constant.
-    run("neardup_stream", curDocsM, "append")(
-      ds => graft.streaming.NeardupStream.neardupStream(ds.toDF()).toDF())
-    // the same gate on the transformWithState engine (RocksDB store,
-    // event-time timer eviction): the row measures TWS+RocksDB overhead
-    // vs the fMGWS+HDFS-backed row above on identical work
-    val prevProvider = spark.conf.getOption(
-      "spark.sql.streaming.stateStore.providerClass")
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
     run("neardup_stream_tws", curDocsM, "append")(
-      ds => graft.streaming.TwsGates.neardupStreamTws(ds.toDF()).toDF())
+      ds => TwsGates.neardupStreamTws(ds.toDF()).toDF())
     // TWS checkpoint-restart at state scale: prime the RocksDB band-claim
     // store with the whole feed (AvailableNow drain against a persistent
     // checkpoint), then measure a SECOND query restoring that state and
@@ -446,7 +356,7 @@ object BenchStream {
           val src = spark.readStream.schema(schema)
           maxFilesPerTrigger.foreach(n =>
             src.option("maxFilesPerTrigger", n.toString))
-          val q = graft.streaming.TwsGates.neardupStreamTws(
+          val q = TwsGates.neardupStreamTws(
               src.parquet(feedDir))
             .writeStream.outputMode("append")
             .option("checkpointLocation", ckpt)
@@ -558,12 +468,6 @@ object BenchStream {
         case None => spark.conf.unset(ClKey)
       }
     }
-    prevProvider match {
-      case Some(v) => spark.conf.set(
-        "spark.sql.streaming.stateStore.providerClass", v)
-      case None => spark.conf.unset(
-        "spark.sql.streaming.stateStore.providerClass")
-    }
     // stateless benchmark-decontamination gate: the benchmark span
     // fingerprints are collected once at query build and baked into the
     // native SpanHitCount expression (one shared hash set per executor,
@@ -580,26 +484,14 @@ object BenchStream {
     // distribution vs a frozen reference, the ops-dashboard feed that
     // flags a crawl source going bad while the curation prefix is
     // admitting it. Stateless filter → map → bounded MapState histogram.
-    locally {
-      val prevProv = spark.conf.getOption(
-        "spark.sql.streaming.stateStore.providerClass")
-      spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-      run("curation_drift_monitor", curDocs, "update")(ds =>
-        graft.streaming.DriftStream.histDriftStream(
-          DocStreams.qualityFiltered(ds.toDF())
-            .select(col("source"),
-              size(split(col("text"), " ")).cast("double").as("n_tok"))
-            .as[(String, Double)],
-          edges = Seq(25.0, 45.0, 65.0, 85.0),
-          refProbs = Seq(0.2, 0.2, 0.2, 0.2, 0.2)).toDF())
-      prevProv match {
-        case Some(v) => spark.conf.set(
-          "spark.sql.streaming.stateStore.providerClass", v)
-        case None => spark.conf.unset(
-          "spark.sql.streaming.stateStore.providerClass")
-      }
-    }
+    run("curation_drift_monitor", curDocs, "update")(ds =>
+      graft.streaming.DriftStream.histDriftStream(
+        DocStreams.qualityFiltered(ds.toDF())
+          .select(col("source"),
+            size(split(col("text"), " ")).cast("double").as("n_tok"))
+          .as[(String, Double)],
+        edges = Seq(25.0, 45.0, 65.0, 85.0),
+        refProbs = Seq(0.2, 0.2, 0.2, 0.2, 0.2)).toDF())
     // embedding LSH dedup: signature computation (8 native-dot
     // hyperplane projections per row) + the per-bucket dedup state store
     // — the vector twin of doc_curated's fingerprint dedup. Watermark

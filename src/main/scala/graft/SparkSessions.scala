@@ -4,8 +4,9 @@ import org.apache.spark.sql.SparkSession
 
 /** One place for the engine's local-session contract, used by every shipped
   * main (Bench/Verify/Smoke/dev tools): shuffle partitions sized to cores,
-  * UTC, the nanos-as-long flag the events table requires, and the graft
-  * extensions (operator lowering + SQL functions). Config drift between
+  * UTC, the nanos-as-long flag the events table requires, the graft
+  * extensions (operator lowering + SQL functions), and the RocksDB state
+  * store the streaming ops need. Config drift between
   * mains — e.g. one missing `nanosAsLong` and failing on the events
   * parquet — is exactly the bug this prevents.
   */
@@ -39,6 +40,10 @@ object SparkSessions {
           if (new java.io.File("/dev/shm").canWrite) "/dev/shm/graft-scratch"
           else System.getProperty("java.io.tmpdir")))
       .config("spark.sql.extensions", "graft.plans.GraftExtensions")
+      // every custom stateful streaming op runs on transformWithState,
+      // which refuses the default HDFS-backed state store
+      .config("spark.sql.streaming.stateStore.providerClass",
+        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
       .getOrCreate()
     spark
   }

@@ -225,7 +225,8 @@ object TextDedup {
     * signature needs NO aggregate and fuses into a stream's source scan
     * (a streaming groupBy would be a stateful operator; a document is a
     * bounded row, so the fold belongs inside it). Bit-identical to the
-    * batch signature by construction — NeardupStreamSpec pins it.
+    * batch signature by construction — NeardupStreamSpec's "row-local
+    * MinHash equals the batch aggregate signature" pins it.
     *
     * `shingles` must be a BOUND attribute holding the document's shingle
     * array ([[shinglesFromWords]] projected to a column first) — an
@@ -273,7 +274,9 @@ object TextDedup {
     * A stream cannot use the batch shape (the min would be a stateful
     * aggregation), so the fold runs as one tight JVM loop per document
     * instead: same split/shingle/salted-md5/lane layout, byte-identical
-    * output (NeardupStreamSpec pins all three paths equal).
+    * output. NeardupStreamSpec pins this JVM path, the Column path above
+    * and the batch aggregate equal, on its fixture and on adversarial
+    * texts; [[graft.streaming.TwsGates]] runs it per streamed document.
     *
     * Returns null when the document has fewer than `shingleN` words (no
     * signature — the batch path emits no row); callers route those around

@@ -1,9 +1,9 @@
 package graft.streaming
 
 import org.apache.spark.sql.{Dataset, Encoders}
-import org.apache.spark.sql.streaming.{ExpiredTimerInfo, GroupState,
-  GroupStateTimeout, ListState, OutputMode, StatefulProcessor, TTLConfig,
-  TimeMode, TimerValues, ValueState}
+import org.apache.spark.sql.streaming.{ExpiredTimerInfo, ListState,
+  OutputMode, StatefulProcessor, TTLConfig, TimeMode, TimerValues,
+  ValueState}
 
 /** Streaming twins of the as-of join family
   * ([[graft.ops.AsOfJoin.backwardWithin]] / `forwardWithin` /
@@ -17,8 +17,8 @@ import org.apache.spark.sql.streaming.{ExpiredTimerInfo, GroupState,
   * flight. All three therefore BUFFER left rows in keyed state until
   * their resolution point, then resolve against the buffered right rows
   * and emit exactly once (append mode) — the same watermark-buffered-
-  * emit discipline `StatefulOps.sessionizeStream` uses to close gap
-  * sessions; they differ only in the horizon arithmetic.
+  * emit discipline `TwsStatefulOps.sessionizeStreamTws` uses to close
+  * gap sessions; they differ only in the horizon arithmetic.
   *
   * The horizon is load-bearing, not a convenience: an UNBOUNDED forward
   * as-of would have to hold every unmatched left row forever (the match
@@ -43,16 +43,22 @@ import org.apache.spark.sql.streaming.{ExpiredTimerInfo, GroupState,
   * directional candidate is gated by its own distance BEFORE the
   * closer-of-the-two choice — inclusive at the bound.
   *
-  * Late data: with an event-time timeout the engine DROPS input rows
+  * Late data: in `TimeMode.EventTime` the engine DROPS input rows
   * older than the watermark before they reach the state function
-  * (`FlatMapGroupsWithStateExec`'s late-data filter — verified by
-  * AsOfStreamSpec) — so a late right can never reopen a resolved left
-  * (append-only emit holds by construction) and a late left emits
-  * nothing rather than a wrong or partial match. The `resolve` fold
-  * still handles an arrived-late left defensively (it would settle
-  * immediately against the surviving buffer), but under this engine
-  * path that branch only serves rows inside the allowed-lateness
-  * window.
+  * (`TransformWithStateExec`'s event-time filter — pinned by
+  * AsOfStreamSpec and TwsAsOfSpec) — so a late right can never reopen a
+  * resolved left (append-only emit holds by construction) and a late
+  * left emits nothing rather than a wrong or partial match. The
+  * `resolve` fold still handles an arrived-late left defensively (it
+  * would settle immediately against the surviving buffer), but under
+  * this engine that branch only serves rows inside the
+  * allowed-lateness window.
+  *
+  * The operator runs on `transformWithState`: the buffers live in
+  * ListState, and one named event-time timer per key is re-armed at the
+  * key's next resolution point (earliest pending left's horizon; with
+  * only rights buffered, the last right's evictability). It needs the
+  * RocksDB state store provider, which the engine's sessions set.
   */
 object AsOfStream {
 
@@ -75,9 +81,9 @@ object AsOfStream {
                        asof_value: Option[Double],
                        asof_side: Option[String])
 
-  /** Keyed state: both buffers as parallel-seq columns (a product
-    * encoder keeps the state-store wire format flat). Lefts:
-    * (ts_us, event_id); rights: (ts_us, event_id, value).
+  /** One key's buffers as parallel-seq columns — the input and output of
+    * the [[resolve]] fold. Lefts: (ts_us, event_id); rights: (ts_us,
+    * event_id, value).
     */
   case class Buffers(l_ts: Seq[Long], l_id: Seq[Long],
                      r_ts: Seq[Long], r_id: Seq[Long], r_val: Seq[Double])
@@ -87,42 +93,6 @@ object AsOfStream {
   private[streaming] case object Forward extends Mode
   private[streaming] case object Nearest extends Mode
 
-  /** Backward as-of over a stream: each left row matched to the latest
-    * right row in `[t − horizonMicros, t]` on the same key — completing
-    * the streaming triple. Backward needs no future rows, but it DOES
-    * need the watermark: a left row resolves only once
-    * `watermark > t`, because a right row with `rt ≤ t` is on time (not
-    * late-dropped) until the watermark passes `rt` — emitting earlier
-    * could miss a better match still legitimately in flight. So even
-    * the "easy" direction buffers, just with the shortest horizon of
-    * the three (`t`, not `t + horizon`).
-    */
-  def backwardWithin(events: Dataset[AsOfEvent], horizonMicros: Long,
-                     watermarkDelay: String): Dataset[AsOfMatch] =
-    run(events, horizonMicros, Backward, watermarkDelay)
-
-  /** Forward as-of over a stream: each left row matched to the earliest
-    * right row in `[t, t + horizonMicros]` on the same key, emitted once
-    * the watermark proves no earlier-qualifying right can still arrive.
-    */
-  def forwardWithin(events: Dataset[AsOfEvent], horizonMicros: Long,
-                    watermarkDelay: String): Dataset[AsOfMatch] =
-    run(events, horizonMicros, Forward, watermarkDelay)
-
-  /** Nearest as-of over a stream: the closer of the backward and forward
-    * matches within `horizonMicros`, ties to backward, `asof_side`
-    * reporting the winning direction.
-    */
-  def nearestWithin(events: Dataset[AsOfEvent], horizonMicros: Long,
-                    watermarkDelay: String): Dataset[AsOfMatch] =
-    run(events, horizonMicros, Nearest, watermarkDelay)
-
-  /** Resolve every buffered left whose horizon the watermark has passed
-    * (plus — late-left handling — any left already past it on arrival)
-    * against the right buffer; returns (emitted, remaining state).
-    * Shared by the streaming operator and direct unit tests, like
-    * `StatefulOps.foldSessions`.
-    */
   /** A left row's resolution point: backward matches are complete once
     * the watermark passes `t` itself; forward/nearest wait out the full
     * look-ahead horizon.
@@ -132,6 +102,12 @@ object AsOfStream {
     case _ => t + horizon
   }
 
+  /** Resolve every buffered left whose horizon the watermark has passed
+    * (plus — late-left handling — any left already past it on arrival)
+    * against the right buffer; returns (emitted, remaining state).
+    * Shared by the streaming operator and direct unit tests, like
+    * `TwsStatefulOps.foldSessions`.
+    */
   private[streaming] def resolve(uid: Long, horizon: Long,
                                  mode: Mode, wmUs: Long,
                                  st: Buffers)
@@ -177,26 +153,31 @@ object AsOfStream {
     case _ => horizon
   }
 
-  /** The as-of triple on the transformWithState engine — the same
-    * buffered-resolve fold ([[resolve]], shared code) with the fMGWS
-    * state plumbing swapped for TWS typed state: the buffers live in a
-    * ValueState, and the fMGWS event-time timeout becomes a named
-    * event-time timer re-armed at each key's next resolution point
-    * (earliest pending left's horizon; with only rights buffered, the
-    * last right's evictability). Requires the RocksDB state store
-    * provider — the production path when per-key buffers at crawl rate
-    * must spill off heap. TwsAsOfSpec pins decision parity with the
-    * fMGWS engine on the shared random frame in all three modes, plus
-    * the same engine-level late-data drops.
+  /** Backward as-of over a stream: each left row matched to the latest
+    * right row in `[t − horizonMicros, t]` on the same key. Backward
+    * needs no future rows, but it DOES need the watermark: a left row
+    * resolves only once `watermark > t`, because a right row with
+    * `rt ≤ t` is on time (not late-dropped) until the watermark passes
+    * `rt` — emitting earlier could miss a better match still
+    * legitimately in flight. So even the "easy" direction buffers, just
+    * with the shortest horizon of the three (`t`, not `t + horizon`).
     */
   def backwardWithinTws(events: Dataset[AsOfEvent], horizonMicros: Long,
                         watermarkDelay: String): Dataset[AsOfMatch] =
     runTws(events, horizonMicros, Backward, watermarkDelay)
 
+  /** Forward as-of over a stream: each left row matched to the earliest
+    * right row in `[t, t + horizonMicros]` on the same key, emitted once
+    * the watermark proves no earlier-qualifying right can still arrive.
+    */
   def forwardWithinTws(events: Dataset[AsOfEvent], horizonMicros: Long,
                        watermarkDelay: String): Dataset[AsOfMatch] =
     runTws(events, horizonMicros, Forward, watermarkDelay)
 
+  /** Nearest as-of over a stream: the closer of the backward and forward
+    * matches within `horizonMicros`, ties to backward, `asof_side`
+    * reporting the winning direction.
+    */
   def nearestWithinTws(events: Dataset[AsOfEvent], horizonMicros: Long,
                        watermarkDelay: String): Dataset[AsOfMatch] =
     runTws(events, horizonMicros, Nearest, watermarkDelay)
@@ -245,8 +226,9 @@ object AsOfStream {
     /** Resolve-and-rearm, shared by the input and timer paths: emits the
       * due lefts, persists the surviving buffers (append-only when the
       * resolve changed nothing, full rewrite otherwise), and re-arms the
-      * wake-up timer — the same arithmetic as the fMGWS engine's
-      * setTimeoutTimestamp, expressed as a named timer.
+      * wake-up timer: the earliest pending left's resolution point (with
+      * only rights left, when the last of them becomes evictable),
+      * strictly past the current watermark.
       */
     private def step(uid: Long, prior: Buffers,
                      newL: Seq[LeftBuf], newR: Seq[RightBuf], wmMs: Long)
@@ -345,47 +327,5 @@ object AsOfStream {
       .groupByKey(_.user_id)(Encoders.scalaLong)
       .transformWithState(new AsOfProcessor(horizonMicros, mode),
         TimeMode.EventTime(), OutputMode.Append())
-  }
-
-  private def run(events: Dataset[AsOfEvent], horizonMicros: Long,
-                  mode: Mode, watermarkDelay: String)
-  : Dataset[AsOfMatch] = {
-    implicit val outEnc = Encoders.product[AsOfMatch]
-    implicit val stEnc = Encoders.product[Buffers]
-    events
-      .withWatermark("ts", watermarkDelay)
-      .as(Encoders.product[AsOfEvent])
-      .groupByKey(_.user_id)(Encoders.scalaLong)
-      .flatMapGroupsWithState(OutputMode.Append(),
-        GroupStateTimeout.EventTimeTimeout)(
-        (uid: Long, batch: Iterator[AsOfEvent],
-         state: GroupState[Buffers]) => {
-          val wmUs = state.getCurrentWatermarkMs() * 1000L
-          val prior = state.getOption
-            .getOrElse(Buffers(Nil, Nil, Nil, Nil, Nil))
-          val (ls, rs) = batch.toSeq.partition(_.is_left)
-          val merged = Buffers(
-            prior.l_ts ++ ls.map(_.ts_micros),
-            prior.l_id ++ ls.map(_.event_id),
-            prior.r_ts ++ rs.map(_.ts_micros),
-            prior.r_id ++ rs.map(_.event_id),
-            prior.r_val ++ rs.map(_.value))
-          val (out, kept) = resolve(uid, horizonMicros, mode,
-            wmUs, merged)
-          if (kept.l_ts.isEmpty && kept.r_ts.isEmpty) {
-            if (state.exists) state.remove()
-          } else {
-            state.update(kept)
-            // wake when the earliest pending left's horizon closes; with
-            // only rights left, when the last of them becomes evictable.
-            // Timeouts must sit strictly past the current watermark.
-            val dueUs =
-              if (kept.l_ts.nonEmpty) dueAt(mode, kept.l_ts.min, horizonMicros)
-              else kept.r_ts.max + backHorizon(mode, horizonMicros)
-            state.setTimeoutTimestamp(math.max(dueUs / 1000L + 1L,
-              state.getCurrentWatermarkMs() + 1L))
-          }
-          out.iterator
-        })
   }
 }

@@ -87,9 +87,8 @@ object DocStreams {
   /** A document in the quota gate: `seq` is the caller's total arrival
     * order per source (a kafka offset, a landing-file sequence, an
     * event id) — the fold sorts each micro-batch's group slice by it,
-    * so the decision stream is DETERMINISTIC even though
-    * `flatMapGroupsWithState` hands the group iterator in shuffle
-    * order.
+    * so the decision stream is DETERMINISTIC even though the stateful
+    * operator hands the group iterator in shuffle order.
     */
   case class QuotaDoc(source: String, doc_id: Long, n_tokens: Long,
                       seq: Long)
@@ -103,20 +102,6 @@ object DocStreams {
   case class QuotaDecision(source: String, doc_id: Long, n_tokens: Long,
                            kept: Boolean, cum_tokens: Long)
 
-  /** Streaming per-source token quota — the live-ingestion twin of the
-    * batch `token_budget_select`: admit documents per source until the
-    * source's token budget is exhausted, then drop. State is ONE long
-    * per source (the running total) — bounded by the DOMAIN count, not
-    * the stream: cluster metadata at any ingest rate, no watermark or
-    * eviction needed, which is what makes this the gate you can leave
-    * running for a month. Decisions are final at emit (the running
-    * total never decreases), so the output composes with the
-    * exactly-once sinks; within-batch ordering is pinned by the `seq`
-    * sort (see [[QuotaDoc]]), and cross-batch ordering by the state
-    * itself. QuotaStreamSpec certifies batch-boundary invariance,
-    * within-batch shuffle invariance, and row parity with the batch
-    * prefix rule.
-    */
   /** Streaming benchmark-decontamination gate — the live twin of the
     * batch `decontaminate_spans`: drop incoming documents whose n-token
     * window fingerprints overlap the STATIC benchmark set in more than
@@ -179,7 +164,7 @@ object DocStreams {
     *
     * Two stateful operators chain in ONE streaming query (Spark 3.4+
     * multi-stateful support): dropDuplicatesWithinWatermark feeds
-    * flatMapGroupsWithState in append mode.
+    * [[TwsGates.tokenQuotaStreamTws]] in append mode.
     */
   def curatedQuota(docs: DataFrame, budget: Long,
                    textCol: String = "text",
@@ -193,7 +178,7 @@ object DocStreams {
           .cast("long").as("n_tokens"),
         col("seq"))
       .as(org.apache.spark.sql.Encoders.product[QuotaDoc])
-    tokenQuotaStream(qd, budget)
+    TwsGates.tokenQuotaStreamTws(qd, budget)
   }
 
   /** Payload-carrying twins of the near-dup gate's row types: the
@@ -208,176 +193,4 @@ object DocStreams {
   case class CurBandVerdict(doc_id: Long, seq: Long, n_bands: Int,
                             claimed: Boolean, source: String,
                             n_tokens: Long)
-
-  /** THE full streaming curation prefix: quality filter → exact
-    * content dedup → NEAR-dup LSH gate → per-source token quota, as ONE
-    * streaming query with THREE stateful operators
-    * (dropDuplicatesWithinWatermark → band-claim fMGWS → quota fMGWS).
-    * The batch analogue is `pretrain_pipeline`'s quality/exact/near-dup/
-    * budget stages; [[curatedQuota]] is this minus the near-dup stage.
-    *
-    * Spark's multi-stateful correctness checker REFUSES this chain by
-    * default: flatMapGroupsWithState may emit rows "older than the
-    * watermark", which a downstream watermark-CONSUMING operator would
-    * silently drop as late. That hazard does not apply here — the only
-    * watermark-consuming stage (the exact dedup) sits UPSTREAM of both
-    * fMGWS operators, and neither the band-claim nor the quota stage
-    * drops late rows (the claim uses the watermark solely for state
-    * eviction; the quota gate never reads it). Callers must acknowledge
-    * by setting
-    * `spark.sql.streaming.statefulOperator.checkCorrectness.enabled=false`
-    * before starting the query (CuratedNeardupQuotaSpec and the
-    * STREAMBENCH row do; parity with the sequential batch rule is what
-    * makes the acknowledgement safe rather than hopeful).
-    */
-  def curatedNeardupQuota(docs: DataFrame, budget: Long,
-                          textCol: String = "text",
-                          watermark: String = "2 hours",
-                          allowedLangs: Option[Seq[String]] = None)
-  : org.apache.spark.sql.Dataset[QuotaDecision] = {
-    import org.apache.spark.sql.{Encoders => E}
-    import org.apache.spark.sql.streaming.{GroupStateTimeout, OutputMode}
-    val horizon = NeardupStream.horizonMillis(watermark)
-    // band-claim stage — same contract as NeardupStream's, with payload
-    def claims(bandRows: org.apache.spark.sql.Dataset[CurBandRow])
-    : org.apache.spark.sql.Dataset[CurBandVerdict] =
-      bandRows.groupByKey(_.bkey)(E.STRING)
-        .flatMapGroupsWithState(OutputMode.Append(),
-          GroupStateTimeout.EventTimeTimeout)(
-          (_: String, batch: Iterator[CurBandRow],
-           state: org.apache.spark.sql.streaming.GroupState[Long]) => {
-            if (state.hasTimedOut) { state.remove(); Iterator.empty }
-            else {
-              val rows = batch.toSeq.sortBy(r => (r.seq, r.doc_id))
-              val already = state.exists
-              val out = rows.zipWithIndex.map { case (r, i) =>
-                CurBandVerdict(r.doc_id, r.seq, r.n_bands,
-                  claimed = !already && i == 0, r.source, r.n_tokens)
-              }
-              if (!already) state.update(rows.head.seq)
-              state.setTimeoutTimestamp(
-                math.max(rows.map(_.ts.getTime).max,
-                  state.getCurrentWatermarkMs()) + horizon)
-              out.iterator
-            }
-          })(E.scalaLong, E.product[CurBandVerdict])
-    curatedNeardupQuotaPipeline(docs, textCol, watermark,
-      allowedLangs, claims, qd => tokenQuotaStream(qd, budget))
-  }
-
-  /** Everything around the two pluggable stateful stages of
-    * [[curatedNeardupQuota]] — quality filter, one-pass JVM
-    * fingerprint/minhash projection, watermark, exact dedup, band
-    * explode, the stateless per-doc fold, and the short-doc bypass. The
-    * claim and quota stages are parameters so the fMGWS engine
-    * ([[curatedNeardupQuota]]) and the transformWithState engine
-    * ([[TwsGates.curatedNeardupQuotaTws]]) share ONE pipeline and one
-    * spec contract — the same pluggable-stage pattern
-    * [[NeardupStream.gate]] established for the standalone gate.
-    */
-  private[streaming] def curatedNeardupQuotaPipeline(
-      docs: DataFrame, textCol: String, watermark: String,
-      allowedLangs: Option[Seq[String]],
-      claims: org.apache.spark.sql.Dataset[CurBandRow] =>
-        org.apache.spark.sql.Dataset[CurBandVerdict],
-      quota: org.apache.spark.sql.Dataset[QuotaDoc] =>
-        org.apache.spark.sql.Dataset[QuotaDecision])
-  : org.apache.spark.sql.Dataset[QuotaDecision] = {
-    import org.apache.spark.sql.{Encoders => E}
-    val k = graft.ops.TextDedup.NumHashes
-    val bandSize = graft.ops.TextDedup.BandSize
-    require(k > 0 && k % bandSize == 0,
-      s"signature length k=$k must be a positive multiple of the band " +
-        s"size $bandSize: the band slices below index 0 until k in full " +
-        "BandSize strides")
-    val nBands = k / bandSize
-
-    // ORDERING CONSTRAINT (found the hard way): a typed map drops the
-    // event-time watermark tag from its output attributes, and a
-    // watermark cannot be re-defined below a stateful operator under
-    // allowMultiple. So every object-side column — the JVM fingerprint
-    // AND the JVM minhash bands — is computed FIRST, the watermark is
-    // defined ONCE on the result, and everything downstream (dedup,
-    // band explode, both fMGWS stages) stays relational/grouped so the
-    // tag survives to the claim stage's event-time timeout.
-    val prepped = qualityFiltered(docs, textCol, allowedLangs)
-      .select(col("doc_id").cast("long"), col("seq").cast("long"),
-        col("ts"), col("source").cast("string"),
-        col(textCol).cast("string").as("__text"))
-      .as(E.product[(Long, Long, java.sql.Timestamp, String, String)])
-      .mapPartitions { it =>
-        it.map { case (docId, seq, t, source, text) =>
-          // quality already rejected null text; split parity with
-          // size(split(coalesce(text,''),' '))
-          val nTokens = text.split(" ", -1).length.toLong
-          val fp = graft.ops.TextStats.fingerprintJvm(text)
-          val mh = graft.ops.TextDedup.minhashSignatureJvm(text, k)
-          val bands =
-            if (mh == null) Seq.empty[String]
-            else (0 until k by bandSize).map { s =>
-              ((s / bandSize).toLong +: (s until s + bandSize).map(mh))
-                .mkString("|")
-            }
-          (docId, seq, t, source, nTokens, fp, bands)
-        }
-      }(E.product[(Long, Long, java.sql.Timestamp, String, Long, String,
-        Seq[String])])
-      .toDF("doc_id", "seq", "ts", "source", "n_tokens", "fp", "bands")
-      .withWatermark("ts", watermark)
-
-    val deduped = prepped.dropDuplicatesWithinWatermark("fp")
-
-    val short = deduped.filter(size(col("bands")) === 0)
-      .select(col("source"), col("doc_id"), col("n_tokens"), col("seq"))
-      .as(E.product[QuotaDoc])
-
-    val bandRows = deduped.filter(size(col("bands")) > 0)
-      .select(explode(col("bands")).as("bkey"), col("doc_id"),
-        col("seq"), lit(nBands).as("n_bands"), col("ts"),
-        col("source"), col("n_tokens"))
-      .as(E.product[CurBandRow])
-
-    val verdicts = claims(bandRows)
-
-    // stateless per-doc fold (all of a doc's verdicts share its batch);
-    // only near-dup SURVIVORS reach the quota gate
-    val kept = verdicts.repartition(col("doc_id"))
-      .mapPartitions { it =>
-        val acc = scala.collection.mutable.HashMap
-          .empty[Long, (Long, Int, Int, String, Long)]
-        it.foreach { v =>
-          val (s, n, c, src, t) = acc.getOrElse(v.doc_id,
-            (v.seq, v.n_bands, 0, v.source, v.n_tokens))
-          acc(v.doc_id) = (s, n, c + (if (v.claimed) 1 else 0), src, t)
-        }
-        acc.iterator.collect { case (doc, (s, n, c, src, t)) if c == n =>
-          QuotaDoc(src, doc, t, s)
-        }
-      }(E.product[QuotaDoc])
-
-    quota(kept.unionByName(short))
-  }
-
-  def tokenQuotaStream(docs: org.apache.spark.sql.Dataset[QuotaDoc],
-                       budget: Long)
-  : org.apache.spark.sql.Dataset[QuotaDecision] = {
-    import org.apache.spark.sql.{Encoders => E}
-    import org.apache.spark.sql.streaming.{GroupStateTimeout, OutputMode}
-    implicit val decEnc = E.product[QuotaDecision]
-    implicit val longEnc = E.scalaLong
-    docs.groupByKey(_.source)(E.STRING)
-      .flatMapGroupsWithState(OutputMode.Append(),
-        GroupStateTimeout.NoTimeout)(
-        (source: String, batch: Iterator[QuotaDoc],
-         state: org.apache.spark.sql.streaming.GroupState[Long]) => {
-          var cum = state.getOption.getOrElse(0L)
-          val out = batch.toSeq.sortBy(_.seq).map { d =>
-            cum += d.n_tokens
-            QuotaDecision(source, d.doc_id, d.n_tokens,
-              kept = cum <= budget, cum_tokens = cum)
-          }
-          state.update(cum)
-          out.iterator
-        })
-  }
 }

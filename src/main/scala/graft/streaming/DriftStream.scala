@@ -16,11 +16,10 @@ import org.apache.spark.sql.streaming.{MapState, OutputMode,
   *
   * State per group is the live bucket-count histogram — bounded by the
   * BUCKET COUNT forever, the same "cluster metadata, not data" class as
-  * the token-quota gate. It lives in typed [[MapState]] (TWS-native by
-  * design, not a port: a micro-batch touches only the buckets its rows
-  * land in, so state I/O per batch is O(touched buckets) point-writes —
-  * the MapState case where the fMGWS whole-blob alternative is
-  * structurally worse, which is why no fMGWS twin exists for this op).
+  * the token-quota gate. It lives in typed [[MapState]]: a micro-batch
+  * touches only the buckets its rows land in, so state I/O per batch is
+  * O(touched buckets) point-writes, where one whole-histogram blob would
+  * be rewritten every batch.
   *
   * Per batch, each touched group emits `KL(live ‖ reference)` plus the
   * live count. KL is well-defined without smoothing because reference

@@ -13,6 +13,8 @@ object TestSpark {
       .config("spark.ui.enabled", "false")
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .config("spark.sql.extensions", "graft.plans.GraftExtensions")
+      .config("spark.sql.streaming.stateStore.providerClass",
+        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
       .config("spark.sql.warehouse.dir",
         s"/tmp/graft-test-warehouse-${System.getProperty("user.name", "u")}")
       .getOrCreate()

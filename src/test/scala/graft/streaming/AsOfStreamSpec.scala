@@ -8,12 +8,12 @@ import graft.streaming.AsOfStream.{AsOfEvent, AsOfMatch, Buffers}
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Certifies the streaming forward/nearest as-of twins: row-for-row
-  * parity with the batch [[AsOfJoin.forwardWithin]] /
-  * [[AsOfJoin.nearestWithin]] at the same horizon on a seeded random
-  * frame, plus the append-only late-data contract (a late right never
-  * reopens a resolved left; a late left resolves immediately,
-  * best-effort).
+/** Certifies the streaming as-of triple ([[AsOfStream]]): the `resolve`
+  * fold's tie rules, row-for-row parity of each `*WithinTws` operator
+  * with the batch [[AsOfJoin]] `*Within` twin at the same horizon on a
+  * seeded random frame, buffered state across a restart, and the
+  * append-only late-data contract (a late right never reopens a
+  * resolved left; a late left emits nothing).
   */
 class AsOfStreamSpec extends AnyFunSuite {
 
@@ -116,11 +116,11 @@ class AsOfStreamSpec extends AnyFunSuite {
     val mem = MemoryStream[AsOfEvent]
     val ds = mode match {
       case AsOfStream.Nearest =>
-        AsOfStream.nearestWithin(mem.toDS(), HorizonUs, "5 seconds")
+        AsOfStream.nearestWithinTws(mem.toDS(), HorizonUs, "5 seconds")
       case AsOfStream.Forward =>
-        AsOfStream.forwardWithin(mem.toDS(), HorizonUs, "5 seconds")
+        AsOfStream.forwardWithinTws(mem.toDS(), HorizonUs, "5 seconds")
       case AsOfStream.Backward =>
-        AsOfStream.backwardWithin(mem.toDS(), HorizonUs, "5 seconds")
+        AsOfStream.backwardWithinTws(mem.toDS(), HorizonUs, "5 seconds")
     }
     val q = ds.writeStream.format("memory").queryName(name)
       .outputMode("append").start()
@@ -201,7 +201,8 @@ class AsOfStreamSpec extends AnyFunSuite {
     val results = java.util.Collections.synchronizedList(
       new java.util.ArrayList[AsOfMatch]())
     val mem = MemoryStream[AsOfEvent]
-    def start() = AsOfStream.nearestWithin(mem.toDS(), HorizonUs, "5 seconds")
+    def start() = AsOfStream
+      .nearestWithinTws(mem.toDS(), HorizonUs, "5 seconds")
       .writeStream
       .outputMode("append")
       .option("checkpointLocation", ckpt)
@@ -240,7 +241,7 @@ class AsOfStreamSpec extends AnyFunSuite {
     "a resolved left, a late left emits nothing") {
     implicit val sqlCtx = spark.sqlContext
     val mem = MemoryStream[AsOfEvent]
-    val q = AsOfStream.nearestWithin(mem.toDS(), HorizonUs, "5 seconds")
+    val q = AsOfStream.nearestWithinTws(mem.toDS(), HorizonUs, "5 seconds")
       .writeStream.format("memory").queryName("asof_late_stream")
       .outputMode("append").start()
     try {

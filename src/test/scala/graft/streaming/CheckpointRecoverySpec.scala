@@ -1,7 +1,7 @@
 package graft.streaming
 
 import graft.TestSpark
-import graft.streaming.StatefulOps.{UserEvent, UserProfile}
+import graft.streaming.TwsStatefulOps.{UserEvent, UserProfile}
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -17,7 +17,7 @@ class CheckpointRecoverySpec extends AnyFunSuite {
   private val spark = TestSpark.spark
   import spark.implicits._
 
-  test("flatMapGroupsWithState state survives a stop/restart cycle") {
+  test("transformWithState state survives a stop/restart cycle") {
     implicit val sqlCtx = spark.sqlContext
     val ckpt = java.nio.file.Files
       .createTempDirectory("graft_ckpt_recovery").toString
@@ -26,7 +26,7 @@ class CheckpointRecoverySpec extends AnyFunSuite {
         new java.util.ArrayList[UserProfile]())
     val mem = MemoryStream[UserEvent]
 
-    def start() = StatefulOps.userProfiles(mem.toDS())
+    def start() = TwsStatefulOps.userProfilesTws(mem.toDS())
       .writeStream
       .outputMode("update")
       .option("checkpointLocation", ckpt)

@@ -6,7 +6,7 @@ import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-/** [[DocStreams.curatedNeardupQuota]] certification — the FULL streaming
+/** [[TwsGates.curatedNeardupQuotaTws]] certification — the FULL streaming
   * curation prefix (quality → exact dedup → near-dup LSH gate → token
   * quota; three stateful operators in one query) is row-parity with the
   * sequential batch rule. The near-dup stage is seq-deterministic even
@@ -121,7 +121,7 @@ class CuratedNeardupQuotaSpec extends AnyFunSuite {
       val mem = MemoryStream[Doc]
       val ckpt = java.nio.file.Files
         .createTempDirectory(s"ckpt_$name").toString
-      val q = DocStreams.curatedNeardupQuota(mem.toDF(), Budget)
+      val q = TwsGates.curatedNeardupQuotaTws(mem.toDF(), Budget)
         .writeStream.format("memory").queryName(name)
         .option("checkpointLocation", ckpt)
         .outputMode("append").start()
@@ -181,42 +181,17 @@ class CuratedNeardupQuotaSpec extends AnyFunSuite {
     assert(jvm == col)
   }
 
-  private def runTws(chunks: Seq[Seq[Doc]], name: String): Seq[QuotaDecision] =
-    withCheckOff {
-      val ProviderKey = "spark.sql.streaming.stateStore.providerClass"
-      val prev = spark.conf.getOption(ProviderKey)
-      spark.conf.set(ProviderKey,
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-      try {
-        implicit val sqlCtx = spark.sqlContext
-        val mem = MemoryStream[Doc]
-        val ckpt = java.nio.file.Files
-          .createTempDirectory(s"ckpt_$name").toString
-        val q = TwsGates.curatedNeardupQuotaTws(mem.toDF(), Budget)
-          .writeStream.format("memory").queryName(name)
-          .option("checkpointLocation", ckpt)
-          .outputMode("append").start()
-        try {
-          chunks.foreach { c => mem.addData(c: _*); q.processAllAvailable() }
-          spark.table(name).as[QuotaDecision].collect().toSeq
-        } finally q.stop()
-      } finally prev match {
-        case Some(v) => spark.conf.set(ProviderKey, v)
-        case None => spark.conf.unset(ProviderKey)
-      }
-    }
-
-  test("transformWithState engine matches the batch rule and the fMGWS " +
-    "engine across batch shapes") {
+  test("transformWithState engine matches the batch rule across batch " +
+    "shapes") {
     val want = batchRule(feed).toSet
     def keyed(rows: Seq[QuotaDecision]) =
       rows.map(d => (d.source, d.doc_id, d.n_tokens, d.kept, d.cum_tokens))
         .toSet
-    assert(keyed(runTws(Seq(feed), "cnq_tws_giant")) == want)
-    val chunked = keyed(runTws(feed.grouped(6).toSeq, "cnq_tws_chunks"))
+    assert(keyed(run(Seq(feed), "cnq_tws_giant")) == want)
+    val chunked = keyed(run(feed.grouped(6).toSeq, "cnq_tws_chunks"))
     assert(chunked == want)
-    // the TWS run made real decisions on both sides of the quota, and the
-    // planted near-dups were dropped by the LSH stage on this engine too
+    // the planted near-dups were dropped by the LSH stage at this batch
+    // shape too
     val mutatedIds = feed.filter(d =>
       d.text != null && d.text.contains("mutantword")).map(_.doc_id).toSet
     assert(mutatedIds.nonEmpty &&
@@ -230,40 +205,31 @@ class CuratedNeardupQuotaSpec extends AnyFunSuite {
     // RESTORED exact-dedup fingerprints, band claims (and their timers),
     // and per-source quota totals to all carry across the restart.
     withCheckOff {
-      val ProviderKey = "spark.sql.streaming.stateStore.providerClass"
-      val prev = spark.conf.getOption(ProviderKey)
-      spark.conf.set(ProviderKey,
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-      try {
-        implicit val sqlCtx = spark.sqlContext
-        val ckpt = java.nio.file.Files
-          .createTempDirectory("ckpt_cnq_tws_restart").toString
-        val results = java.util.Collections.synchronizedList(
-          new java.util.ArrayList[QuotaDecision]())
-        val mem = MemoryStream[Doc]
-        def drain(chunk: Seq[Doc]): Unit = {
-          mem.addData(chunk: _*)
-          val q = TwsGates.curatedNeardupQuotaTws(mem.toDF(), Budget)
-            .writeStream.outputMode("append")
-            .option("checkpointLocation", ckpt)
-            .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-            .foreachBatch {
-              (b: org.apache.spark.sql.Dataset[QuotaDecision], _: Long) =>
-                b.collect().foreach(results.add)
-            }.start()
-          assert(q.awaitTermination(120000), "drain did not stop")
-        }
-        val (h1, h2) = feed.splitAt(feed.size / 2)
-        drain(h1); drain(h2)
-        val got = results.toArray(Array.empty[QuotaDecision])
-          .map(d => (d.source, d.doc_id, d.n_tokens, d.kept, d.cum_tokens))
-          .toSet
-        assert(got == batchRule(feed).toSet,
-          "restored state diverged from the batch rule")
-      } finally prev match {
-        case Some(v) => spark.conf.set(ProviderKey, v)
-        case None => spark.conf.unset(ProviderKey)
+      implicit val sqlCtx = spark.sqlContext
+      val ckpt = java.nio.file.Files
+        .createTempDirectory("ckpt_cnq_tws_restart").toString
+      val results = java.util.Collections.synchronizedList(
+        new java.util.ArrayList[QuotaDecision]())
+      val mem = MemoryStream[Doc]
+      def drain(chunk: Seq[Doc]): Unit = {
+        mem.addData(chunk: _*)
+        val q = TwsGates.curatedNeardupQuotaTws(mem.toDF(), Budget)
+          .writeStream.outputMode("append")
+          .option("checkpointLocation", ckpt)
+          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
+          .foreachBatch {
+            (b: org.apache.spark.sql.Dataset[QuotaDecision], _: Long) =>
+              b.collect().foreach(results.add)
+          }.start()
+        assert(q.awaitTermination(120000), "drain did not stop")
       }
+      val (h1, h2) = feed.splitAt(feed.size / 2)
+      drain(h1); drain(h2)
+      val got = results.toArray(Array.empty[QuotaDecision])
+        .map(d => (d.source, d.doc_id, d.n_tokens, d.kept, d.cum_tokens))
+        .toSet
+      assert(got == batchRule(feed).toSet,
+        "restored state diverged from the batch rule")
     }
   }
 

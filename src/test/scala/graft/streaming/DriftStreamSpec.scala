@@ -18,20 +18,6 @@ class DriftStreamSpec extends AnyFunSuite {
   private val spark = TestSpark.spark
   import spark.implicits._
 
-  private val ProviderKey = "spark.sql.streaming.stateStore.providerClass"
-  private val RocksDb =
-    "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
-
-  private def withRocksDb[T](body: => T): T = {
-    val prev = spark.conf.getOption(ProviderKey)
-    spark.conf.set(ProviderKey, RocksDb)
-    try body
-    finally prev match {
-      case Some(v) => spark.conf.set(ProviderKey, v)
-      case None => spark.conf.unset(ProviderKey)
-    }
-  }
-
   private val Edges = Seq(10.0, 20.0, 40.0, 80.0)
   // reference = the "steady" generator's true bucket mass (uniform over
   // [0,80): 10/80, 10/80, 20/80, 40/80), with the overflow bucket kept
@@ -59,7 +45,7 @@ class DriftStreamSpec extends AnyFunSuite {
       g -> DriftStream.klOf(counts, Ref.toArray)
     }
 
-  private def run(chunk: Int, name: String): Seq[GroupDrift] = withRocksDb {
+  private def run(chunk: Int, name: String): Seq[GroupDrift] = {
     implicit val sqlCtx = spark.sqlContext
     val mem = MemoryStream[(String, Double)]
     val q = DriftStream.histDriftStream(mem.toDS(), Edges, Ref)

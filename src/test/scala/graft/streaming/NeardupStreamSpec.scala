@@ -2,12 +2,12 @@ package graft.streaming
 
 import graft.TestSpark
 import graft.ops.TextDedup
-import graft.streaming.NeardupStream.NeardupDecision
+import graft.streaming.TwsGates.NeardupDecision
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-/** [[NeardupStream.neardupStream]] certification:
+/** [[TwsGates.neardupStreamTws]] certification:
   *
   *  1. the row-local MinHash signature is bit-identical to the batch
   *     [[TextDedup.minhashSignatures]] aggregate (same salted-md5 lanes);
@@ -98,7 +98,7 @@ class NeardupStreamSpec extends AnyFunSuite {
   : Map[Long, (Boolean, Int, Int)] = {
     implicit val sqlCtx = spark.sqlContext
     val mem = MemoryStream[Doc]
-    val q = NeardupStream.neardupStream(mem.toDF())
+    val q = TwsGates.neardupStreamTws(mem.toDF())
       .writeStream.format("memory").queryName(name)
       .outputMode("append").start()
     try {
@@ -160,7 +160,7 @@ class NeardupStreamSpec extends AnyFunSuite {
     val results = java.util.Collections.synchronizedList(
       new java.util.ArrayList[NeardupDecision]())
     val mem = MemoryStream[Doc]
-    def start() = NeardupStream.neardupStream(mem.toDF())
+    def start() = TwsGates.neardupStreamTws(mem.toDF())
       .writeStream.outputMode("append")
       .option("checkpointLocation", ckpt)
       .foreachBatch {
@@ -217,22 +217,22 @@ class NeardupStreamSpec extends AnyFunSuite {
 
   test("horizonMillis parses every watermark delay Spark accepts") {
     // simple, compound, and week units — Spark's IntervalUtils grammar
-    assert(NeardupStream.horizonMillis("2 hours") == 7200000L)
-    assert(NeardupStream.horizonMillis("90 seconds") == 90000L)
-    assert(NeardupStream.horizonMillis("1 hour 30 minutes") == 5400000L)
-    assert(NeardupStream.horizonMillis("1 week") == 7L * 86400000L)
-    assert(NeardupStream.horizonMillis("2 days 3 hours 15 minutes") ==
+    assert(TwsGates.horizonMillis("2 hours") == 7200000L)
+    assert(TwsGates.horizonMillis("90 seconds") == 90000L)
+    assert(TwsGates.horizonMillis("1 hour 30 minutes") == 5400000L)
+    assert(TwsGates.horizonMillis("1 week") == 7L * 86400000L)
+    assert(TwsGates.horizonMillis("2 days 3 hours 15 minutes") ==
       2L * 86400000L + 3L * 3600000L + 15L * 60000L)
     // calendar months have no fixed width — rejected, not mis-sized
     intercept[IllegalArgumentException] {
-      NeardupStream.horizonMillis("1 month")
+      TwsGates.horizonMillis("1 month")
     }
   }
 
   test("a signature length that is not a band multiple is rejected") {
     val df = Seq((1L, "a b c d e f", 0L, t0)).toDF("doc_id", "text", "seq", "ts")
     intercept[IllegalArgumentException] {
-      NeardupStream.neardupStream(df, k = TextDedup.NumHashes + 1)
+      TwsGates.neardupStreamTws(df, k = TextDedup.NumHashes + 1)
     }
   }
 

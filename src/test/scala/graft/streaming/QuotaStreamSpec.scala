@@ -5,7 +5,7 @@ import graft.streaming.DocStreams.{QuotaDecision, QuotaDoc}
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.scalatest.funsuite.AnyFunSuite
 
-/** [[DocStreams.tokenQuotaStream]] certification: the per-source quota
+/** [[TwsGates.tokenQuotaStreamTws]] certification: the per-source quota
   * gate is row-identical to the batch greedy-prefix rule over arrival
   * order, and the answer does not depend on micro-batch boundaries or
   * on the shuffle order within a batch (the `seq` sort is the
@@ -44,7 +44,7 @@ class QuotaStreamSpec extends AnyFunSuite {
   : Map[Long, (Boolean, Long)] = {
     implicit val sqlCtx = spark.sqlContext
     val mem = MemoryStream[QuotaDoc]
-    val q = DocStreams.tokenQuotaStream(mem.toDS(), Budget)
+    val q = TwsGates.tokenQuotaStreamTws(mem.toDS(), Budget)
       .writeStream.format("memory").queryName(name)
       .outputMode("append").start()
     try {

@@ -1,7 +1,8 @@
 package graft.streaming
 
 import graft.TestSpark
-import graft.streaming.StatefulOps.{FunnelProgress, UserEvent, UserProfile}
+import graft.streaming.TwsStatefulOps.{FunnelProgress, GroupHeavyHitters,
+  UserEvent, UserProfile}
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -11,21 +12,21 @@ class StatefulOpsSpec extends AnyFunSuite {
   import spark.implicits._
 
   test("fold accumulates counts, purchase tally, and last-seen") {
-    val out = StatefulOps.fold(7L, Iterator(
+    val out = TwsStatefulOps.fold(7L, Iterator(
       UserEvent(7L, "click", 1.0, 100L),
       UserEvent(7L, "purchase", 9.5, 300L),
       UserEvent(7L, "view", 0.5, 200L)), None)
     assert(out == UserProfile(7L, 3L, 1L, 11.0, 300L))
     // resumes from prior state
-    val out2 = StatefulOps.fold(7L,
+    val out2 = TwsStatefulOps.fold(7L,
       Iterator(UserEvent(7L, "purchase", 1.0, 500L)), Some(out))
     assert(out2 == UserProfile(7L, 4L, 2L, 12.0, 500L))
   }
 
-  test("flatMapGroupsWithState maintains per-user state across micro-batches") {
+  test("transformWithState maintains per-user state across micro-batches") {
     implicit val sqlCtx = spark.sqlContext
     val mem = MemoryStream[UserEvent]
-    val q = StatefulOps.userProfiles(mem.toDS())
+    val q = TwsStatefulOps.userProfilesTws(mem.toDS())
       .writeStream.format("memory").queryName("profiles_test")
       .outputMode("update").start()
     try {
@@ -49,7 +50,7 @@ class StatefulOpsSpec extends AnyFunSuite {
   test("streaming heavy hitters: MG guarantee holds over the whole stream") {
     implicit val sqlCtx = spark.sqlContext
     val mem = MemoryStream[(String, String)]
-    val q = StatefulOps.heavyHittersStream(mem.toDS(), k = 3)
+    val q = TwsStatefulOps.heavyHittersStreamTws(mem.toDS(), k = 3)
       .writeStream.format("memory").queryName("hh_stream_test")
       .outputMode("update").start()
     // group g: 60×a + 30×b + 12 singletons over two micro-batches; n=102
@@ -61,7 +62,7 @@ class StatefulOpsSpec extends AnyFunSuite {
       mem.addData(batch1.map(("g", _)): _*); q.processAllAvailable()
       mem.addData(batch2.map(("g", _)): _*); q.processAllAvailable()
       val finals = spark.table("hh_stream_test")
-        .as[StatefulOps.GroupHeavyHitters].collect()
+        .as[GroupHeavyHitters].collect()
         .maxBy(_.ests.sum) // the last (most-absorbed) snapshot
       val est = finals.items.zip(finals.ests).toMap
       val n = batch1.size + batch2.size
@@ -79,7 +80,7 @@ class StatefulOpsSpec extends AnyFunSuite {
   test("streaming funnel state matches the batch funnel operator") {
     implicit val sqlCtx = spark.sqlContext
     val mem = MemoryStream[UserEvent]
-    val q = StatefulOps.funnelProgress(mem.toDS(), Steps)
+    val q = TwsStatefulOps.funnelProgressTws(mem.toDS(), Steps)
       .writeStream.format("memory").queryName("funnel_test")
       .outputMode("update").start()
     // user 1 converts across two micro-batches; user 2 clicks before

@@ -3,16 +3,18 @@ package graft.streaming
 import java.sql.Timestamp
 
 import graft.TestSpark
+import graft.ops.AsOfJoin
 import graft.streaming.AsOfStream.{AsOfEvent, AsOfMatch}
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
+import org.apache.spark.sql.functions.lit
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Certifies the transformWithState as-of engine
-  * ([[AsOfStream.nearestWithinTws]] family): decision parity with the
-  * flatMapGroupsWithState engine on the SAME seeded random frame in all
-  * three modes (both engines share the `resolve` fold, so a divergence
-  * here would mean the state/timer plumbing disagrees — watermark
-  * visibility, timer firing, or late-row filtering), plus the
+  * ([[AsOfStream.nearestWithinTws]] family): row parity with the batch
+  * `AsOfJoin.*Within` operators on AsOfStreamSpec's seeded random frame
+  * in all three modes, fed as ONE micro-batch (every left buffers until
+  * the flush moves the watermark, then resolves through the timer path;
+  * AsOfStreamSpec feeds the same frame in 60-row batches), plus the
   * engine-level late-data contract and a checkpoint stop/restart cycle
   * on restored TWS state.
   */
@@ -23,20 +25,6 @@ class TwsAsOfSpec extends AnyFunSuite {
 
   private val Base = 1704067200L
   private val HorizonUs = 600L * 1000000L
-
-  private val ProviderKey = "spark.sql.streaming.stateStore.providerClass"
-  private val RocksDb =
-    "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
-
-  private def withRocksDb[T](body: => T): T = {
-    val prev = spark.conf.getOption(ProviderKey)
-    spark.conf.set(ProviderKey, RocksDb)
-    try body
-    finally prev match {
-      case Some(v) => spark.conf.set(ProviderKey, v)
-      case None => spark.conf.unset(ProviderKey)
-    }
-  }
 
   private def ev(uid: Long, sec: Long, isLeft: Boolean, id: Long,
                  value: Double = 0.0): AsOfEvent =
@@ -54,29 +42,22 @@ class TwsAsOfSpec extends AnyFunSuite {
   }
 
   private def runEngine(events: Seq[AsOfEvent], mode: AsOfStream.Mode,
-                        tws: Boolean, name: String): Map[Long, AsOfMatch] = {
+                        name: String): Map[Long, AsOfMatch] = {
     implicit val sqlCtx = spark.sqlContext
     val mem = MemoryStream[AsOfEvent]
-    val ds = (mode, tws) match {
-      case (AsOfStream.Nearest, false) =>
-        AsOfStream.nearestWithin(mem.toDS(), HorizonUs, "5 seconds")
-      case (AsOfStream.Forward, false) =>
-        AsOfStream.forwardWithin(mem.toDS(), HorizonUs, "5 seconds")
-      case (AsOfStream.Backward, false) =>
-        AsOfStream.backwardWithin(mem.toDS(), HorizonUs, "5 seconds")
-      case (AsOfStream.Nearest, true) =>
+    val ds = mode match {
+      case AsOfStream.Nearest =>
         AsOfStream.nearestWithinTws(mem.toDS(), HorizonUs, "5 seconds")
-      case (AsOfStream.Forward, true) =>
+      case AsOfStream.Forward =>
         AsOfStream.forwardWithinTws(mem.toDS(), HorizonUs, "5 seconds")
-      case (AsOfStream.Backward, true) =>
+      case AsOfStream.Backward =>
         AsOfStream.backwardWithinTws(mem.toDS(), HorizonUs, "5 seconds")
     }
     val q = ds.writeStream.format("memory").queryName(name)
       .outputMode("append").start()
     try {
-      events.grouped(60).foreach { chunk =>
-        mem.addData(chunk: _*); q.processAllAvailable()
-      }
+      mem.addData(events: _*)
+      q.processAllAvailable()
       mem.addData(ev(999L, 7200 + 700, isLeft = false, 99999L))
       q.processAllAvailable()
       mem.addData(ev(999L, 7200 + 720, isLeft = false, 99998L))
@@ -87,28 +68,56 @@ class TwsAsOfSpec extends AnyFunSuite {
     } finally q.stop()
   }
 
-  test("tws engine is decision-identical to fMGWS in all three modes") {
+  /** The batch operator's answer per left row: (match id, match value,
+    * side — reported by `nearest` only).
+    */
+  private def batchAnswer(events: Seq[AsOfEvent], mode: AsOfStream.Mode)
+  : Map[Long, (Option[Long], Option[Double], Option[String])] = {
+    val clicks = events.filter(_.is_left)
+      .map(e => (e.event_id, e.user_id, e.ts))
+      .toDF("event_id", "user_id", "ts")
+    val purchases = events.filterNot(_.is_left)
+      .map(e => (e.user_id, e.ts, e.event_id, e.value))
+      .toDF("user_id", "ts", "event_id", "value")
+    val payload = Seq("event_id", "value")
+    val joined = mode match {
+      case AsOfStream.Backward => AsOfJoin.backwardWithin(clicks, purchases,
+        "user_id", "ts", "ts", payload, "event_id", HorizonUs)
+        .withColumn("asof_side", lit(null).cast("string"))
+      case AsOfStream.Forward => AsOfJoin.forwardWithin(clicks, purchases,
+        "user_id", "ts", "ts", payload, "event_id", HorizonUs)
+        .withColumn("asof_side", lit(null).cast("string"))
+      case AsOfStream.Nearest => AsOfJoin.nearestWithin(clicks, purchases,
+        "user_id", "ts", "ts", payload, "event_id", HorizonUs)
+    }
+    joined.select("event_id", "asof_event_id", "asof_value", "asof_side")
+      .as[(Long, Option[Long], Option[Double], Option[String])].collect()
+      .map(t => t._1 -> (t._2, t._3, t._4)).toMap
+  }
+
+  test("tws engine matches the batch operators in all three modes on " +
+    "one micro-batch") {
     val events = randomEvents()
     for (mode <- Seq(AsOfStream.Backward, AsOfStream.Forward,
         AsOfStream.Nearest)) {
       val tag = mode.toString.toLowerCase
-      val want = runEngine(events, mode, tws = false, s"tws_asof_f_$tag")
-      val got = withRocksDb {
-        runEngine(events, mode, tws = true, s"tws_asof_t_$tag")
-      }
+      val want = batchAnswer(events, mode)
+      val got = runEngine(events, mode, s"tws_asof_$tag")
       assert(got.keySet == want.keySet,
         s"$mode: left-row sets differ (${got.keySet.size} vs ${want.keySet.size})")
       want.foreach { case (id, w) =>
-        assert(got(id) == w, s"$mode mismatch at left $id: ${got(id)} vs $w")
+        val g = got(id)
+        assert((g.asof_event_id, g.asof_value, g.asof_side) == w,
+          s"$mode mismatch at left $id: $g vs $w")
       }
       // fixture-exercise: matched and unmatched lefts both occur
-      assert(want.values.exists(_.asof_event_id.isDefined) &&
-        want.values.exists(_.asof_event_id.isEmpty), s"$mode one-sided")
+      assert(want.values.exists(_._1.isDefined) &&
+        want.values.exists(_._1.isEmpty), s"$mode one-sided")
     }
   }
 
   test("tws engine drops late rows: a late right never reopens a " +
-    "resolved left, a late left emits nothing") { withRocksDb {
+    "resolved left, a late left emits nothing") {
     implicit val sqlCtx = spark.sqlContext
     val mem = MemoryStream[AsOfEvent]
     val q = AsOfStream.nearestWithinTws(mem.toDS(), HorizonUs, "5 seconds")
@@ -135,10 +144,10 @@ class TwsAsOfSpec extends AnyFunSuite {
       assert(rows() == first,
         s"late left produced output: ${rows().filter(_.event_id == 11L)}")
     } finally q.stop()
-  }}
+  }
 
   test("tws buffered state survives a stop/restart cycle through the " +
-    "checkpoint") { withRocksDb {
+    "checkpoint") {
     implicit val sqlCtx = spark.sqlContext
     val ckpt = java.nio.file.Files
       .createTempDirectory("graft_tws_asof_ckpt").toString
@@ -174,5 +183,5 @@ class TwsAsOfSpec extends AnyFunSuite {
         Seq((10L, Some(21L), Some("forward"))),
         s"state did not survive the restart: $got")
     } finally q2.stop()
-  }}
+  }
 }

@@ -2,38 +2,21 @@ package graft.streaming
 
 import graft.TestSpark
 import graft.streaming.DocStreams.{QuotaDecision, QuotaDoc}
-import graft.streaming.NeardupStream.NeardupDecision
+import graft.streaming.TwsGates.NeardupDecision
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.scalatest.funsuite.AnyFunSuite
 
-/** [[TwsGates]] certification: the transformWithState twins are
-  * decision-identical to their flatMapGroupsWithState originals — the
-  * quota gate against the batch greedy-prefix rule (same oracle as
-  * QuotaStreamSpec), the near-dup gate against the sequential-greedy
-  * replay on the shared NeardupStreamSpec fixture — at both one-batch and
-  * many-batch feeds. Each test flips the session to the RocksDB state
-  * store provider (transformWithState refuses the default HDFS-backed
-  * one) and restores it after, so the rest of the suite keeps its
-  * provider.
+/** [[TwsGates]] certification: the quota gate against the batch
+  * greedy-prefix rule (same oracle as QuotaStreamSpec), the near-dup
+  * gate against the sequential-greedy replay on the shared
+  * NeardupStreamSpec fixture — at both one-batch and many-batch feeds,
+  * the near-dup gate driven as one `Trigger.AvailableNow` run per chunk
+  * against a shared checkpoint.
   */
 class TwsGatesSpec extends AnyFunSuite {
 
   private val spark = TestSpark.spark
   import spark.implicits._
-
-  private val ProviderKey = "spark.sql.streaming.stateStore.providerClass"
-  private val RocksDb =
-    "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
-
-  private def withRocksDb[T](body: => T): T = {
-    val prev = spark.conf.getOption(ProviderKey)
-    spark.conf.set(ProviderKey, RocksDb)
-    try body
-    finally prev match {
-      case Some(v) => spark.conf.set(ProviderKey, v)
-      case None => spark.conf.unset(ProviderKey)
-    }
-  }
 
   private val Budget = 300L
 
@@ -55,7 +38,7 @@ class TwsGatesSpec extends AnyFunSuite {
     }
 
   private def runQuota(chunks: Seq[Seq[QuotaDoc]], name: String)
-  : Map[Long, (Boolean, Long)] = withRocksDb {
+  : Map[Long, (Boolean, Long)] = {
     implicit val sqlCtx = spark.sqlContext
     val mem = MemoryStream[QuotaDoc]
     val q = TwsGates.tokenQuotaStreamTws(mem.toDS(), Budget)
@@ -81,17 +64,13 @@ class TwsGatesSpec extends AnyFunSuite {
 
   import NeardupStreamSpec.{Doc, feed, replay}
 
-  /** TimeMode.ProcessingTime keeps scheduling micro-batches to service
-    * TTL (TransformWithStateExec.shouldRunAnotherBatch is always true in
-    * that mode — observed: 692 batches for one 7-row addData), so
-    * `processAllAvailable` on a default trigger NEVER settles. The gate
-    * must be driven with Trigger.AvailableNow drains (or a
-    * processing-time trigger in production); each chunk below is one
-    * drain-and-stop run against a shared checkpoint, which also exercises
-    * TWS state restoration between runs.
+  /** Each chunk is one `Trigger.AvailableNow` drain-and-stop run against
+    * a shared checkpoint, so every chunk after the first restores the
+    * band claims (and their timers) from the checkpoint; NeardupStreamSpec
+    * drives the same gate as one live query.
     */
   private def runNeardup(chunks: Seq[Seq[Doc]], name: String)
-  : Map[Long, (Boolean, Int, Int)] = withRocksDb {
+  : Map[Long, (Boolean, Int, Int)] = {
     implicit val sqlCtx = spark.sqlContext
     val ckpt = java.nio.file.Files
       .createTempDirectory(s"tws_neardup_$name").toString
@@ -118,8 +97,8 @@ class TwsGatesSpec extends AnyFunSuite {
     val want = replay(feed, NeardupStreamSpec.bandKeys(spark, feed))
     assert(runNeardup(Seq(feed), "tws_neardup_one") == want)
     assert(runNeardup(feed.grouped(2).toSeq, "tws_neardup_chunks") == want)
-    // TTL long past the test horizon → claims live across batches: the
-    // near dup in the LAST chunk is still caught
+    // the 2-hour eviction horizon outlives the feed → claims live across
+    // batches: the near dup in the LAST chunk is still caught
     assert(!want(5L)._1)
   }
 }
