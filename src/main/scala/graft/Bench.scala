@@ -77,26 +77,40 @@ object Bench {
     }
   }
 
+  /** Host-speed yardstick: a fixed CPU-bound workload (hash + sum over a
+    * generated range, no I/O, no shuffle), in seconds. This box shows
+    * hour-scale CPU-steal episodes that inflate the whole suite 2-5x; the
+    * calibration number makes a slow TOTAL attributable — compare "cal"
+    * across rounds and divide. On a healthy pass it lands well under a
+    * second at local[32].
+    */
+  private[graft] def calibrate(spark: SparkSession): Double = {
+    import org.apache.spark.sql.functions.{sum, xxhash64, col, lit}
+    val t0 = System.nanoTime()
+    // mask to 32 bits before summing: 2e8 rows x 2^32 max ≈ 8.6e17 stays
+    // under Long.Max — an unmasked hash sum overflows under ANSI mode
+    spark.range(0L, 200000000L, 1L, 32)
+      .select(sum(xxhash64(col("id")).bitwiseAND(lit(0xFFFFFFFFL)))).collect()
+    (System.nanoTime() - t0) / 1e9
+  }
+
+  /** Runs one `SparkEntry.queries` key to the noop sink, which forces full
+    * evaluation of every column (a count() lets Catalyst prune the whole
+    * projection and under-reports the work).
+    */
+  private[graft] def runKey(spark: SparkSession, name: String,
+                            sfDir: String): Unit =
+    SparkEntry.queries(name)(spark, sfDir)
+      .write.format("noop").mode("overwrite").save()
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val spark = SparkSessions.localFromEnv()
     spark.sparkContext.setLogLevel("ERROR")
 
-    val suite = SparkEntry.queries.toSeq.sortBy(_._1)
-    // Host-speed yardstick: a fixed CPU-bound workload (hash + sum over a
-    // generated range, no I/O, no shuffle) timed with the same protocol as
-    // the queries. This box shows hour-scale CPU-steal episodes that
-    // inflate the whole suite 2-5x; the calibration number makes a slow
-    // TOTAL attributable — compare "cal" across rounds and divide. On a
-    // healthy pass it lands well under a second at local[32].
-    import org.apache.spark.sql.functions.{sum, xxhash64, col, lit}
+    val suite = SparkEntry.queries.keys.toSeq.sorted
     def calibrate(): Double = {
-      val t0 = System.nanoTime()
-      // mask to 32 bits before summing: 2e8 rows x 2^32 max ≈ 8.6e17 stays
-      // under Long.Max — an unmasked hash sum overflows under ANSI mode
-      spark.range(0L, 200000000L, 1L, 32)
-        .select(sum(xxhash64(col("id")).bitwiseAND(lit(0xFFFFFFFFL)))).collect()
-      val sec = (System.nanoTime() - t0) / 1e9
+      val sec = Bench.calibrate(spark)
       System.err.println(f"[bench] cal $sec%.2fs")
       sec
     }
@@ -117,13 +131,11 @@ object Bench {
         : (Map[String, Double], Seq[String], Vector[Double]) = {
       val failed = scala.collection.mutable.ListBuffer[String]()
       val probes = Vector.newBuilder[Double]
-      val times = suite.zipWithIndex.map { case ((name, fn), i) =>
+      val times = suite.zipWithIndex.map { case (name, i) =>
         if (probed && i > 0 && i % ProbeEvery == 0) probes += calibrate()
         val t0 = System.nanoTime()
-        // noop sink forces full evaluation of every column (a count() lets
-        // Catalyst prune the whole projection and under-reports the work).
         val ok =
-          try { fn(spark, sfDir).write.format("noop").mode("overwrite").save(); true }
+          try { runKey(spark, name, sfDir); true }
           catch { case e: Throwable =>
             System.err.println(s"[bench] $name failed: ${e.getMessage}")
             failed += name
@@ -226,7 +238,7 @@ object Bench {
     // to all its used-pass samples and list it in the ledger.
     val contendedKeys = scala.collection.mutable.SortedSet[String]()
     var contendedSamples = 0
-    val perQuery0 = suite.zipWithIndex.map { case ((name, _), i) =>
+    val perQuery0 = suite.zipWithIndex.map { case (name, i) =>
       val all = used.map(_.times(name))
       val clean = used.collect { case p if p.segClean(i, thr) => p.times(name) }
       val dirty = all.length - clean.length
@@ -256,13 +268,11 @@ object Bench {
     val respiked: Map[String, Double] =
       if (spiked.isEmpty) Map.empty
       else {
-        val byName = suite.toMap
         spiked.flatMap { name =>
           val cb = calibrate()
           val t0 = System.nanoTime()
-          val ok = try {
-            byName(name)(spark, sfDir).write.format("noop").mode("overwrite").save(); true
-          } catch { case _: Throwable => false }
+          val ok = try { runKey(spark, name, sfDir); true }
+            catch { case _: Throwable => false }
           val sec = (System.nanoTime() - t0) / 1e9
           val ca = calibrate()
           cals += cb; cals += ca
@@ -288,7 +298,7 @@ object Bench {
     // still yields an adjudicable per-key diff (r15: both records
     // self-flagged run_contended and the round's diff degenerated to a
     // uniform-shift assumption).
-    val perQueryNorm = suite.zipWithIndex.map { case ((name, _), i) =>
+    val perQueryNorm = suite.zipWithIndex.map { case (name, i) =>
       val passSamples = used.map(p => (p.times(name), p.segHeat(i)))
       val all = passSamples ++ respikeSamples.get(name)
       val (nm, h) = normMin(all, cal)

@@ -16,7 +16,8 @@ import org.apache.spark.sql.functions._
   * Every stateful op runs on the session's RocksDB state store.
   *
   * Usage: runMain graft.BenchStream [nBatches]; reads
-  * SPARK_GRAFT_SF_DIR (default sf0.01). One JSON line per op on stdout;
+  * SPARK_GRAFT_SF_DIR (default sf0.01) and SPARK_GRAFT_CPUS (default 4,
+  * as every main). One JSON line per op on stdout;
   * committed numbers live in STREAMBENCH.md.
   *
   * Checkpoints go to tmpfs (`/dev/shm`) with checksum files off: every
@@ -45,15 +46,8 @@ object BenchStream {
     // optional 2nd arg: comma-separated op-name subset (dev re-measure)
     val only: Option[Set[String]] =
       if (args.length > 1) Some(args(1).split(",").toSet) else None
-    // count of stateful streaming queries actually STARTED in this JVM —
-    // the guard input for the changelog-cadence op (see GRAFT_MIN_DELTAS
-    // below): Spark's state-store maintenance task is a process-wide
-    // singleton whose tick period is captured when the first stateful
-    // query starts, so "has anything run before me" is the question that
-    // decides whether a maintenanceInterval override takes effect at all
-    var queriesStarted = 0
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
-    val spark = SparkSessions.localFromEnv(defaultCpus = "32")
+    val spark = SparkSessions.localFromEnv()
     spark.sparkContext.setLogLevel("ERROR")
     spark.conf.set("spark.sql.shuffle.partitions", "8")
     spark.conf.set("spark.sql.streaming.checkpoint.fileChecksum.enabled", "false")
@@ -116,7 +110,6 @@ object BenchStream {
         .outputMode(mode)
         .option("checkpointLocation", s"$ckptRoot/$name")
       val q = sinkTo.fold(w.format("noop"))(f => w.foreachBatch(f)).start()
-      queriesStarted += 1
       val chunk = math.max(1, (rows.size + batches - 1) / batches)
       // per-chunk wall time is the actual canary: unbounded state growth
       // shows as batch_last pulling away from batch_median long before the
@@ -362,7 +355,6 @@ object BenchStream {
             .option("checkpointLocation", ckpt)
             .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
             .format("noop").start()
-          queriesStarted += 1
           q.awaitTermination()
           (System.nanoTime() - t0) / 1e9
         }
@@ -399,15 +391,6 @@ object BenchStream {
           gcRounds += 1
         }
         println(f"""{"op":"$opName","prime_rows":$cut,"tail_rows":${total - cut},"prime_sec":$primeSec%.3f,"state_ckpt_bytes":$stateBytes,"restore_batch_sec":$restoreSec%.3f,"heap_used_mb":$heapMb}""")
-        // dump a class histogram of the settled heap (self-attach via
-        // jcmd — external attach can't cross the sandbox pid namespace)
-        // when diagnosing what the settled heap figure is made of
-        sys.env.get("GRAFT_RESTART_HISTO").foreach { path =>
-          val pid = ProcessHandle.current().pid().toString
-          new ProcessBuilder("jcmd", pid, "GC.class_histogram")
-            .redirectOutput(new java.io.File(path)).start().waitFor()
-          System.err.println(s"[benchstream] histogram -> $path")
-        }
       }
     twsRestart("tws_restart_neardup")
     // the same prime/restart cycle with RocksDB CHANGELOG checkpointing:
@@ -421,48 +404,6 @@ object BenchStream {
       val prevCl = spark.conf.getOption(ClKey)
       spark.conf.set(ClKey, "true")
       twsRestart("tws_restart_changelog")
-      // the cadence dial the TwsGates policy documents, validated
-      // empirically: a tighter snapshot cadence bounds the changelog
-      // variant's restore replay (restore ≈ snapshot load + replay of
-      // the changelogs since the last UPLOADED snapshot). Snapshot
-      // uploads happen in the ASYNC maintenance thread, so the dial is
-      // two-knob: minDeltasForSnapshot sets how many changelogs make a
-      // snapshot due, and maintenanceInterval bounds how stale the
-      // upload can run — with the default 60s interval a sub-minute
-      // prime never snapshots at all and restore replays EVERY
-      // changelog, whatever minDeltas says (measured: minDeltas=4 alone
-      // changed nothing)
-      sys.env.get("GRAFT_MIN_DELTAS").foreach { n =>
-        // maintenanceInterval is read by a JVM-WIDE singleton: the
-        // state-store maintenance task captures its tick period when the
-        // FIRST stateful query of the process starts. If any stateful op
-        // ran earlier in this invocation, the 2s set below is a silent
-        // no-op (the task already ticks at the default 60s) and the
-        // cadence row would publish a measurement of nothing — so the op
-        // refuses to run unless it is the first stateful query, i.e.
-        // `only`-scoped in a fresh JVM (r15 ADVICE):
-        //   GRAFT_MIN_DELTAS=4 sbt "runMain graft.BenchStream 8 tws_restart_changelog_cadence4"
-        require(queriesStarted == 0,
-          s"GRAFT_MIN_DELTAS cadence run needs a fresh JVM: $queriesStarted " +
-            "stateful queries already started, so the maintenance task's " +
-            "period is pinned at their interval; re-run `only`-scoped to " +
-            s"tws_restart_changelog_cadence$n")
-        val MdKey = "spark.sql.streaming.stateStore.minDeltasForSnapshot"
-        val MiKey = "spark.sql.streaming.stateStore.maintenanceInterval"
-        val prevMd = spark.conf.getOption(MdKey)
-        val prevMi = spark.conf.getOption(MiKey)
-        spark.conf.set(MdKey, n)
-        spark.conf.set(MiKey, "2s")
-        twsRestart(s"tws_restart_changelog_cadence$n")
-        prevMd match {
-          case Some(v) => spark.conf.set(MdKey, v)
-          case None => spark.conf.unset(MdKey)
-        }
-        prevMi match {
-          case Some(v) => spark.conf.set(MiKey, v)
-          case None => spark.conf.unset(MiKey)
-        }
-      }
       prevCl match {
         case Some(v) => spark.conf.set(ClKey, v)
         case None => spark.conf.unset(ClKey)
@@ -586,11 +527,6 @@ object BenchStream {
         .option("checkpointLocation", s"$ckptRoot/ann_serve_stream")
         .foreachBatch((df: Dataset[org.apache.spark.sql.Row], _: Long) =>
           annSink(df)).start()
-      // every .start() site increments the counter (r16 ADVICE): the
-      // GRAFT_MIN_DELTAS fresh-JVM guard is only sound if NO earlier
-      // stateful query can have pinned the maintenance-task period —
-      // this op is stateless, but the guard must not depend on op order
-      queriesStarted += 1
       val t0 = System.nanoTime()
       try servQueries.grouped(chunk).foreach { c =>
         mem2.addData(c: _*); q2.processAllAvailable()

@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.SparkSession
 
 /** One place for the engine's local-session contract, used by every shipped
-  * main (Bench/Verify/Smoke/dev tools): shuffle partitions sized to cores,
+  * main (Bench/BenchStream/Verify/Smoke/Dev): shuffle partitions sized to cores,
   * UTC, the nanos-as-long flag the events table requires, the graft
   * extensions (operator lowering + SQL functions), and the RocksDB state
   * store the streaming ops need. Config drift between
@@ -25,9 +25,7 @@ object SparkSessions {
       // measured as the r2 join_left/join_salted "regression" (plans were
       // byte-identical to r1; the 36-query r1 suite mostly fit the cache).
       // A long-lived analytics session should size this to its working set.
-      // (env-overridable so cache-churn hypotheses are testable per run)
-      .config("spark.sql.codegen.cache.maxEntries",
-        sys.env.getOrElse("SPARK_GRAFT_CODEGEN_CACHE", "8000"))
+      .config("spark.sql.codegen.cache.maxEntries", "8000")
       // Shuffle/spill scratch on tmpfs when available: this harness's
       // virtual disk sustains ~8 MB/s synced writes (measured round 7),
       // so on /tmp the shuffle-heaviest queries time the disk, not the
@@ -49,6 +47,6 @@ object SparkSessions {
   }
 
   /** cpus from SPARK_GRAFT_CPUS, defaulting as the driver harness does. */
-  def localFromEnv(defaultCpus: String = "4"): SparkSession =
-    local(sys.env.getOrElse("SPARK_GRAFT_CPUS", defaultCpus))
+  def localFromEnv(): SparkSession =
+    local(sys.env.getOrElse("SPARK_GRAFT_CPUS", "4"))
 }

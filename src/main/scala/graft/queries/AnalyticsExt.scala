@@ -1239,7 +1239,7 @@ object AnalyticsExt {
     * the only unpartitioned window is the offsets prefix sum, one row per
     * PARTITION (cluster metadata, not data).
     *
-    * Cost shape (BenchOne, warm): FLAT across sf0.001→0.01→0.1
+    * Cost shape (`Dev one`, warm): FLAT across sf0.001→0.01→0.1
     * (1.20/1.08/1.16s) — the ~5-stage pipeline's scheduling floor, data
     * cost invisible at these SFs. The retired single-task ntile read
     * 0.21s at sf0.1 only because 1.5M rows sort trivially in one task —

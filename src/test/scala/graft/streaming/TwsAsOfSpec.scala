@@ -14,9 +14,8 @@ import org.scalatest.funsuite.AnyFunSuite
   * `AsOfJoin.*Within` operators on AsOfStreamSpec's seeded random frame
   * in all three modes, fed as ONE micro-batch (every left buffers until
   * the flush moves the watermark, then resolves through the timer path;
-  * AsOfStreamSpec feeds the same frame in 60-row batches), plus the
-  * engine-level late-data contract and a checkpoint stop/restart cycle
-  * on restored TWS state.
+  * AsOfStreamSpec feeds the same frame in 60-row batches and covers the
+  * late-data contract and the stop/restart cycle).
   */
 class TwsAsOfSpec extends AnyFunSuite {
 
@@ -114,74 +113,5 @@ class TwsAsOfSpec extends AnyFunSuite {
       assert(want.values.exists(_._1.isDefined) &&
         want.values.exists(_._1.isEmpty), s"$mode one-sided")
     }
-  }
-
-  test("tws engine drops late rows: a late right never reopens a " +
-    "resolved left, a late left emits nothing") {
-    implicit val sqlCtx = spark.sqlContext
-    val mem = MemoryStream[AsOfEvent]
-    val q = AsOfStream.nearestWithinTws(mem.toDS(), HorizonUs, "5 seconds")
-      .writeStream.format("memory").queryName("tws_asof_late")
-      .outputMode("append").start()
-    try {
-      mem.addData(ev(1L, 1000, isLeft = true, 10L),
-        ev(1L, 1100, isLeft = false, 20L, value = 7.0))
-      q.processAllAvailable()
-      mem.addData(ev(9L, 1700, isLeft = false, 90L))
-      q.processAllAvailable()
-      mem.addData(ev(9L, 1710, isLeft = false, 91L))
-      q.processAllAvailable()
-      def rows() = spark.table("tws_asof_late").as[AsOfMatch]
-        .collect().filter(_.user_id == 1L).toSeq
-      val first = rows()
-      assert(first.map(m => (m.event_id, m.asof_event_id, m.asof_side)) ==
-        Seq((10L, Some(20L), Some("forward"))))
-      mem.addData(ev(1L, 1050, isLeft = false, 21L, value = 9.0))
-      q.processAllAvailable()
-      assert(rows() == first, "late right reopened a resolved left")
-      mem.addData(ev(1L, 900, isLeft = true, 11L))
-      q.processAllAvailable()
-      assert(rows() == first,
-        s"late left produced output: ${rows().filter(_.event_id == 11L)}")
-    } finally q.stop()
-  }
-
-  test("tws buffered state survives a stop/restart cycle through the " +
-    "checkpoint") {
-    implicit val sqlCtx = spark.sqlContext
-    val ckpt = java.nio.file.Files
-      .createTempDirectory("graft_tws_asof_ckpt").toString
-    val results = java.util.Collections.synchronizedList(
-      new java.util.ArrayList[AsOfMatch]())
-    val mem = MemoryStream[AsOfEvent]
-    def start() = AsOfStream
-      .nearestWithinTws(mem.toDS(), HorizonUs, "5 seconds")
-      .writeStream
-      .outputMode("append")
-      .option("checkpointLocation", ckpt)
-      .foreachBatch { (b: org.apache.spark.sql.Dataset[AsOfMatch],
-                       _: Long) => b.collect().foreach(results.add) }
-      .start()
-    val q1 = start()
-    try {
-      mem.addData(ev(1L, 1000, isLeft = true, 10L),
-        ev(1L, 800, isLeft = false, 20L, value = 5.0),
-        ev(1L, 1100, isLeft = false, 21L, value = 7.0))
-      q1.processAllAvailable()
-      assert(results.isEmpty, "emitted before the horizon closed")
-    } finally q1.stop()
-    val q2 = start()
-    try {
-      mem.addData(ev(9L, 3000, isLeft = false, 90L))
-      q2.processAllAvailable()
-      mem.addData(ev(9L, 3010, isLeft = false, 91L))
-      q2.processAllAvailable()
-      val got = results.toArray(Array.empty[AsOfMatch])
-        .filter(_.user_id == 1L).toSeq
-      assert(got.map(m =>
-        (m.event_id, m.asof_event_id, m.asof_side)) ==
-        Seq((10L, Some(21L), Some("forward"))),
-        s"state did not survive the restart: $got")
-    } finally q2.stop()
   }
 }
