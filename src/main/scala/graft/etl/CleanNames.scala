@@ -31,49 +31,28 @@ object CleanNames {
 
   val Vowels = "aoueiyаяєоуиіїе"
 
-  /** Whole-string blanking test: entirely vowels or entirely non-vowels
-    * (each class includes the empty string, so `""` and `"-"` both blank).
+  /** Blank test, anchored at position 0: the value does not start with
+    * whitespace (else the reference's `\s` branch wins position 0 first)
+    * and is entirely vowels or entirely non-vowels (each class includes
+    * the empty string, so `""` and `"-"` both blank).
     */
-  private val blankPattern = s"^([$Vowels]*|[^$Vowels]*)$$"
-
-  /** Regexp-chain HTML-entity unescape covering the apostrophe family plus
-    * the five XML named entities — the oracle-parity subset (DuckDB can
-    * mirror it; it covers everything in the reference data, which only
-    * carries `&#039;`).
-    */
-  def htmlUnescape(c: Column): Column = {
-    // Decimal numeric entities for the apostrophe family seen in the wild.
-    val e1 = regexp_replace(c, "&#0*39;", "'")
-    val e2 = regexp_replace(e1, "&#x0*27;", "'")
-    val e3 = regexp_replace(e2, "&quot;", "\"")
-    val e4 = regexp_replace(e3, "&lt;", "<")
-    val e5 = regexp_replace(e4, "&gt;", ">")
-    val e6 = regexp_replace(e5, "&apos;", "'")
-    regexp_replace(e6, "&amp;", "&")
-  }
+  private val blankPattern = s"(?U)^(?!\\s)([$Vowels]*|[^$Vowels]*)$$"
 
   /** Full pipeline over one column. Null in → null out (pandas would throw
     * on NaN; our data has none, and null-passthrough is the safer engine
     * default).
     *
-    * Entity decoding composes the regexp chain (`&apos;` + the apostrophe
-    * numerics, which commons-text's HTML4 table lacks) with the native
-    * [[graft.functions.HtmlUnescape]] expression (full named/numeric
-    * coverage ≈ Python `html.unescape` — without it, an undecoded numeric
-    * entity like `&#8217;` would have its digits destroyed by the
-    * digit-strip step). Regexes carry `(?U)` so `\d`/`\s` are
-    * Unicode-aware like Python's, not ASCII-only like Java's default.
+    * Entity decoding is the native [[graft.functions.HtmlUnescape]]
+    * expression: one pass, like Python's `html.unescape`, so a decoded `&`
+    * never starts a second entity, and a numeric entity like `&#8217;` is
+    * decoded before the digit-strip step could destroy its digits.
+    * Regexes carry `(?U)` so `\d`/`\s` are Unicode-aware like Python's,
+    * not ASCII-only like Java's default.
     */
   def clean(c: Column): Column = {
-    val unescaped = graft.functions.StringExpressions.htmlUnescape(htmlUnescape(c))
-    val lowered   = lower(unescaped)
-    val noDigits  = regexp_replace(lowered, "(?U)\\d", "")
-    when(
-      noDigits.rlike("(?U)^\\s"), regexp_replace(noDigits, "(?U)\\s", "")
-    ).when(
-      noDigits.rlike(blankPattern), lit("")
-    ).otherwise(
-      regexp_replace(noDigits, "(?U)\\s", "")
-    )
+    val unescaped = graft.functions.StringExpressions.htmlUnescape(c)
+    val noDigits  = regexp_replace(lower(unescaped), "(?U)\\d", "")
+    when(noDigits.rlike(blankPattern), lit(""))
+      .otherwise(regexp_replace(noDigits, "(?U)\\s", ""))
   }
 }

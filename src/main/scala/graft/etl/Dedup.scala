@@ -55,39 +55,4 @@ object Dedup {
       df.withColumn("_file", input_file_name())
         .withColumn("_seq", monotonically_increasing_id()),
       keys, Seq(col("_file"), col("_seq"))).drop("_file", "_seq")
-
-  /** Exact duplicate removal where any survivor is acceptable — pure
-    * `dropDuplicates`, which Catalyst plans as a hash aggregate with
-    * map-side partial combine (cheapest exact dedup at scale).
-    */
-  def dropDupes(df: DataFrame, keys: Seq[String]): DataFrame =
-    df.dropDuplicates(keys)
-
-  /** [[keepFirst]] expressed through the engine's own logical operator
-    * ([[graft.plans.DedupKeepFirst]]): the plan declares intent and the
-    * injected analyzer rule lowers it to the window+filter form. Requires
-    * `spark.sql.extensions=graft.plans.GraftExtensions`.
-    */
-  def keepFirstDeclarative(df: DataFrame, keys: Seq[String],
-                           orderCols: Seq[String]): DataFrame = {
-    import org.apache.spark.sql.GraftColumnBridge
-    import org.apache.spark.sql.catalyst.expressions.{Ascending, SortOrder}
-    val analyzed = df.queryExecution.analyzed
-    // resolve by name against the child plan so the node carries bound
-    // AttributeReferences, not unresolved column nodes
-    def attr(name: String) = analyzed.output
-      .find(a => df.sparkSession.sessionState.analyzer.resolver(a.name, name))
-      .getOrElse(throw new IllegalArgumentException(s"no such column: $name"))
-    val node = graft.plans.DedupKeepFirst(
-      keys.map(attr),
-      orderCols.map(c => SortOrder(attr(c), Ascending)),
-      analyzed)
-    val viaPlan = GraftColumnBridge.ofRows(df.sparkSession, node)
-    // a session built without GraftExtensions never lowers the node (it
-    // would reach execution with no physical strategy) — verify the rule
-    // fired; fall back to the direct window form otherwise
-    val lowered = viaPlan.queryExecution.analyzed
-      .collectFirst { case d: graft.plans.DedupKeepFirst => d }.isEmpty
-    if (lowered) viaPlan else keepFirst(df, keys, orderCols.map(col))
-  }
 }

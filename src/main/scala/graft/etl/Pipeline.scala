@@ -4,7 +4,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** The reference's end-to-end `process()` pipeline
-  * (reference `etl/orders_etl.py:70-88`), as one lazy Spark DAG:
+  * (reference `etl/orders_etl.py:70-88`), as one lazy Spark DAG that
+  * [[OrdersEtl]] composes:
   *
   *   scan+project → normalize+cast → keep-first dedup → clean name columns
   *   → cast products → dedup products → LEFT join → (sink).
@@ -42,10 +43,4 @@ object Pipeline {
     */
   def joinFrames(orders: DataFrame, products: DataFrame): DataFrame =
     orders.join(products, Seq("product_id"), "left")
-
-  /** Full `process()`: the denormalized output table. */
-  def process(spark: SparkSession, ordersCsvPath: String,
-              productsCsvPath: String): DataFrame =
-    joinFrames(processedOrders(spark, ordersCsvPath),
-      processedProducts(spark, productsCsvPath))
 }

@@ -33,34 +33,6 @@ object Similarity {
         + (lit(1.0) - abs(tPrice - price) / greatest(tPrice, price)) * 0.3,
       5)
 
-  /** Tier-3 formulation lives in [[graft.functions.SimilarityScore]]: a
-    * native 6-ary codegen expression, bit-identical to [[scoreExpr]]
-    * (spec-enforced), SQL-registered as `similarity_score_native`.
-    */
-
-  /** Tier-2 formulation (SURVEY §2.8): the same scorer as a Scala UDF,
-    * mirroring the reference's row-at-a-time shape 1:1. Black-box to the
-    * optimizer — the column-expression tier is preferred in plans; this
-    * exists for the SQL surface and as the semantic cross-check.
-    */
-  val scoreFn: (Double, String, String, Double, String, String) => Double =
-    (price, group, mfr, tPrice, tGroup, tMfr) => {
-      var score = 0.0
-      // null attributes never match (pandas NaN == NaN is False; the
-      // column-expression tier's null-safe `when` agrees) — bare Scala ==
-      // would count null==null as a match
-      if (tGroup != null && tGroup == group) score += 0.5
-      if (tMfr != null && tMfr == mfr) score += 0.2
-      score += (1.0 - math.abs(tPrice - price) / math.max(tPrice, price)) * 0.3
-      BigDecimal(score)
-        .setScale(5, BigDecimal.RoundingMode.HALF_EVEN).doubleValue
-    }
-
-  /** Register the UDF tier as `similarity_score` for `spark.sql`. */
-  def registerUdf(spark: org.apache.spark.sql.SparkSession): Unit =
-    spark.udf.register("similarity_score",
-      org.apache.spark.sql.functions.udf(scoreFn))
-
   /** `find_similar_products`: score `candidateIds` against `targetId` over a
     * products table with columns (product_id, price, goods_group,
     * manufacturer). Returns (product_id, score).

@@ -1,6 +1,6 @@
 package graft.plans
 
-import graft.functions.{BloomFilterBuildAgg, BloomMightContain, CdcChunks, FloatArrayDot, HashingTrick, HeavyHittersSketch, HtmlUnescape, JaroWinkler, KllQuantilesAgg, RollingHash, SimilarityScore, TopKStructs, UnicodeNfc, WinnowFingerprints}
+import graft.functions.{BloomFilterBuildAgg, BloomMightContain, CdcChunks, FloatArrayDot, HashingTrick, HeavyHittersSketch, HtmlUnescape, JaroWinkler, KllQuantilesAgg, RollingHash, TopKStructs, UnicodeNfc, WinnowFingerprints}
 import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{ExpressionInfo, Literal}
@@ -10,14 +10,15 @@ import org.apache.spark.sql.types.IntegerType
   * `spark.sql.extensions=graft.plans.GraftExtensions` (or
   * `SparkSession.builder.withExtensions`). Registers:
   *
-  *   - the [[DedupKeepFirst]] lowering rule (custom logical operator),
-  *   - `float_array_dot(a, b)` — native embedding dot product, SQL surface,
-  *   - `html_unescape(s)` — full HTML-entity unescape, SQL surface.
+  *   - the [[RewriteLateralAsOf]] and [[DistributeGlobalRank]] optimizer
+  *     rules,
+  *   - the engine's native expressions as SQL functions (`float_array_dot`,
+  *     `html_unescape`, `jaro_winkler`, `graft_top_k`, ... — the
+  *     `sql_function_surface` query key calls each one from SQL text).
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
 
   override def apply(ext: SparkSessionExtensions): Unit = {
-    ext.injectResolutionRule(_ => ResolveDedupKeepFirst)
     // as-of BEFORE the rank rule (injection order = in-batch run order):
     // the lateral idiom's decorrelated form contains a top-k-filtered
     // PARTITIONED window, which the rank rule already leaves alone, but
@@ -81,13 +82,6 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
         }
         HeavyHittersSketch(children(0), k)
       }))
-
-    ext.injectFunction((
-      FunctionIdentifier("similarity_score_native"),
-      new ExpressionInfo(classOf[SimilarityScore].getName,
-        "similarity_score_native"),
-      (children: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) =>
-        SimilarityScore(children)))
 
     ext.injectFunction((
       FunctionIdentifier("unicode_nfc"),

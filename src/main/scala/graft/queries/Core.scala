@@ -83,13 +83,11 @@ object Core {
   }
 
   /** §2.4 keep-first dedup with a real ordering column (deterministic at any
-    * partitioning — SURVEY §7.4 risk 3). Goes through the engine's own
-    * `DedupKeepFirst` logical operator, lowered by the injected analyzer
-    * rule to the window+filter form.
+    * partitioning — SURVEY §7.4 risk 3).
     */
   def dedupKeepFirst(spark: SparkSession, dir: String): DataFrame =
-    Dedup.keepFirstDeclarative(Readers.events(spark, dir),
-        Seq("user_id", "event_type"), Seq("ts", "event_id"))
+    Dedup.keepFirst(Readers.events(spark, dir),
+        Seq("user_id", "event_type"), Seq(col("ts"), col("event_id")))
       .select("user_id", "event_type", "event_id", "ts", "value")
       .orderBy("user_id", "event_type")
 
@@ -197,11 +195,9 @@ object Core {
     * text — scalars inline, aggregates over VALUES — with the computed
     * value pinned against a literal oracle. A registration regression
     * (renamed function, changed arity, broken builder) or a semantic
-    * drift in any native expression fails this one key. unicode_nfc and
-    * similarity_score_native are certified by their own keys
-    * (`unicode_nfc`, `similarity_scores`) — non-ASCII literals don't
-    * survive source-encoding round-trips reliably, and the scorer needs
-    * the reference's full argument tuple.
+    * drift in any native expression fails this one key. unicode_nfc is
+    * certified by its own key (`unicode_nfc`) — non-ASCII literals don't
+    * survive source-encoding round-trips reliably.
     */
   def sqlFunctionSurface(spark: SparkSession, dir: String): DataFrame =
     spark.sql(

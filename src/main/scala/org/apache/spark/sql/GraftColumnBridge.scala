@@ -31,8 +31,8 @@ object GraftColumnBridge {
   def isSortWrapped(c: Column): Boolean =
     c.node.isInstanceOf[internal.SortOrder]
 
-  /** Build a DataFrame over a custom logical plan (e.g. graft's
-    * DedupKeepFirst node) in the active classic session.
+  /** Build a DataFrame over a logical plan (e.g. a subtree an optimizer
+    * rule re-plans through the DataFrame API) in the active classic session.
     */
   def ofRows(spark: SparkSession,
              plan: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan)

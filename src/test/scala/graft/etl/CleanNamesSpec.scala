@@ -59,6 +59,14 @@ class CleanNamesSpec extends AnyFunSuite {
     assert(cleanAll(Seq("жан&#8217;на")) == Seq("жан’на"))
   }
 
+  test("entities decode in one pass, like Python html.unescape") {
+    // expectations from python3 html.unescape + the reference regex:
+    // a decoded `&` never starts a second entity, `;` is optional after a
+    // numeric entity, and `&apos;` is decoded
+    assert(cleanAll(Seq("о&amp;#039;т", "o&#39neil", "д&apos;артаньян", "&amp;lt;")) ==
+      Seq("о&#;т", "o'neil", "д'артаньян", ""))
+  }
+
   test("Unicode whitespace and digits are stripped like Python's \\s and \\d") {
     // NBSP ( ) is \s in Python but not in default Java regex
     assert(cleanAll(Seq("оль га", "кіт١")) == Seq("ольга", "кіт"))

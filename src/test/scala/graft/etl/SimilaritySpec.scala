@@ -34,20 +34,32 @@ class SimilaritySpec extends AnyFunSuite {
     assert(got == expected)
   }
 
-  test("tier-2 UDF (SQL surface) reproduces the same goldens") {
-    Similarity.registerUdf(spark)
-    products.createOrReplaceTempView("sim_products")
-    val got = spark.sql(
-      """SELECT c.product_id,
-        |  similarity_score(c.price, c.goods_group, c.manufacturer,
-        |                   t.price, t.goods_group, t.manufacturer) AS score
-        |FROM sim_products c, (SELECT * FROM sim_products WHERE product_id = 516423) t
-      """.stripMargin).as[(Long, Double)].collect().toMap
-    val expected = Map(
-      536469L -> 0.08772, 296597L -> 0.9726, 385613L -> 0.4726,
-      516423L -> 1.0, 516425L -> 0.91973, 427227L -> 0.6997,
-      439541L -> 0.58111, 528462L -> 0.8)
-    assert(got == expected)
+  private def scores(rows: Seq[(Option[Double], Option[String], Option[String],
+      Option[Double], Option[String], Option[String])]): Seq[Option[Double]] =
+    rows.toDF("price", "group", "mfr", "t_price", "t_group", "t_mfr")
+      .select(Similarity.scoreExpr($"price", $"group", $"mfr",
+        $"t_price", $"t_group", $"t_mfr"))
+      .as[Option[Double]].collect().toSeq
+
+  test("a null group or manufacturer on either side adds 0") {
+    val (p, g, m) = (Some(10.0), Some("g"), Some("m"))
+    val got = scores(Seq(
+      (p, g, m, p, g, m),       // everything matches: 0.5 + 0.2 + 0.3
+      (p, None, m, p, g, m),    // null candidate group
+      (p, g, m, p, None, m),    // null target group
+      (p, g, None, p, g, m),    // null candidate manufacturer
+      (p, g, m, p, g, None),    // null target manufacturer
+      (p, None, None, p, None, None))) // null never equals null
+    assert(got == Seq(Some(1.0), Some(0.5), Some(0.5), Some(0.8), Some(0.8),
+      Some(0.3)))
+  }
+
+  test("a null price or t_price gives a null score") {
+    val (g, m) = (Some("g"), Some("m"))
+    val got = scores(Seq(
+      (None, g, m, Some(10.0), g, m),
+      (Some(10.0), g, m, None, g, m)))
+    assert(got == Seq(None, None))
   }
 
   test("score bounds: 0 < s <= 1 for positive prices") {

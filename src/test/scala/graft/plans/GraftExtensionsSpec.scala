@@ -1,36 +1,13 @@
 package graft.plans
 
 import graft.TestSpark
-import graft.etl.Dedup
-import org.apache.spark.sql.functions.col
 import org.scalatest.funsuite.AnyFunSuite
 
-/** The custom logical operator + injected rule and the SQL-surface
-  * functions registered by GraftExtensions.
-  */
+/** The SQL-surface functions registered by GraftExtensions. */
 class GraftExtensionsSpec extends AnyFunSuite {
 
   private val spark = TestSpark.spark
   import spark.implicits._
-
-  private val df = Seq(
-    (1L, "a", 10L, "first"), (1L, "a", 20L, "late"),
-    (2L, "b", 5L, "only"), (2L, "a", 9L, "x"), (2L, "a", 1L, "early")
-  ).toDF("k1", "k2", "seq", "tag")
-
-  test("DedupKeepFirst logical node lowers to window+filter and matches keepFirst") {
-    val declarative = Dedup.keepFirstDeclarative(df, Seq("k1", "k2"), Seq("seq"))
-    val direct = Dedup.keepFirst(df, Seq("k1", "k2"), Seq(col("seq")))
-    assert(declarative.columns.toSeq == df.columns.toSeq)
-    assert(declarative.collect().map(_.toSeq).toSet ==
-      direct.collect().map(_.toSeq).toSet)
-    // the custom node must be gone from the analyzed plan
-    val analyzed = declarative.queryExecution.analyzed
-    assert(!analyzed.collect { case d: DedupKeepFirst => d }.exists(_ => true))
-    // and the physical plan is window-based (no custom physical operator)
-    val phys = declarative.queryExecution.executedPlan.toString
-    assert(phys.contains("Window") || phys.contains("WindowGroupLimit"))
-  }
 
   test("float_array_dot is callable from SQL") {
     val r = spark.sql(

@@ -16,9 +16,8 @@ import java.util.concurrent.atomic.AtomicInteger
   *
   * Exceptions are enumerated, not discovered: ops whose CONSTRUCTION is an
   * iterative driver loop with a convergence probe (pointer-jumping
-  * connected components short-circuits on `isEmpty`), and the
-  * reference-parity scorer whose ≤8-row collect mirrors the reference's
-  * in-driver dict (reference etl/orders_etl.py:112-115).
+  * connected components short-circuits on `isEmpty`), and the pinning or
+  * writing ops listed below.
   */
 class LazyConstructionSpec extends AnyFunSuite {
 
@@ -31,7 +30,6 @@ class LazyConstructionSpec extends AnyFunSuite {
     "dedup_pipeline", // composes the cluster pass
     "pretrain_pipeline", // stage survivor sets checkpointed + CC stage
     "entity_resolve", // clustering stage is dedup_clusters
-    "similarity_scores", // reference-parity ≤8-row driver dict
     "bucketed_join", // writes the bucketed tables it demonstrates
     "ann_ivf_pruned", // writes the centroid-partitioned IVF index (memoized)
     "jsonl_roundtrip", // writes the JSONL files it quarantine-reads
