@@ -1,16 +1,24 @@
 package graft.etl
 
 import graft.TestSpark
+import org.apache.spark.ListenerBusDrain
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.scalatest.funsuite.AnyFunSuite
-import java.nio.file.{Files, Paths}
+
+import java.nio.charset.StandardCharsets.UTF_8
+import java.nio.file.{Files, Path, Paths}
+import java.util.concurrent.atomic.AtomicInteger
 
 /** The OrdersEtl facade end-to-end: the exact call sequence of the
   * reference's `run.py` (process → write → find_similar_products with its
-  * real target/candidates, reference `etl/run.py:3-16`).
+  * real target/candidates, reference `etl/run.py:3-16`), then the lookup
+  * contract and the job shape of every entry point on small CSVs written
+  * to a temp dir.
   */
 class OrdersEtlSpec extends AnyFunSuite {
 
   private val spark = TestSpark.spark
+  import spark.implicits._
 
   private val ordersCsv = "/root/reference/input_data/orders_s.csv"
   private val productsCsv = "/root/reference/input_data/products_s.csv"
@@ -37,5 +45,117 @@ class OrdersEtlSpec extends AnyFunSuite {
     intercept[IllegalArgumentException] {
       etl.findSimilarProducts(-1L, Seq(516423L))
     }
+  }
+
+  // SimilaritySpec's eight golden products, then a second 516425 row whose
+  // price keep-first must discard, then a product without a price.
+  private val productsRows = Seq(
+    "product_id,price,goods_group,manufacturer",
+    "536469,749.0,Для активного відпочинку,Bugs",
+    "296597,199.0,Дитячі машинки,CARS",
+    "385613,199.0,Ігрові фігурки,CARS",
+    "516423,219.0,Дитячі машинки,CARS",
+    "516425,299.0,Дитячі машинки,CARS",
+    "427227,329.0,Дитячі машинки,LENA",
+    "439541,810.0,Дитячі машинки,LENA",
+    "528462,219.0,Дитячі машинки,LENA",
+    "516425,999.0,Дитячі машинки,CARS",
+    "700001,,Дитячі машинки,CARS")
+
+  private val ordersRows = Seq(
+    ",order_source_id,order_created_datetime,customer_id,status,sum,quantity," +
+      "name,surname,patronymic,product_id",
+    "0,1001,2023-01-01 10:00:00,1,Paid,\"1300,65\",1,Іван,Петренко,Іванович,516423",
+    "1,1002,2023-01-02 11:00:00,2,Paid,199.0,2,Anna,Smith,,296597c",
+    "2,1003,2023-01-03 12:00:00,3,Waiting,50.5,1,Олена,Коваль,Петрівна,123")
+
+  private val golden = Map(
+    536469L -> 0.08772, 296597L -> 0.9726, 385613L -> 0.4726,
+    516423L -> 1.0, 516425L -> 0.91973, 427227L -> 0.6997,
+    439541L -> 0.58111, 528462L -> 0.8)
+
+  private def write(dir: Path, name: String, lines: Seq[String]): String = {
+    val p = dir.resolve(name)
+    Files.write(p, lines.mkString("", "\n", "\n").getBytes(UTF_8))
+    p.toString
+  }
+
+  private def newEtl(): OrdersEtl = {
+    val dir = Files.createTempDirectory("graft-etl-facade")
+    new OrdersEtl(spark, write(dir, "orders.csv", ordersRows),
+      write(dir, "products.csv", productsRows),
+      dir.resolve("warehouse").toString, "orders.orders_denormalized")
+  }
+
+  test("lookup: golden scores, keep-first price, target as candidate, unknown ids") {
+    val etl = newEtl()
+    // 516425's first row (299.0) is scored, not its later 999.0 duplicate
+    assert(etl.findSimilarProducts(516423L, golden.keys.toSeq) == golden)
+    // the target among the candidates scores 1.0; unknown ids are dropped
+    assert(etl.findSimilarProducts(516423L, Seq(516423L, 1L, 2L)) == Map(516423L -> 1.0))
+    assert(etl.findSimilarProducts(516423L, Seq.empty).isEmpty)
+  }
+
+  test("lookup matches Similarity.findSimilar over processedProducts") {
+    val etl = newEtl()
+    val ids = golden.keys.toSeq
+    val lookups = Seq(
+      516423L -> ids,
+      536469L -> (ids ++ Seq(1L, 2L, 3L, 4L, 5L)), // > 10 ids: planned as InSet
+      427227L -> Seq(439541L, 528462L, 9L),
+      516425L -> Seq(516425L, 296597L))
+    lookups.foreach { case (target, cands) =>
+      val expected = Similarity.findSimilar(etl.processedProducts, target, cands)
+        .as[(Long, Double)].collect().toMap
+      assert(etl.findSimilarProducts(target, cands) == expected, s"target $target")
+    }
+  }
+
+  test("an absent target throws, on the first lookup and once the pin exists") {
+    val etl = newEtl()
+    val first = intercept[IllegalArgumentException](etl.findSimilarProducts(-1L, Seq(516423L)))
+    assert(first.getMessage == "requirement failed: target product -1 not found")
+    assert(etl.findSimilarProducts(516423L, Seq(296597L)) == Map(296597L -> 0.9726))
+    intercept[IllegalArgumentException](etl.findSimilarProducts(42L, golden.keys.toSeq))
+  }
+
+  test("a null price on the candidate or the target scores NaN") {
+    val etl = newEtl()
+    val cand = etl.findSimilarProducts(516423L, Seq(700001L, 296597L))
+    assert(cand(700001L).isNaN && cand(296597L) == 0.9726)
+    val target = etl.findSimilarProducts(700001L, Seq(516423L, 700001L))
+    assert(target.size == 2 && target.values.forall(_.isNaN))
+  }
+
+  test("job shape: construction is lazy, lookups leave write() alone, one job per lookup") {
+    val jobs = new AtomicInteger(0)
+    val listener = new SparkListener {
+      override def onJobStart(jobStart: SparkListenerJobStart): Unit =
+        jobs.incrementAndGet()
+    }
+    def jobsOf(body: => Unit): Int = {
+      ListenerBusDrain(spark.sparkContext)
+      val before = jobs.get()
+      body
+      ListenerBusDrain(spark.sparkContext)
+      jobs.get() - before
+    }
+    val cands = golden.keys.toSeq ++ Seq(1L, 2L, 3L)
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      lazy val plain = newEtl()
+      assert(jobsOf(plain.process()) == 0)
+      val writeAlone = jobsOf(plain.write())
+      assert(writeAlone > 0)
+
+      val looked = newEtl()
+      assert(jobsOf(looked.findSimilarProducts(516423L, cands)) > 0)
+      assert(jobsOf(looked.write()) == writeAlone)
+      (1 to 3).foreach { i =>
+        assert(jobsOf(looked.findSimilarProducts(516423L, cands.drop(i))) == 1)
+      }
+      assert(jobsOf(intercept[IllegalArgumentException](
+        looked.findSimilarProducts(-1L, cands))) == 1)
+    } finally spark.sparkContext.removeSparkListener(listener)
   }
 }
