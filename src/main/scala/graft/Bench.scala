@@ -7,6 +7,14 @@ import org.apache.spark.sql.SparkSession
   * A warmup pass runs the whole suite once first so the recorded numbers are
   * steady-state engine throughput (JIT, codegen cache, file-footer cache)
   * rather than JVM startup — the same protocol any engine benchmark uses.
+  *
+  * Per key it publishes only what was measured: the min and max over the
+  * clean samples (`queries_min_max` in BENCH_DETAIL.json), with the
+  * contention ledger beside them. There is no contention-normalized
+  * estimate: dividing each sample by its segment's calibration heat was
+  * measured over 226 unchanged keys at a median error of -57 % against a
+  * clean run, where the contended raw min was off by +10.7 %
+  * (OPTIMIZATION_r17.md §2).
   */
 object Bench {
 
@@ -34,47 +42,6 @@ object Bench {
       else if (sorted.length % 2 == 1) sorted(sorted.length / 2)
       else (sorted(sorted.length / 2 - 1) + sorted(sorted.length / 2)) / 2
     (median, median > 1.3 * floor)
-  }
-
-  /** Per-key contention normalization (r15 lesson: BOTH r15 records
-    * self-flagged `run_contended`, so the round's per-key diff was
-    * adjudicable only through a hand-assumed uniform shift). Each
-    * sample arrives as (observed seconds, segment heat), where heat is
-    * the mean of the two calibration readings bracketing the sample's
-    * segment — the run's host-speed estimate AT THE TIME the key ran.
-    * The published value is the minimum of `t * floor / heat` across
-    * samples: what the key would have cost had its segment run at the
-    * run's own calibration floor. Returns that normalized min plus the
-    * heat of the chosen sample, so a judge can re-base onto ANY
-    * reference floor (`t_at_F = norm * F / floor`) — cross-run diffs no
-    * longer need the uniform-shift assumption, key by key. Normalized
-    * values are estimates for adjudication (contention scales a query
-    * and the calibration workload alike only to first order); the raw
-    * min/max remain the record of what was measured.
-    *
-    * VALIDATED r17 (first cal-clean run since r13 vs the same round's
-    * contended run, 226 code-untouched keys — OPTIMIZATION_r17.md §2):
-    * the first-order assumption does NOT hold on this host. The
-    * calibration probe saturates all cores and feels CPU steal ~fully,
-    * while a typical short-stage query read only ~10% median inflation
-    * on a run whose probes sat 2–4× hot — so dividing by segment heat
-    * OVER-corrects (norms landed median 57% below the clean run's raw
-    * mins), and min-over-normalized-samples picks the hottest (most
-    * over-divided) sample by construction. Treat `queries_norm` as a
-    * LOWER bound and the raw min as an UPPER bound; on a cal-clean run
-    * they coincide and the raw min is the record. The published entry
-    * carries [norm, heat_at_min, n_samples, heat_min, heat_max] so a
-    * judge can see how hot the chosen sample was and how many samples
-    * backed it.
-    */
-  private[graft] def normMin(samples: Seq[(Double, Double)], floor: Double)
-  : (Double, Double) = {
-    val valid = samples.filter { case (t, h) => t >= 0 && h > 0 }
-    if (valid.isEmpty) (-1.0, -1.0)
-    else {
-      val (t, h) = valid.minBy { case (t, h) => t / h }
-      (t * floor / h, h)
-    }
   }
 
   /** Host-speed yardstick: a fixed CPU-bound workload (hash + sum over a
@@ -190,14 +157,6 @@ object Bench {
         val hi = if (s >= probes.length) calAfter else probes(s)
         lo <= thr && hi <= thr
       }
-      // the segment's host-speed point estimate for [[normMin]]: the
-      // mean of the same two bounds segClean gates on
-      def segHeat(i: Int): Double = {
-        val s = i / ProbeEvery
-        val lo = if (s == 0) calBefore else probes(s - 1)
-        val hi = if (s >= probes.length) calAfter else probes(s)
-        (lo + hi) / 2
-      }
     }
     val cals = scala.collection.mutable.ListBuffer[Double]()
     val passes = scala.collection.mutable.ListBuffer[Pass]()
@@ -257,11 +216,6 @@ object Bench {
     // second look. The max keeps the burst — it happened — but is no
     // longer the only evidence.
     val respikes = scala.collection.mutable.SortedMap[String, Double]()
-    // every completed respike rep is a (seconds, heat) sample for the
-    // normalized mins — a HOT respike is useless for the raw min (its
-    // brackets flunk thr) but perfectly usable after normalization,
-    // which is the whole point of carrying the heat
-    val respikeSamples = scala.collection.mutable.Map[String, (Double, Double)]()
     val spiked = perQuery0.collect {
       case (name, (mn, mx)) if mn >= 0 && mx > 3 * mn && mx - mn > 0.3 => name
     }
@@ -277,7 +231,6 @@ object Bench {
           val ca = calibrate()
           cals += cb; cals += ca
           System.err.println(f"[bench] respike $name $sec%.2fs cal[$cb%.2f,$ca%.2f]")
-          if (ok) respikeSamples(name) = (sec, (cb + ca) / 2)
           if (ok && cb <= thr && ca <= thr) { respikes(name) = sec; Some(name -> sec) }
           else None
         }.toMap
@@ -291,25 +244,6 @@ object Bench {
     // (Computed after the respike reps so their calibrations count too.)
     val cal = calFloor
     val calMax = (cals ++ passes.flatMap(_.probes)).max
-    // Per-key normalized mins ([[normMin]]): every used-pass sample plus
-    // every completed respike rep, each paired with its segment's (or
-    // respike brackets') heat; normalized to the final floor. Published
-    // as queries_norm {key: [norm_min, heat_at_min]} so a contended run
-    // still yields an adjudicable per-key diff (r15: both records
-    // self-flagged run_contended and the round's diff degenerated to a
-    // uniform-shift assumption).
-    val perQueryNorm = suite.zipWithIndex.map { case (name, i) =>
-      val passSamples = used.map(p => (p.times(name), p.segHeat(i)))
-      val all = passSamples ++ respikeSamples.get(name)
-      val (nm, h) = normMin(all, cal)
-      // heat spread + sample count ride along (r16 VERDICT #1a): a norm
-      // chosen from one hot sample must be visible as such to a judge
-      val valid = all.filter { case (t, hh) => t >= 0 && hh > 0 }
-      val (hMin, hMax) =
-        if (valid.isEmpty) (-1.0, -1.0)
-        else (valid.map(_._2).min, valid.map(_._2).max)
-      name -> (nm, h, valid.size, hMin, hMax)
-    }
     // RUN-level contention verdict (r14 lesson): the headline cal is a
     // MIN, so a run whose best calibration read clean while the in-pass
     // probes ran 50% hot publishes numbers that LOOK clean but carry a
@@ -343,11 +277,6 @@ object Bench {
     val detail = perQuery
       .map { case (k, (mn, mx)) => "\"" + k + "\":[" + f3(mn) + "," + f3(mx) + "]" }
       .mkString("{", ",", "}")
-    val normDetail = perQueryNorm
-      .map { case (k, (nm, h, n, hMin, hMax)) =>
-        "\"" + k + "\":[" + f3(nm) + "," + f3(h) + "," + n + "," +
-          f3(hMin) + "," + f3(hMax) + "]" }
-      .mkString("{", ",", "}")
     val total = perQuery.collect { case (_, (mn, _)) if mn >= 0 => mn }.sum
     val failedJson =
       if (failed.isEmpty) ""
@@ -361,13 +290,15 @@ object Bench {
     // total delta (r9: builder 73.5s vs driver 90.1s, both bracket-clean)
     // is attributable instead of reading as a plan change. warm_cache_keys
     // flags keys whose number is BY DESIGN a warm-cache marginal cost
-    // (session-shared input frame): tools/benchdiff.py annotates them so a
-    // cross-round diff against a pre-memoization round isn't read as an
-    // engine speedup.
+    // (a session-shared input frame, or CatalogStats.ensureStarStats'
+    // ANALYZE scans, which run once per session and dir during the
+    // warmup pass): tools/benchdiff.py annotates them so a cross-round
+    // diff against a pre-memoization round isn't read as an engine
+    // speedup.
     val ledger =
-      s""""probe_every":$ProbeEvery,"contended_samples":$contendedSamples,"contended_keys":${contendedKeys.map("\"" + _ + "\"").mkString("[", ",", "]")},"respikes":${respikes.map { case (k, v) => "\"" + k + "\":" + f3(v) }.mkString("{", ",", "}")},"respike_attempted":${spiked.sorted.map("\"" + _ + "\"").mkString("[", ",", "]")},"warm_cache_keys":["dedup_keep_best","ann_ivf_pruned"]"""
+      s""""probe_every":$ProbeEvery,"contended_samples":$contendedSamples,"contended_keys":${contendedKeys.map("\"" + _ + "\"").mkString("[", ",", "]")},"respikes":${respikes.map { case (k, v) => "\"" + k + "\":" + f3(v) }.mkString("{", ",", "}")},"respike_attempted":${spiked.sorted.map("\"" + _ + "\"").mkString("[", ",", "]")},"warm_cache_keys":["dedup_keep_best","ann_ivf_pruned","cbo_join_reorder","window_partitioned_auto","window_partitioned_range_auto","window_partitioned_string_auto"]"""
     val detailDoc =
-      s"""{"metric":"total","value":${f3(total)},"unit":"sec","sf":"$sfName","cal":${f3(cal)},"cal_gate":${f3(gateFloor)},"cal_max":${f3(calMax)},"probe_median":${f3(probeMedian)},"run_contended":$runContended,"cals":${cals.map(f3).mkString("[", ",", "]")},"passes":$passMeta,"used_passes":${used.length},$ledger,"nqueries":${perQuery.size},"failed":${failed.sorted.map("\"" + _ + "\"").mkString("[", ",", "]")},"queries_min_max":$detail,"queries_norm":$normDetail}"""
+      s"""{"metric":"total","value":${f3(total)},"unit":"sec","sf":"$sfName","cal":${f3(cal)},"cal_gate":${f3(gateFloor)},"cal_max":${f3(calMax)},"probe_median":${f3(probeMedian)},"run_contended":$runContended,"cals":${cals.map(f3).mkString("[", ",", "]")},"passes":$passMeta,"used_passes":${used.length},$ledger,"nqueries":${perQuery.size},"failed":${failed.sorted.map("\"" + _ + "\"").mkString("[", ",", "]")},"queries_min_max":$detail}"""
     try {
       val out = java.nio.file.Paths.get("BENCH_DETAIL.json")
       java.nio.file.Files.write(out, (detailDoc + "\n").getBytes("UTF-8"))

@@ -77,17 +77,10 @@ object Readers {
           schema: org.apache.spark.sql.types.StructType): DataFrame =
     spark.read.schema(schema).orc(path)
 
-  /** JSON-lines source with an EXPLICIT schema — never inference, which is
-    * a full extra pass over the data (deadly at corpus scale) and
-    * type-unstable between samples. JSONL is the interchange format
-    * training-data pipelines live on; nested structs/arrays map 1:1 onto
-    * Spark's nested types.
-    */
-  def jsonl(spark: SparkSession, path: String,
-            schema: org.apache.spark.sql.types.StructType): DataFrame =
-    spark.read.schema(schema).json(path)
-
-  /** [[jsonl]] with row-level quarantine: malformed lines survive the
+  /** JSON-lines source with an EXPLICIT schema and row-level quarantine.
+    * The schema is never inferred: inference is a full extra pass over
+    * the data and is type-unstable between samples; fields the schema
+    * names but a line lacks read as null. Malformed lines survive the
     * scan in the `_corrupt_record` column (PERMISSIVE mode) instead of
     * failing the job or silently vanishing — at corpus scale a crawl
     * delivery ALWAYS contains broken lines, and the pipeline decision
@@ -107,18 +100,6 @@ object Readers {
       .option("mode", "PERMISSIVE")
       .option("columnNameOfCorruptRecord", "_corrupt_record")
       .json(path)
-
-  /** Generic headered CSV with explicit schema (same contract as the
-    * reference readers: schema-on-read, projection by select), parsed with
-    * full quoting so embedded delimiters/quotes/newlines round-trip with
-    * [[Sink.overwriteCsv]]. `multiLine` makes files non-splittable (each
-    * is read by one task) — the price of quoted newlines; data without
-    * them should use the splittable `ordersCsv`-style reader.
-    */
-  def csv(spark: SparkSession, path: String,
-          schema: org.apache.spark.sql.types.StructType): DataFrame =
-    spark.read.option("header", "true").option("escape", "\"")
-      .option("multiLine", "true").schema(schema).csv(path)
 
   /** Fan a narrow source out to full parallelism before per-row-expensive
     * work (hashing, regex pipelines, vector math).

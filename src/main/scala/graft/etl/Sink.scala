@@ -29,77 +29,9 @@ object Sink {
     df.write.mode(SaveMode.Overwrite).parquet(s"$warehouseRoot/$dataset/$table")
   }
 
-  /** Key-based merge (upsert) as a declarative plan: rows of `updates`
-    * replace same-key rows of `existing`; all other existing rows survive.
-    * The reference only truncate-and-loads (`if_exists="replace"`); this is
-    * the incremental-load counterpart.
-    *
-    * Plan shape: one LEFT ANTI join on the key (existing rows whose key has
-    * no update) + union — a single shuffle of each input on the key, and
-    * with `updates` small it degrades to a broadcast anti join. Writers
-    * pair it with `overwriteTable` on the merged frame (a transactional
-    * table format would push the same plan into a MERGE).
-    *
-    * The anti join uses NULL-SAFE key equality, so a null-keyed existing
-    * row is replaced by a null-keyed update (plain equality would keep
-    * both — null never "matches"). Duplicate keys WITHIN `updates` are the
-    * caller's contract to prevent, as in SQL MERGE.
-    */
-  def mergeByKey(existing: DataFrame, updates: DataFrame,
-                 keys: Seq[String]): DataFrame = {
-    import org.apache.spark.sql.functions.col
-    val updKeys = updates
-      .select(keys.map(col): _*).distinct()
-      .toDF(keys.map("_upd_" + _): _*)
-    val cond = keys.map(k => existing(k) <=> updKeys(s"_upd_$k"))
-      .reduce(_ && _)
-    updates.unionByName(existing.join(updKeys, cond, "left_anti"))
-  }
-
   /** ORC sink — the columnar alternative when the downstream stack is
     * Hive/Trino-first; same overwrite contract as the parquet sink.
     */
   def overwriteOrc(df: DataFrame, path: String): Unit =
     df.write.mode(SaveMode.Overwrite).orc(path)
-
-  /** DYNAMIC partition overwrite: replaces ONLY the partitions present in
-    * `df`, leaving sibling partitions untouched — the idempotent-backfill
-    * write ("re-run day X" must not truncate the year). The static default
-    * would drop the whole table root; `partitionOverwriteMode=dynamic` is
-    * set per-write so the session default stays untouched.
-    */
-  def overwritePartitions(df: DataFrame, path: String,
-                          partitionCols: Seq[String]): Unit =
-    df.write.mode(SaveMode.Overwrite)
-      .option("partitionOverwriteMode", "dynamic")
-      .partitionBy(partitionCols: _*)
-      .parquet(path)
-
-  /** Small-file compaction: rewrite `src` into `dst` as `targetFiles`
-    * similarly-sized files. THE maintenance op at 100 TB — streaming
-    * ingestion and dynamic-partition backfills strand thousands of tiny
-    * files per partition, and every downstream scan then pays per-file
-    * open/footer costs. Round-robin repartition (not coalesce: coalesce
-    * merges without a shuffle but chains up the lineage, capping upstream
-    * parallelism and producing uneven files).
-    */
-  def compact(spark: org.apache.spark.sql.SparkSession, src: String,
-              dst: String, targetFiles: Int): Unit =
-    spark.read.parquet(src).repartition(targetFiles)
-      .write.mode(SaveMode.Overwrite).parquet(dst)
-
-  /** JSON-lines sink (training-data interchange). Distributed write — one
-    * file per partition; callers needing shard-count control repartition
-    * first.
-    */
-  def overwriteJsonl(df: DataFrame, path: String): Unit =
-    df.write.mode(SaveMode.Overwrite).json(path)
-
-  /** Headered CSV sink with full quoting (embedded delimiters, quotes,
-    * and newlines survive the round-trip).
-    */
-  def overwriteCsv(df: DataFrame, path: String): Unit =
-    df.write.mode(SaveMode.Overwrite)
-      .option("header", "true").option("escape", "\"")
-      .csv(path)
 }

@@ -74,12 +74,6 @@ object Curation {
       .when(stopRatioOf(words) < MinStopwordRatio, lit("no_stopwords"))
   }
 
-  /** Convenience single-expression form; hot paths should project
-    * `split(text, " ")` to an attribute and use [[rejectReasonFromWords]].
-    */
-  def rejectReason(text: Column): Column =
-    rejectReasonFromWords(text, split(text, " "))
-
   /** C4-style quality filter: per-document fluency/length/diversity
     * signals plus a keep decision with the FIRST failing rule as the
     * reject reason (rule order is part of the contract — downstream

@@ -102,18 +102,6 @@ object Ranking {
       .drop(rn, n)
   }
 
-  /** `df` plus `rankCol` = the exact 0-based global rank (and optionally
-    * `countCol` = the total row count on every row) — the building block
-    * [[withGlobalRowNumber]]/[[withNtile]] wrap, public so a caller
-    * computing SEVERAL rank functions over one total order (the
-    * [[graft.plans.DistributeGlobalRank]] multi-function window) pays
-    * for the distributed rank once and derives the rest arithmetically.
-    */
-  def withGlobalRankAndCount(df: DataFrame, order: Seq[Column],
-                             rankCol: String, countCol: Option[String],
-                             rangeKey: Option[Column] = None): DataFrame =
-    withRankAndCount(df, order, rankCol, countCol, rangeKey)
-
   /** SQL `ntile(buckets)` from the 0-based rank and the total count:
     * b = n/k rows per bucket, the first r = n%k buckets take one extra;
     * for 0-based rank p the first r·(b+1) ranks map onto the wide

@@ -90,12 +90,4 @@ object Lineage {
     plan.output.map(a =>
       a.name -> sources.getOrElse(a.exprId.id, Set.empty).toSeq.sorted)
   }
-
-  /** Find outputs that depend on any of the given source columns
-    * (`table.column`) — the "what reads PII" audit.
-    */
-  def dependents(df: DataFrame, tainted: Set[String]): Seq[String] =
-    columnLineage(df).collect {
-      case (out, srcs) if srcs.exists(tainted.contains) => out
-    }
 }

@@ -61,43 +61,4 @@ class BenchGateSpec extends AnyFunSuite {
     assert(contended, "straddling run must flag (0.094 > 1.3 * 0.066)")
     assert(0.068 <= 1.3 * 0.066, "the lower middle would have passed it")
   }
-
-  /** [[Bench.normMin]] certification — the per-key contention
-    * normalization published as queries_norm. The r15 shift (probe
-    * median 0.128 on floor 0.084, every key ~1.5x) is the fixture: a
-    * sample taken in a hot segment, divided by its segment heat, must
-    * land where a cool segment would have put it.
-    */
-  test("normMin divides out segment heat (r15 uniform-shift fixture)") {
-    // one key, one sample, taken while the host ran at 0.128 cal on a
-    // 0.084 floor: observed 1.5s normalizes to 1.5 * 0.084/0.128
-    val (norm, heat) = Bench.normMin(Seq((1.5, 0.128)), 0.084)
-    assert(math.abs(norm - 1.5 * 0.084 / 0.128) < 1e-12)
-    assert(heat == 0.128)
-  }
-
-  test("normMin picks the best heat-adjusted sample, not the raw min") {
-    // raw min 0.9s ran hot (heat 2x floor); the 1.0s sample ran at the
-    // floor — heat-adjusted, 0.9/2 = 0.45 < 1.0, so the hot sample wins
-    // and is published at its normalized value
-    val (norm, heat) = Bench.normMin(Seq((1.0, 0.07), (0.9, 0.14)), 0.07)
-    assert(math.abs(norm - 0.45) < 1e-12)
-    assert(heat == 0.14)
-    // ...and when the cool sample is genuinely better (0.4 < 0.9/2), it wins
-    val (n2, h2) = Bench.normMin(Seq((0.4, 0.07), (0.9, 0.14)), 0.07)
-    assert(n2 == 0.4 && h2 == 0.07)
-  }
-
-  test("normMin skips failed samples and degrades to (-1,-1)") {
-    assert(Bench.normMin(Seq((-1.0, 0.1)), 0.07) == ((-1.0, -1.0)))
-    assert(Bench.normMin(Nil, 0.07) == ((-1.0, -1.0)))
-    // a failed sample among good ones is ignored
-    val (norm, _) = Bench.normMin(Seq((-1.0, 0.1), (2.0, 0.07)), 0.07)
-    assert(norm == 2.0)
-  }
-
-  test("normMin at floor heat is the identity") {
-    val (norm, heat) = Bench.normMin(Seq((1.234, 0.084)), 0.084)
-    assert(math.abs(norm - 1.234) < 1e-12 && heat == 0.084)
-  }
 }

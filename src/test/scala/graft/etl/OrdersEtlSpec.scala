@@ -1,13 +1,11 @@
 package graft.etl
 
 import graft.TestSpark
-import org.apache.spark.ListenerBusDrain
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.JobCounter
 import org.scalatest.funsuite.AnyFunSuite
 
 import java.nio.charset.StandardCharsets.UTF_8
 import java.nio.file.{Files, Path, Paths}
-import java.util.concurrent.atomic.AtomicInteger
 
 /** The OrdersEtl facade end-to-end: the exact call sequence of the
   * reference's `run.py` (process → write → find_similar_products with its
@@ -128,20 +126,8 @@ class OrdersEtlSpec extends AnyFunSuite {
   }
 
   test("job shape: construction is lazy, lookups leave write() alone, one job per lookup") {
-    val jobs = new AtomicInteger(0)
-    val listener = new SparkListener {
-      override def onJobStart(jobStart: SparkListenerJobStart): Unit =
-        jobs.incrementAndGet()
-    }
-    def jobsOf(body: => Unit): Int = {
-      ListenerBusDrain(spark.sparkContext)
-      val before = jobs.get()
-      body
-      ListenerBusDrain(spark.sparkContext)
-      jobs.get() - before
-    }
     val cands = golden.keys.toSeq ++ Seq(1L, 2L, 3L)
-    spark.sparkContext.addSparkListener(listener)
+    val jobsOf = new JobCounter(spark.sparkContext)
     try {
       lazy val plain = newEtl()
       assert(jobsOf(plain.process()) == 0)
@@ -156,6 +142,6 @@ class OrdersEtlSpec extends AnyFunSuite {
       }
       assert(jobsOf(intercept[IllegalArgumentException](
         looked.findSimilarProducts(-1L, cands))) == 1)
-    } finally spark.sparkContext.removeSparkListener(listener)
+    } finally jobsOf.close()
   }
 }

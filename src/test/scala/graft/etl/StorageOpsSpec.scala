@@ -1,13 +1,11 @@
 package graft.etl
 
-import java.nio.file.{Files, Paths}
+import java.nio.file.Files
 
 import graft.TestSpark
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Storage maintenance contracts: dynamic partition overwrite (idempotent
-  * backfill), small-file compaction, and schema-evolution reads.
-  */
+/** Storage contract: a parquet read spans a schema evolution. */
 class StorageOpsSpec extends AnyFunSuite {
 
   private val spark = TestSpark.spark
@@ -15,40 +13,6 @@ class StorageOpsSpec extends AnyFunSuite {
 
   private def tmp(name: String): String =
     Files.createTempDirectory(s"graft-$name").toString + "/t"
-
-  private def partFiles(dir: String): Int = {
-    val p = Paths.get(dir)
-    if (!Files.exists(p)) 0
-    else {
-      val s = Files.walk(p)
-      try s.filter(f => f.getFileName.toString.startsWith("part-"))
-        .count().toInt
-      finally s.close()
-    }
-  }
-
-  test("dynamic partition overwrite replaces only the written partitions") {
-    val path = tmp("dynpart")
-    Sink.overwritePartitions(
-      Seq((1L, "d1"), (2L, "d1"), (3L, "d2")).toDF("v", "day"),
-      path, Seq("day"))
-    // backfill d2 only — d1 must survive untouched
-    Sink.overwritePartitions(
-      Seq((99L, "d2")).toDF("v", "day"), path, Seq("day"))
-    val back = spark.read.parquet(path)
-      .as[(Long, String)].collect().toSet
-    assert(back == Set((1L, "d1"), (2L, "d1"), (99L, "d2")))
-  }
-
-  test("compact rewrites many small files into the target count") {
-    val src = tmp("compact-src"); val dst = tmp("compact-dst")
-    (1 to 1000).toDF("v").repartition(16)
-      .write.parquet(src)
-    assert(partFiles(src) == 16)
-    Sink.compact(spark, src, dst, 2)
-    assert(partFiles(dst) == 2)
-    assert(spark.read.parquet(dst).count() == 1000)
-  }
 
   test("mergeSchema read spans a column-addition schema evolution") {
     val path = tmp("evolve")

@@ -1,10 +1,8 @@
 package graft.queries
 
 import graft.{SparkEntry, TestSpark}
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.JobCounter
 import org.scalatest.funsuite.AnyFunSuite
-
-import java.util.concurrent.atomic.AtomicInteger
 
 /** Repo-wide lazy-construction contract: calling a `SparkEntry.queries`
   * function BUILDS a plan — it must not run a Spark job. An eager action at
@@ -83,23 +81,8 @@ class LazyConstructionSpec extends AnyFunSuite {
 
   test("query construction runs zero Spark jobs (outside the eager allowlist)") {
     val spark = TestSpark.spark
-    val jobs = new AtomicInteger(0)
-    val listener = new SparkListener {
-      override def onJobStart(jobStart: SparkListenerJobStart): Unit =
-        jobs.incrementAndGet()
-    }
-    spark.sparkContext.addSparkListener(listener)
+    val jobsOf = new JobCounter(spark.sparkContext)
     try {
-      // settle: let any event from previous suites drain before counting
-      def settled(): Int = {
-        var last = jobs.get(); var stableMs = 0
-        while (stableMs < 120) {
-          Thread.sleep(30)
-          val now = jobs.get()
-          if (now == last) stableMs += 30 else { last = now; stableMs = 0 }
-        }
-        last
-      }
       // warm pass: first touch of each parquet path legitimately runs the
       // listing/footer job Spark fires inside `spark.read.parquet`; the
       // memoized Readers.table makes every LATER construction job-free,
@@ -107,20 +90,14 @@ class LazyConstructionSpec extends AnyFunSuite {
       SparkEntry.queries.values.foreach { fn =>
         try fn(spark, sfDir) catch { case _: Throwable => () }
       }
-      settled()
       val violations = SparkEntry.queries.toSeq.sortBy(_._1).flatMap {
         case (name, fn) =>
-          if (eagerByDesign(name)) { fn(spark, sfDir); settled(); None }
-          else {
-            val before = jobs.get()
-            fn(spark, sfDir) // construction only — no action
-            val after = settled()
-            if (after != before) Some(s"$name fired ${after - before} job(s)")
-            else None
-          }
+          val n = jobsOf(fn(spark, sfDir)) // construction only — no action
+          if (n > 0 && !eagerByDesign(name)) Some(s"$name fired $n job(s)")
+          else None
       }
       assert(violations.isEmpty,
         s"queries ran jobs at construction:\n  ${violations.mkString("\n  ")}")
-    } finally spark.sparkContext.removeSparkListener(listener)
+    } finally jobsOf.close()
   }
 }

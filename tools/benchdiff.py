@@ -10,14 +10,8 @@ removed. Defaults match the judge's r8 criterion: ratio 1.3, abs 0.15s.
 
 Reads either the `queries` (scalar seconds) or `queries_min_max`
 ([min, max]) layout, so older round artifacts diff cleanly against new
-ones.
-
-When BOTH records carry `queries_norm` (r16+: per-key min normalized to
-the run's own calibration floor, plus the segment heat of the chosen
-sample), the diff re-bases each side onto the COMMON floor
-min(old.cal, new.cal) — `t_at_F = norm * F / own_cal` — so two runs
-taken on differently-contended hosts diff key by key without the
-uniform-shift assumption. Raw-min mode is the fallback and is labeled.
+ones. The diff is over raw mins only: any other per-key field a record
+carries, such as the heat-normalized mins of r16-r18 runs, is ignored.
 """
 import json
 import sys
@@ -30,20 +24,11 @@ def mins(detail: dict) -> dict:
     return {k: (v[0] if isinstance(v, list) else v) for k, v in q.items()}
 
 
-def norm_mins(detail: dict, common_floor: float) -> dict:
-    own = detail.get("cal") or 0.0
-    if not own:
-        return {}
-    return {k: v[0] * common_floor / own
-            for k, v in detail.get("queries_norm", {}).items()
-            if isinstance(v, list) and v[0] >= 0}
-
-
 def main(old_path: str, new_path: str, ratio: float, abs_s: float) -> int:
     old, new = (json.load(open(p)) for p in (old_path, new_path))
     om, nm = mins(old), mins(new)
-    # a failed key carries min -1 (and norm -1): collect explicitly so
-    # norm mode can't silently reclassify it as added/removed (r16 ADVICE)
+    # a failed key carries min -1: collect explicitly so it is neither
+    # diffed nor reported as added/removed
     failed = sorted({k for k, v in om.items() if v < 0}
                     | {k for k, v in nm.items() if v < 0})
     if failed:
@@ -51,25 +36,8 @@ def main(old_path: str, new_path: str, ratio: float, abs_s: float) -> int:
               + ", ".join(failed))
     om = {k: v for k, v in om.items() if v >= 0}
     nm = {k: v for k, v in nm.items() if v >= 0}
-    if old.get("queries_norm") and new.get("queries_norm"):
-        floor = min(old.get("cal", 1e9), new.get("cal", 1e9))
-        onorm, nnorm = norm_mins(old, floor), norm_mins(new, floor)
-        if onorm and nnorm:
-            om = {k: v for k, v in onorm.items() if k in om}
-            nm = {k: v for k, v in nnorm.items() if k in nm}
-            print(f"mode: heat-NORMALIZED mins, re-based to common floor "
-                  f"{floor} (old cal {old.get('cal')}, new cal "
-                  f"{new.get('cal')})")
-            if old.get("run_contended") != new.get("run_contended"):
-                print("CAVEAT: one record is contended and the other is "
-                      "not — r17 validation (OPTIMIZATION_r17.md §2) shows "
-                      "norm OVER-corrects on contended runs (lower bound), "
-                      "so deltas in the contended record's favor are "
-                      "inflated; cross-check in raw-min mode before "
-                      "calling a regression/improvement")
-    else:
-        print("mode: raw mins (a record predates queries_norm) — "
-              "contended-host deltas need the uniform-shift caveat")
+    print("mode: raw mins — contended-host deltas need the "
+          "uniform-shift caveat")
     for label, d in (("old", old), ("new", new)):
         n = len(mins(d))
         print(f"{label}: total {d.get('value')}s over {n} keys "
@@ -83,7 +51,8 @@ def main(old_path: str, new_path: str, ratio: float, abs_s: float) -> int:
     if removed:
         print(f"removed ({len(removed)}): " + ", ".join(removed))
     # keys whose number is by design a warm-cache marginal cost (session-
-    # shared input frame, e.g. dedup_keep_best since r9): a diff against a
+    # shared input frame, e.g. dedup_keep_best since r9, or ANALYZE stats
+    # computed once per session, e.g. cbo_join_reorder): a diff against a
     # pre-memoization round shows a large "improvement" that is a
     # semantics change, not an engine speedup — annotate, don't celebrate
     warm = set(old.get("warm_cache_keys", [])) | set(new.get("warm_cache_keys", []))
