@@ -267,7 +267,8 @@ object Bench {
     // fits that window at 125+ queries (BENCH_r06 parsed:null — the headline's
     // front was truncated away), so the headline now carries the aggregate
     // ONLY (~120 chars, fits at any suite size). The complete per-query
-    // min/max detail is written to BENCH_DETAIL.json next to the repo docs
+    // min/max detail is written to BENCH_DETAIL.json (sf0.1; other scales
+    // to BENCH_DETAIL_<sf>.json) next to the repo docs
     // (read directly by the judge) and echoed on a '#'-prefixed line — never
     // parseable as JSON, so it can't be mistaken for the headline.
     def f3(v: Double): String = {
@@ -300,7 +301,10 @@ object Bench {
     val detailDoc =
       s"""{"metric":"total","value":${f3(total)},"unit":"sec","sf":"$sfName","cal":${f3(cal)},"cal_gate":${f3(gateFloor)},"cal_max":${f3(calMax)},"probe_median":${f3(probeMedian)},"run_contended":$runContended,"cals":${cals.map(f3).mkString("[", ",", "]")},"passes":$passMeta,"used_passes":${used.length},$ledger,"nqueries":${perQuery.size},"failed":${failed.sorted.map("\"" + _ + "\"").mkString("[", ",", "]")},"queries_min_max":$detail}"""
     try {
-      val out = java.nio.file.Paths.get("BENCH_DETAIL.json")
+      // sf0.1 is the scale the committed record holds; any other scale
+      // writes beside it, so a small run never replaces it
+      val out = java.nio.file.Paths.get(
+        if (sfName == "sf0.1") "BENCH_DETAIL.json" else s"BENCH_DETAIL_$sfName.json")
       java.nio.file.Files.write(out, (detailDoc + "\n").getBytes("UTF-8"))
     } catch { case e: Throwable => System.err.println(s"[bench] detail write failed: ${e.getMessage}") }
     println(s"# bench-detail(min,max) $detail")

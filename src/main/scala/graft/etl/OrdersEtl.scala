@@ -1,8 +1,10 @@
 package graft.etl
 
-import scala.jdk.CollectionConverters._
-
+import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.{Alias, BindReferences, Expression, JoinedRow}
+import org.apache.spark.sql.catalyst.plans.logical.Project
 import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.types.StructType
 
@@ -17,9 +19,9 @@ import org.apache.spark.sql.types.StructType
   *     overwrite ≡ BigQuery `if_exists="replace"`; swap in the
   *     spark-bigquery-connector on a connected cluster);
   *   - `findSimilarProducts` reads the target and candidate rows from a
-  *     pin of the processed products taken on the first lookup (one Spark
-  *     job per lookup after that) and scores them on the driver with
-  *     [[Similarity.scoreExpr]].
+  *     pin of the processed products taken on the first lookup (one plain
+  *     Spark job per lookup after that, no SQL query) and scores them on
+  *     the driver with [[Similarity.scoreExpr]], bound once per instance.
   */
 class OrdersEtl(spark: SparkSession, ordersCsv: String, productsCsv: String,
                 warehouseRoot: String, tableName: String) {
@@ -40,9 +42,29 @@ class OrdersEtl(spark: SparkSession, ordersCsv: String, productsCsv: String,
   /** `processedProducts` (columns of [[Schemas.products]], `product_id`
     * first) materialized once for the lookups: an eager `localCheckpoint()`,
     * which runs the products pipeline (scan, casts, keep-first dedup) on the
-    * first lookup.
+    * first lookup, planned once into the RDD of its rows.
     */
-  private lazy val productsPin: DataFrame = processedProducts.localCheckpoint()
+  private lazy val productsPin: RDD[InternalRow] =
+    processedProducts.localCheckpoint().queryExecution.toRdd
+
+  /** [[Similarity.scoreExpr]] bound to a candidate row joined with its
+    * target row: the pin's columns, then the same columns again as `t_*`.
+    * Resolved once through the analyzer, so type coercion is that of a
+    * DataFrame over these columns. Interpreted `eval` keeps no per-call
+    * state, so concurrent lookups share it; a generated projection would
+    * reuse one output row across them.
+    */
+  private lazy val score: Expression = {
+    val s = processedProducts.schema
+    val pair = new StructType(s.fields ++ s.fields.map(f => f.copy(name = s"t_${f.name}")))
+    spark.createDataFrame(java.util.Collections.emptyList[Row](), pair)
+      .select(Similarity.scoreExpr(
+        col("price"), col("goods_group"), col("manufacturer"),
+        col("t_price"), col("t_goods_group"), col("t_manufacturer")))
+      .queryExecution.analyzed match {
+        case Project(Seq(Alias(e, _)), input) => BindReferences.bindReference(e, input.output)
+      }
+  }
 
   /** Reference `find_similar_products`: `Map(candidate_id -> score)`.
     * Throws `IllegalArgumentException` if the target id is absent, matching
@@ -51,11 +73,11 @@ class OrdersEtl(spark: SparkSession, ordersCsv: String, productsCsv: String,
     * or target without a price scores `NaN`, as pandas NaN propagates
     * through the reference's arithmetic.
     *
-    * Each lookup is one Spark job: collect the rows of the target and the
-    * candidates from the pin (an `isin` over more than ten ids plans as
-    * `InSet`, whose set is a reference object, so the scan's generated
-    * code is reused and nothing recompiles per lookup), then score them
-    * over a local relation, which the optimizer folds on the driver.
+    * Each lookup is one Spark job and no SQL query: `runJob` over the pin
+    * returns the rows whose non-null `product_id` is the target or a
+    * candidate, and the driver scores each candidate against the target
+    * with the bound [[Similarity.scoreExpr]]. Nothing is analyzed, planned
+    * or compiled per lookup.
     *
     * The pin is taken on the first lookup and lives as long as this
     * instance: Spark's context cleaner drops its blocks once the instance
@@ -72,21 +94,18 @@ class OrdersEtl(spark: SparkSession, ordersCsv: String, productsCsv: String,
     */
   def findSimilarProducts(targetId: Long,
                           candidateIds: Seq[Long]): Map[Long, Double] = {
-    val rows = productsPin.filter(col("product_id").isin(targetId +: candidateIds: _*))
-      .collect()
+    val wanted = candidateIds.toSet
+    val ids = wanted + targetId
+    // a null id reads as 0 from getLong; rows are reused by the iterator
+    val rows = spark.sparkContext.runJob(productsPin, (it: Iterator[InternalRow]) =>
+      it.filter(r => !r.isNullAt(0) && ids(r.getLong(0))).map(_.copy()).toArray).flatten
     val target = rows.find(_.getLong(0) == targetId)
     require(target.isDefined, s"target product $targetId not found")
-    val wanted = candidateIds.toSet
-    val pairs = rows.filter(r => wanted(r.getLong(0)))
-      .map(r => Row.fromSeq(r.toSeq ++ target.get.toSeq.tail))
-    val s = productsPin.schema
-    val schema = new StructType(s.fields ++ s.fields.tail.map(f => f.copy(name = s"t_${f.name}")))
-    spark.createDataFrame(pairs.toSeq.asJava, schema)
-      .select(col("product_id"), Similarity.scoreExpr(
-        col("price"), col("goods_group"), col("manufacturer"),
-        col("t_price"), col("t_goods_group"), col("t_manufacturer")))
-      .collect()
-      .map(r => r.getLong(0) -> (if (r.isNullAt(1)) Double.NaN else r.getDouble(1)))
-      .toMap
+    rows.filter(r => wanted(r.getLong(0))).map { r =>
+      r.getLong(0) -> (score.eval(new JoinedRow(r, target.get)) match {
+        case d: Double => d
+        case null => Double.NaN
+      })
+    }.toMap
   }
 }

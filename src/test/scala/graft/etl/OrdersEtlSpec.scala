@@ -6,6 +6,7 @@ import org.scalatest.funsuite.AnyFunSuite
 
 import java.nio.charset.StandardCharsets.UTF_8
 import java.nio.file.{Files, Path, Paths}
+import java.util.concurrent.{Callable, Executors}
 
 /** The OrdersEtl facade end-to-end: the exact call sequence of the
   * reference's `run.py` (process → write → find_similar_products with its
@@ -46,7 +47,8 @@ class OrdersEtlSpec extends AnyFunSuite {
   }
 
   // SimilaritySpec's eight golden products, then a second 516425 row whose
-  // price keep-first must discard, then a product without a price.
+  // price keep-first must discard, a product without a price, and a product
+  // whose empty id casts to null.
   private val productsRows = Seq(
     "product_id,price,goods_group,manufacturer",
     "536469,749.0,Для активного відпочинку,Bugs",
@@ -58,7 +60,8 @@ class OrdersEtlSpec extends AnyFunSuite {
     "439541,810.0,Дитячі машинки,LENA",
     "528462,219.0,Дитячі машинки,LENA",
     "516425,999.0,Дитячі машинки,CARS",
-    "700001,,Дитячі машинки,CARS")
+    "700001,,Дитячі машинки,CARS",
+    ",219.0,Дитячі машинки,CARS")
 
   private val ordersRows = Seq(
     ",order_source_id,order_created_datetime,customer_id,status,sum,quantity," +
@@ -94,19 +97,44 @@ class OrdersEtlSpec extends AnyFunSuite {
     assert(etl.findSimilarProducts(516423L, Seq.empty).isEmpty)
   }
 
+  // (target, candidates) pairs over the golden ids, unknown ids among them
+  private val lookups = Seq(
+    516423L -> golden.keys.toSeq,
+    536469L -> (golden.keys.toSeq ++ Seq(1L, 2L, 3L, 4L, 5L)),
+    427227L -> Seq(439541L, 528462L, 9L),
+    516425L -> Seq(516425L, 296597L))
+
   test("lookup matches Similarity.findSimilar over processedProducts") {
     val etl = newEtl()
-    val ids = golden.keys.toSeq
-    val lookups = Seq(
-      516423L -> ids,
-      536469L -> (ids ++ Seq(1L, 2L, 3L, 4L, 5L)), // > 10 ids: planned as InSet
-      427227L -> Seq(439541L, 528462L, 9L),
-      516425L -> Seq(516425L, 296597L))
     lookups.foreach { case (target, cands) =>
       val expected = Similarity.findSimilar(etl.processedProducts, target, cands)
         .as[(Long, Double)].collect().toMap
       assert(etl.findSimilarProducts(target, cands) == expected, s"target $target")
     }
+  }
+
+  test("concurrent lookups on one instance return the serial maps") {
+    val serial = {
+      val etl = newEtl()
+      lookups.map { case (target, cands) => etl.findSimilarProducts(target, cands) }
+    }
+    val etl = newEtl()
+    val pool = Executors.newFixedThreadPool(4)
+    try {
+      val runs = (1 to 4).map(_ => pool.submit(new Callable[Seq[Map[Long, Double]]] {
+        def call(): Seq[Map[Long, Double]] =
+          lookups.map { case (target, cands) => etl.findSimilarProducts(target, cands) }
+      }))
+      runs.foreach(r => assert(r.get() == serial))
+    } finally pool.shutdown()
+  }
+
+  test("a null product_id is never a lookup's target or candidate") {
+    val etl = newEtl()
+    assert(etl.processedProducts.filter($"product_id".isNull).count() == 1)
+    val e = intercept[IllegalArgumentException](etl.findSimilarProducts(0L, Seq(516423L)))
+    assert(e.getMessage == "requirement failed: target product 0 not found")
+    assert(etl.findSimilarProducts(516423L, Seq(0L, 296597L)) == Map(296597L -> 0.9726))
   }
 
   test("an absent target throws, on the first lookup and once the pin exists") {
@@ -137,11 +165,12 @@ class OrdersEtlSpec extends AnyFunSuite {
       val looked = newEtl()
       assert(jobsOf(looked.findSimilarProducts(516423L, cands)) > 0)
       assert(jobsOf(looked.write()) == writeAlone)
+      // later lookups: one plain job each, no SQL query planned
       (1 to 3).foreach { i =>
-        assert(jobsOf(looked.findSimilarProducts(516423L, cands.drop(i))) == 1)
+        assert(jobsOf.counts(looked.findSimilarProducts(516423L, cands.drop(i))) == (1, 0))
       }
-      assert(jobsOf(intercept[IllegalArgumentException](
-        looked.findSimilarProducts(-1L, cands))) == 1)
+      assert(jobsOf.counts(intercept[IllegalArgumentException](
+        looked.findSimilarProducts(-1L, cands))) == (1, 0))
     } finally jobsOf.close()
   }
 }

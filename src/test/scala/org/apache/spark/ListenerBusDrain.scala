@@ -2,7 +2,8 @@ package org.apache.spark
 
 import java.util.concurrent.atomic.AtomicInteger
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent, SparkListenerJobStart}
+import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
 
 /** Test access to the driver's listener bus, which is `private[spark]`:
   * draining it before reading a listener's counters makes every event of
@@ -12,24 +13,34 @@ object ListenerBusDrain {
   def apply(sc: SparkContext): Unit = sc.listenerBus.waitUntilEmpty()
 }
 
-/** Counts the Spark jobs a block starts on `sc`. The bus is drained
-  * before and after the block, so no earlier job is counted and every job
-  * the block started is. `close()` removes the listener.
+/** Counts the Spark jobs a block starts on `sc`, and its SQL executions
+  * (one per query action, none for a plain `runJob`). The bus is drained
+  * before and after the block, so no earlier event is counted and every
+  * event the block caused is. `close()` removes the listener.
   */
 final class JobCounter(sc: SparkContext) extends AutoCloseable {
   private val jobs = new AtomicInteger(0)
+  private val sqlExecutions = new AtomicInteger(0)
   private val listener = new SparkListener {
     override def onJobStart(jobStart: SparkListenerJobStart): Unit =
       jobs.incrementAndGet()
+    override def onOtherEvent(event: SparkListenerEvent): Unit = event match {
+      case _: SparkListenerSQLExecutionStart => sqlExecutions.incrementAndGet()
+      case _ =>
+    }
   }
   sc.addSparkListener(listener)
 
-  def apply(body: => Any): Int = {
+  /** Jobs started by `body`. */
+  def apply(body: => Any): Int = counts(body)._1
+
+  /** (jobs, SQL executions) started by `body`. */
+  def counts(body: => Any): (Int, Int) = {
     ListenerBusDrain(sc)
-    val before = jobs.get()
+    val (j, q) = (jobs.get(), sqlExecutions.get())
     body
     ListenerBusDrain(sc)
-    jobs.get() - before
+    (jobs.get() - j, sqlExecutions.get() - q)
   }
 
   override def close(): Unit = sc.removeSparkListener(listener)
