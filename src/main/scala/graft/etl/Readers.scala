@@ -53,19 +53,11 @@ object Readers {
     * until a new session (same contract as a metastore table without
     * REFRESH).
     */
-  private val tableCache =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), DataFrame]()
+  private val tableCache = new graft.SessionMemo[String, DataFrame]
 
   def table(spark: SparkSession, sfDir: String, name: String): DataFrame = {
-    // evict dead sessions first: a cached DataFrame pins its whole session
-    // (QueryExecution → SessionState → FileIndex), and a JVM that cycles
-    // sessions (the test suites; a session-per-tenant driver) must not
-    // accumulate stopped ones for its lifetime. The map stays
-    // #live-sessions × #tables small, so the sweep is O(tiny) per call.
-    val it = tableCache.keySet.iterator()
-    while (it.hasNext) if (it.next()._1.sparkContext.isStopped) it.remove()
-    tableCache.computeIfAbsent((spark, s"$sfDir/$name.parquet"),
-      kv => kv._1.read.parquet(kv._2))
+    val path = s"$sfDir/$name.parquet"
+    tableCache(spark, path)(spark.read.parquet(path))
   }
 
   /** ORC source with an explicit schema (columnar like parquet — column

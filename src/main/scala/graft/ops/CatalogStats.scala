@@ -22,8 +22,7 @@ import org.apache.spark.sql.SparkSession
   */
 object CatalogStats {
 
-  private val done =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), Map[String, String]]()
+  private val done = new graft.SessionMemo[String, Map[String, String]]
 
   /** Key columns that get column-level stats per table. */
   private val StarKeys: Map[String, Seq[String]] = Map(
@@ -37,21 +36,17 @@ object CatalogStats {
     * Idempotent and memoized — the ANALYZE scans run once per
     * (session, dir).
     */
-  def ensureStarStats(spark: SparkSession, dir: String): Map[String, String] = {
-    val it = done.keySet.iterator()
-    while (it.hasNext) if (it.next()._1.sparkContext.isStopped) it.remove()
-    done.computeIfAbsent((spark, dir), { kv =>
-      val (s, d) = (kv._1, kv._2)
+  def ensureStarStats(spark: SparkSession, dir: String): Map[String, String] =
+    done(spark, dir) {
       StarKeys.map { case (table, keys) =>
-        val name = s"graft_cbo_${table}_" + dirDigest(d)
-        s.sql(s"CREATE TABLE IF NOT EXISTS $name USING parquet " +
-          s"LOCATION '$d/$table.parquet'")
-        s.sql(s"ANALYZE TABLE $name COMPUTE STATISTICS FOR COLUMNS " +
+        val name = s"graft_cbo_${table}_" + dirDigest(dir)
+        spark.sql(s"CREATE TABLE IF NOT EXISTS $name USING parquet " +
+          s"LOCATION '$dir/$table.parquet'")
+        spark.sql(s"ANALYZE TABLE $name COMPUTE STATISTICS FOR COLUMNS " +
           keys.mkString(", "))
         table -> name
       }
-    })
-  }
+    }
 
   /** Collision-resistant table-name suffix for a data dir (first 12 hex
     * chars of the path's md5 — 48 bits, vs `String.hashCode`'s trivially

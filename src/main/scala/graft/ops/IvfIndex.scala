@@ -30,8 +30,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   */
 object IvfIndex {
 
-  private val built =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), String]()
+  private val built = new graft.SessionMemo[String, String]
 
   /** Write `assigned` (any frame carrying `centroid_id`) partitioned by
     * centroid under `path`, once per (session, path); returns `path`.
@@ -40,22 +39,16 @@ object IvfIndex {
     * loss lands on identical bytes.
     */
   def ensure(spark: SparkSession, path: String,
-             assigned: => DataFrame): String = {
-    val it = built.keySet.iterator()
-    while (it.hasNext) if (it.next()._1.sparkContext.isStopped) it.remove()
-    built.computeIfAbsent((spark, path), { _ =>
+             assigned: => DataFrame): String =
+    built(spark, path) {
       assigned.write.partitionBy("centroid_id").mode("overwrite").parquet(path)
       path
-    })
-  }
+    }
 
   /** Drop the memo for `spark` (all paths) — the index files stay on
     * disk; the next [[ensure]] rewrites them.
     */
-  def invalidate(spark: SparkSession): Unit = {
-    val it = built.keySet.iterator()
-    while (it.hasNext) if (it.next()._1 eq spark) it.remove()
-  }
+  def invalidate(spark: SparkSession): Unit = built.invalidate(spark)
 
   /** Where [[graft.streaming.IvfAppendSink]] lands streamed appends for
     * the base at `path` (`batch_id=<b>/centroid_id=<c>/…`).

@@ -41,6 +41,13 @@ object Multimodal {
     StructField("n_bytes", LongType)
   ))
 
+  /** Row encoder of a media table: (media_id, media, meta). */
+  private val mediaEncoder = org.apache.spark.sql.catalyst.encoders.RowEncoder
+    .encoderFor(StructType(Seq(
+      StructField("media_id", LongType),
+      StructField("media", BinaryType),
+      StructField("meta", metaSchema))))
+
   /** Feature record produced per media item. `n_bytes` counts decoded
     * raster bytes (width × height), not container bytes.
     */
@@ -239,12 +246,6 @@ object Multimodal {
     */
   def encodedMediaTable(df: DataFrame, idCol: String, textCol: String,
                         sourceCol: String): DataFrame = {
-    val schema = StructType(Seq(
-      StructField("media_id", LongType),
-      StructField("media", BinaryType),
-      StructField("meta", metaSchema)))
-    val enc = org.apache.spark.sql.catalyst.encoders.RowEncoder
-      .encoderFor(schema)
     df.select(col(idCol).cast(LongType), col(textCol), col(sourceCol))
       .mapPartitions { rows =>
         rows.map { r =>
@@ -253,7 +254,7 @@ object Multimodal {
           Row(r.getLong(0), png,
             Row("image/png", r.getString(2), png.length.toLong))
         }
-      }(enc)
+      }(mediaEncoder)
   }
 
   /** Per-partition batched feature extraction over a PNG media table
@@ -465,12 +466,6 @@ object Multimodal {
     */
   def resizeMedia(media: DataFrame, targetW: Int, targetH: Int,
                   batchSize: Int = 64): DataFrame = {
-    val schema = StructType(Seq(
-      StructField("media_id", LongType),
-      StructField("media", BinaryType),
-      StructField("meta", metaSchema)))
-    val enc = org.apache.spark.sql.catalyst.encoders.RowEncoder
-      .encoderFor(schema)
     media.select("media_id", "media", "meta").mapPartitions { rows =>
       rows.grouped(batchSize).flatMap { batch =>
         batch.iterator.map { r =>
@@ -497,7 +492,7 @@ object Multimodal {
             Row(meta.getString(0), meta.getString(1), png.length.toLong))
         }
       }
-    }(enc)
+    }(mediaEncoder)
   }
 
   /** The PNG writer proper: filter (all five types, cycling per row),
@@ -681,12 +676,6 @@ object Multimodal {
     */
   def encodedAudioTable(df: DataFrame, idCol: String, textCol: String,
                         sourceCol: String): DataFrame = {
-    val schema = StructType(Seq(
-      StructField("media_id", LongType),
-      StructField("media", BinaryType),
-      StructField("meta", metaSchema)))
-    val enc = org.apache.spark.sql.catalyst.encoders.RowEncoder
-      .encoderFor(schema)
     df.select(col(idCol).cast(LongType), col(textCol), col(sourceCol))
       .mapPartitions { rows =>
         rows.map { r =>
@@ -697,7 +686,7 @@ object Multimodal {
             channels = 1 + (id % 2).toInt)
           Row(id, wav, Row("audio/wav", r.getString(2), wav.length.toLong))
         }
-      }(enc)
+      }(mediaEncoder)
   }
 
   /** Batched per-partition audio feature extraction over a WAV media
@@ -816,12 +805,6 @@ object Multimodal {
     */
   def encodedVideoTable(df: DataFrame, idCol: String, textCol: String,
                         sourceCol: String): DataFrame = {
-    val schema = StructType(Seq(
-      StructField("media_id", LongType),
-      StructField("media", BinaryType),
-      StructField("meta", metaSchema)))
-    val enc = org.apache.spark.sql.catalyst.encoders.RowEncoder
-      .encoderFor(schema)
     df.select(col(idCol).cast(LongType), col(textCol), col(sourceCol))
       .mapPartitions { rows =>
         rows.map { r =>
@@ -831,7 +814,7 @@ object Multimodal {
             nFrames = 2 + (id % 3).toInt)
           Row(id, vid, Row("video/gvid", r.getString(2), vid.length.toLong))
         }
-      }(enc)
+      }(mediaEncoder)
   }
 
   val videoFrameSchema: StructType = StructType(Seq(

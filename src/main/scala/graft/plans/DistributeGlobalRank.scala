@@ -2,7 +2,7 @@ package graft.plans
 
 import graft.ops.Ranking
 import graft.ops.Ranking.{RunMax, RunMin, RunSum, RunningSpec}
-import org.apache.spark.sql.{Column, GraftColumnBridge, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, GraftColumnBridge, SparkSession}
 import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.catalyst.expressions.aggregate.{AggregateExpression, Average, Count, First, Max, Min, Sum}
 import org.apache.spark.sql.catalyst.plans.logical.{Filter, LogicalPlan, Project, Window, WindowGroupLimit}
@@ -218,15 +218,6 @@ object DistributeGlobalRank extends Rule[LogicalPlan] {
     // to-unbounded frame): ONE global aggregate, broadcast to every row
     case class Whole(op: AggOp, value: Option[Expression], dt: DataType)
       extends RankFn
-    // sum/avg only over integral inputs: the distributed combine
-    // re-associates the addition, which is exact for integers (to 2^53
-    // for avg's double division) but would drift ULPs on fractional
-    // types vs the naive sequential fold — a rewrite must never change
-    // stored bits, so fractional running sums stay naive.
-    def integral(dt: DataType): Boolean = dt match {
-      case ByteType | ShortType | IntegerType | LongType => true
-      case _ => false
-    }
     // min/max are order-insensitive — exact for any orderable atomic
     def minMaxOk(dt: DataType): Boolean = dt match {
       case _: NumericType | StringType | TimestampType | TimestampNTZType |
@@ -652,6 +643,20 @@ object DistributeGlobalRank extends Rule[LogicalPlan] {
         } ++
         firstOuts.values.toSeq.map(_._2) ++
         wholeOuts.values.toSeq.flatMap { case (_, m, c) => m +: c.toSeq }: _*)
+    splice(w, ranked, outNames, funcs).map { p =>
+      logInfo(s"distributing ${funcs.size} unpartitioned rank function(s) " +
+        s"over ${w.orderSpec.map(_.sql).mkString(", ")}")
+      p
+    }
+  }
+
+  /** Splice `ranked` in place of window `w`. `ranked` carries
+    * `w.child`'s columns plus one column per window function of
+    * `funcs`, named `outNames` in the same order; each keeps the name
+    * and id the window gave it. None when the replacement lost a column.
+    */
+  private def splice(w: Window, ranked: DataFrame, outNames: Seq[String],
+                     funcs: Seq[(String, ExprId, Any)]): Option[LogicalPlan] = {
     // fully optimize the replacement in its own QueryExecution: the
     // outer optimizer's pushdown/pruning batches are already past, so
     // the splice must arrive pre-optimized (output ids are stable across
@@ -671,8 +676,6 @@ object DistributeGlobalRank extends Rule[LogicalPlan] {
     val ranks = funcs.zip(outAttrs).map { case ((name, id, _), attr) =>
       Alias(attr, name)(exprId = id)
     }
-    logInfo(s"distributing ${funcs.size} unpartitioned rank function(s) " +
-      s"over ${w.orderSpec.map(_.sql).mkString(", ")}")
     Some(Project(restored ++ ranks, analyzed))
   }
 
@@ -832,10 +835,6 @@ object DistributeGlobalRank extends Rule[LogicalPlan] {
                       range: Boolean) extends PFn
     case class PAvg(value: Expression, dt: DataType,
                     range: Boolean) extends PFn
-    def integral(dt: DataType): Boolean = dt match {
-      case ByteType | ShortType | IntegerType | LongType => true
-      case _ => false
-    }
     val funcs: Seq[(String, ExprId, PFn)] = w.windowExpressions.map {
       case a @ Alias(WindowExpression(f, spec), n)
           if spec.partitionSpec == w.partitionSpec &&
@@ -1139,22 +1138,12 @@ object DistributeGlobalRank extends Rule[LogicalPlan] {
     ranked = ranked.drop(
       (if (funcs.exists(_._3 == PRowNum)) Seq(tmpRank) else Nil) ++
         sums.values.toSeq.map(_._2): _*)
-    val analyzed = ranked.queryExecution.optimizedPlan
-    val byName = analyzed.output.map(a => a.name -> a).toMap
-    val outAttrs = outNames.map(n => byName.getOrElse(n, return None))
-    val childAttrs = analyzed.output.filterNot(a => outNames.contains(a.name))
-    if (childAttrs.size != w.child.output.size) return None
-    val restored = w.child.output.zip(childAttrs).map { case (orig, got) =>
-      if (orig.exprId == got.exprId) got
-      else Alias(got, orig.name)(exprId = orig.exprId)
+    splice(w, ranked, outNames, funcs).map { p =>
+      logInfo(s"distributing ${funcs.size} partitioned window function(s) " +
+        s"over ${keys.map(_.sql).mkString(", ")} " +
+        s"(stats NDV<=$ndv, partitions=$parts)")
+      p
     }
-    val ranks = funcs.zip(outAttrs).map { case ((name, id, _), attr) =>
-      Alias(attr, name)(exprId = id)
-    }
-    logInfo(s"distributing ${funcs.size} partitioned window function(s) " +
-      s"over ${keys.map(_.sql).mkString(", ")} " +
-      s"(stats NDV<=$ndv, partitions=$parts)")
-    Some(Project(restored ++ ranks, analyzed))
   }
 
   /** The numeric range-split proxy for the leading sort key: monotone
@@ -1197,13 +1186,16 @@ object DistributeGlobalRank extends Rule[LogicalPlan] {
       case (Descending, NullsLast) => c.desc_nulls_last
     }
 
-  private def sortCol(so: SortOrder): Column = {
-    val c = GraftColumnBridge.column(so.child)
-    (so.direction, so.nullOrdering) match {
-      case (Ascending, NullsFirst) => c.asc_nulls_first
-      case (Ascending, NullsLast) => c.asc_nulls_last
-      case (Descending, NullsFirst) => c.desc_nulls_first
-      case (Descending, NullsLast) => c.desc_nulls_last
-    }
+  private def sortCol(so: SortOrder): Column =
+    directed(GraftColumnBridge.column(so.child), so.direction, so.nullOrdering)
+
+  // sum/avg only over integral inputs: the distributed combine
+  // re-associates the addition, which is exact for integers (to 2^53
+  // for avg's double division) but would drift ULPs on fractional
+  // types vs the naive sequential fold — a rewrite must never change
+  // stored bits, so fractional running sums stay naive.
+  private def integral(dt: DataType): Boolean = dt match {
+    case ByteType | ShortType | IntegerType | LongType => true
+    case _ => false
   }
 }

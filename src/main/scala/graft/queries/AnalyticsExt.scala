@@ -280,17 +280,26 @@ object AnalyticsExt {
       |  EXISTS (SELECT 1 FROM orders WHERE o_custkey = c_custkey) AS has_orders
       |FROM customer ORDER BY c_custkey""".stripMargin
 
+  /** The as-of keys' two sides from `events`: clicks
+    * `(event_id, user_id, ts)` and purchases
+    * `(user_id, ts, event_id, value)`.
+    */
+  private def clicksAndPurchases(spark: SparkSession, dir: String)
+      : (DataFrame, DataFrame) = {
+    val events = Readers.events(spark, dir)
+    (events.filter(col("event_type") === "click")
+       .select("event_id", "user_id", "ts"),
+     events.filter(col("event_type") === "purchase")
+       .select("user_id", "ts", "event_id", "value"))
+  }
+
   /** Backward as-of join inside the event stream: each click matched to
     * the same user's most recent purchase at or before it. See
     * [[graft.ops.AsOfJoin]] for why this is a union+window, not an
     * inequality join.
     */
   def joinAsof(spark: SparkSession, dir: String): DataFrame = {
-    val events = Readers.events(spark, dir)
-    val clicks = events.filter(col("event_type") === "click")
-      .select("event_id", "user_id", "ts")
-    val purchases = events.filter(col("event_type") === "purchase")
-      .select("user_id", "ts", "event_id", "value")
+    val (clicks, purchases) = clicksAndPurchases(spark, dir)
     AsOfJoin.backward(clicks, purchases, key = "user_id",
         leftTime = "ts", rightTime = "ts",
         rightPayload = Seq("event_id", "ts", "value"),
@@ -323,11 +332,7 @@ object AnalyticsExt {
     * pass; same |L|+|R| union-window shape, flipped frame).
     */
   def joinAsofForward(spark: SparkSession, dir: String): DataFrame = {
-    val events = Readers.events(spark, dir)
-    val clicks = events.filter(col("event_type") === "click")
-      .select("event_id", "user_id", "ts")
-    val purchases = events.filter(col("event_type") === "purchase")
-      .select("user_id", "ts", "event_id", "value")
+    val (clicks, purchases) = clicksAndPurchases(spark, dir)
     AsOfJoin.forward(clicks, purchases, key = "user_id",
         leftTime = "ts", rightTime = "ts",
         rightPayload = Seq("event_id", "ts", "value"),
@@ -363,11 +368,7 @@ object AnalyticsExt {
     * so gating equals filtering).
     */
   def joinAsofTolerance(spark: SparkSession, dir: String): DataFrame = {
-    val events = Readers.events(spark, dir)
-    val clicks = events.filter(col("event_type") === "click")
-      .select("event_id", "user_id", "ts")
-    val purchases = events.filter(col("event_type") === "purchase")
-      .select("user_id", "ts", "event_id", "value")
+    val (clicks, purchases) = clicksAndPurchases(spark, dir)
     AsOfJoin.backwardWithin(clicks, purchases, key = "user_id",
         leftTime = "ts", rightTime = "ts",
         rightPayload = Seq("event_id", "value"),
@@ -400,11 +401,7 @@ object AnalyticsExt {
     * which direction won. Two keyed window passes, never a pair join.
     */
   def joinAsofNearest(spark: SparkSession, dir: String): DataFrame = {
-    val events = Readers.events(spark, dir)
-    val clicks = events.filter(col("event_type") === "click")
-      .select("event_id", "user_id", "ts")
-    val purchases = events.filter(col("event_type") === "purchase")
-      .select("user_id", "ts", "event_id", "value")
+    val (clicks, purchases) = clicksAndPurchases(spark, dir)
     AsOfJoin.nearest(clicks, purchases, key = "user_id",
         leftTime = "ts", rightTime = "ts",
         rightPayload = Seq("event_id", "value"),
@@ -455,11 +452,7 @@ object AnalyticsExt {
     * wins, and no-match nulls.
     */
   def joinAsofNearestTolerance(spark: SparkSession, dir: String): DataFrame = {
-    val events = Readers.events(spark, dir)
-    val clicks = events.filter(col("event_type") === "click")
-      .select("event_id", "user_id", "ts")
-    val purchases = events.filter(col("event_type") === "purchase")
-      .select("user_id", "ts", "event_id", "value")
+    val (clicks, purchases) = clicksAndPurchases(spark, dir)
     AsOfJoin.nearestWithin(clicks, purchases, key = "user_id",
         leftTime = "ts", rightTime = "ts",
         rightPayload = Seq("event_id", "value"),

@@ -247,7 +247,10 @@ object BehaviorQueries {
       .orderBy("report_day")
   }
 
-  val rollingActiveUsersSql: String =
+  /** Each user's active days `ud`, the last day `mx`, and every
+    * (user, report day) pair a 7-day window puts the user in (`e`).
+    */
+  private def activeWindowCtes: String =
     """WITH ud AS (
       |  SELECT DISTINCT user_id,
       |    date_diff('day', DATE '1970-01-01',
@@ -258,7 +261,10 @@ object BehaviorQueries {
       |e AS (
       |  SELECT user_id, unnest(generate_series(day, day + 6)) AS report_day
       |  FROM ud
-      |)
+      |)""".stripMargin
+
+  val rollingActiveUsersSql: String =
+    s"""$activeWindowCtes
       |SELECT report_day, CAST(count(DISTINCT user_id) AS BIGINT)
       |  AS active_users
       |FROM e CROSS JOIN mx WHERE report_day <= mx
@@ -313,17 +319,7 @@ object BehaviorQueries {
   }
 
   val rollingActiveSketchSql: String =
-    """WITH ud AS (
-      |  SELECT DISTINCT user_id,
-      |    date_diff('day', DATE '1970-01-01',
-      |              CAST(CAST(ts AS TIMESTAMP) AS DATE)) AS day
-      |  FROM events
-      |),
-      |mx AS (SELECT max(day) AS mx FROM ud),
-      |e AS (
-      |  SELECT user_id, unnest(generate_series(day, day + 6)) AS report_day
-      |  FROM ud
-      |)
+    s"""$activeWindowCtes
       |SELECT report_day, CAST(count(DISTINCT user_id) AS BIGINT)
       |  AS active_users, TRUE AS ok
       |FROM e CROSS JOIN mx WHERE report_day <= mx

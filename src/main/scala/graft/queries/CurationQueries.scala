@@ -85,15 +85,7 @@ object CurationQueries {
   // The six-script routing has its own exact twin in langIdScriptsSql.
   val qualityFilterLangSql: String = {
     val stops = TextStats.Stopwords.map(s => s"'$s'").mkString(", ")
-    val langs = TextStats.LangProfiles.map(_._1)
-    val scoreExprs = TextStats.LangProfiles.map { case (l, ws) =>
-      val lst = ws.map(w => s"'$w'").mkString(", ")
-      s"len(list_filter(t, x -> list_contains([$lst], x)))::DOUBLE" +
-        s" / len(t) AS s_$l"
-    }.mkString(",\n    ")
-    val bestExpr = s"greatest(${langs.map("s_" + _).mkString(", ")})"
-    val predCase = langs.map(l => s"WHEN s_$l = best THEN '$l'")
-      .mkString(" ")
+    import TextQueries.LangScoreSql._
     val allowed = AllowedLangs.map(l => s"'$l'").mkString(", ")
     s"""WITH w AS (
        |  SELECT doc_id, text, string_split(text, ' ') AS w FROM documents
@@ -123,7 +115,7 @@ object CurationQueries {
        |         WHEN best <= 0.0::DOUBLE THEN 'und'
        |         ELSE CASE $predCase END END AS lang_pred
        |  FROM (SELECT doc_id, cjk, $bestExpr AS best,
-       |          ${langs.map(l => s"s_$l").mkString(", ")} FROM sc)
+       |          $scoreCols FROM sc)
        |),
        |ruled AS (
        |  SELECT s.doc_id, s.n_tokens, s.ttr, s.stopword_ratio,

@@ -85,7 +85,10 @@ object MultimodalQueries {
         Readers.table(spark, dir, "documents"), "doc_id", "text", "source")),
       "media_id")
 
-  val multimodalFeaturesSql: String =
+  /** Each document's raster geometry as the PNG encoder lays it out:
+    * byte length `n`, width `w` (≤ 64) and height `h`.
+    */
+  private def rasterCtes: String =
     """WITH g AS (
       |  SELECT doc_id, text,
       |    CAST(octet_length(text::BLOB) AS INTEGER) AS n,
@@ -96,7 +99,10 @@ object MultimodalQueries {
       |  SELECT doc_id, text, n, w,
       |    CAST(CASE WHEN n = 0 THEN 1 ELSE (n + w - 1) // w END AS INTEGER) AS h
       |  FROM g
-      |)
+      |)""".stripMargin
+
+  val multimodalFeaturesSql: String =
+    s"""$rasterCtes
       |SELECT doc_id AS media_id,
       |  CAST(w * h AS BIGINT) AS n_bytes,
       |  md5(text || repeat(chr(0), w * h - n)) AS digest,
@@ -222,17 +228,7 @@ object MultimodalQueries {
   }
 
   val multimodalQuarantineSql: String =
-    """WITH g AS (
-      |  SELECT doc_id, text,
-      |    CAST(octet_length(text::BLOB) AS INTEGER) AS n,
-      |    CAST(CASE WHEN octet_length(text::BLOB) = 0 THEN 1
-      |              ELSE least(octet_length(text::BLOB), 64) END AS INTEGER) AS w
-      |  FROM documents
-      |), d AS (
-      |  SELECT doc_id, text, n, w,
-      |    CAST(CASE WHEN n = 0 THEN 1 ELSE (n + w - 1) // w END AS INTEGER) AS h
-      |  FROM g
-      |)
+    s"""$rasterCtes
       |SELECT doc_id AS media_id,
       |  doc_id % 17 <> 0 AS ok,
       |  CASE WHEN doc_id % 17 = 0 THEN 'bad PNG signature byte 0' END AS error,

@@ -21,6 +21,10 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * plan must show hash-equi semi/anti joins, never a
   * BroadcastNestedLoopJoin (pinned in PlanShapeSpec).
   *
+  * Where both dialects accept the same text, a key runs its oracle
+  * `val` itself; a key keeps a Spark text of its own only where the
+  * dialects differ (`0.5D` vs `0.5::DOUBLE`, `DIV` vs `//`).
+  *
   * Scale notes (100 TB): after the rewrites these are ordinary shuffled
   * hash/sort-merge joins on the correlation key (`o_orderkey` /
   * `l_partkey`), so they partition and scale exactly like the explicit
@@ -56,15 +60,7 @@ object SqlSurface {
     */
   def q4OrderPriority(spark: SparkSession, dir: String): DataFrame = {
     registerViews(spark, dir)
-    spark.sql(
-      """SELECT o_orderpriority, count(*) AS order_count
-        |FROM orders
-        |WHERE o_orderdate >= TIMESTAMP '1996-01-01'
-        |  AND o_orderdate < TIMESTAMP '1997-01-01'
-        |  AND EXISTS (SELECT 1 FROM lineitem
-        |              WHERE l_orderkey = o_orderkey AND l_returnflag = 'R')
-        |GROUP BY o_orderpriority
-        |ORDER BY o_orderpriority""".stripMargin)
+    spark.sql(q4OrderPrioritySql)
   }
 
   val q4OrderPrioritySql: String =
@@ -114,21 +110,7 @@ object SqlSurface {
     */
   def q21WaitSuppliers(spark: SparkSession, dir: String): DataFrame = {
     registerViews(spark, dir)
-    spark.sql(
-      """SELECT s_name, count(*) AS numwait
-        |FROM supplier, lineitem l1, orders
-        |WHERE s_suppkey = l1.l_suppkey AND o_orderkey = l1.l_orderkey
-        |  AND o_orderstatus = 'F' AND l1.l_returnflag = 'R'
-        |  AND EXISTS (SELECT 1 FROM lineitem l2
-        |              WHERE l2.l_orderkey = l1.l_orderkey
-        |                AND l2.l_suppkey <> l1.l_suppkey)
-        |  AND NOT EXISTS (SELECT 1 FROM lineitem l3
-        |                  WHERE l3.l_orderkey = l1.l_orderkey
-        |                    AND l3.l_suppkey <> l1.l_suppkey
-        |                    AND l3.l_returnflag = 'R')
-        |GROUP BY s_name
-        |ORDER BY numwait DESC, s_name
-        |LIMIT 100""".stripMargin)
+    spark.sql(q21WaitSuppliersSql)
   }
 
   val q21WaitSuppliersSql: String =
@@ -162,20 +144,7 @@ object SqlSurface {
     */
   def q2MinSupply(spark: SparkSession, dir: String): DataFrame = {
     registerViews(spark, dir)
-    spark.sql(
-      """SELECT p_partkey, p_name, s_name, n_name,
-        |  l_extendedprice AS supply_price
-        |FROM part, lineitem, supplier, nation, region
-        |WHERE p_partkey = l_partkey AND s_suppkey = l_suppkey
-        |  AND s_nationkey = n_nationkey AND n_regionkey = r_regionkey
-        |  AND r_name = 'EUROPE' AND p_size = 25
-        |  AND l_extendedprice = (
-        |    SELECT min(l2.l_extendedprice)
-        |    FROM lineitem l2, supplier s2, nation n2, region r2
-        |    WHERE l2.l_partkey = p_partkey AND s2.s_suppkey = l2.l_suppkey
-        |      AND s2.s_nationkey = n2.n_nationkey
-        |      AND n2.n_regionkey = r2.r_regionkey AND r2.r_name = 'EUROPE')
-        |ORDER BY p_partkey, s_name""".stripMargin)
+    spark.sql(q2MinSupplySql)
   }
 
   val q2MinSupplySql: String =
@@ -250,18 +219,7 @@ object SqlSurface {
     */
   def q15TopSupplier(spark: SparkSession, dir: String): DataFrame = {
     registerViews(spark, dir)
-    spark.sql(
-      """WITH revenue AS (
-        |  SELECT l_suppkey, sum(l_quantity) AS total_qty
-        |  FROM lineitem
-        |  WHERE l_shipdate >= TIMESTAMP '1997-01-01'
-        |    AND l_shipdate < TIMESTAMP '1997-04-01'
-        |  GROUP BY l_suppkey)
-        |SELECT s_suppkey, s_name, total_qty
-        |FROM supplier, revenue
-        |WHERE s_suppkey = l_suppkey
-        |  AND total_qty = (SELECT max(total_qty) FROM revenue)
-        |ORDER BY s_suppkey""".stripMargin)
+    spark.sql(q15TopSupplierSql)
   }
 
   val q15TopSupplierSql: String =
@@ -383,15 +341,7 @@ object SqlSurface {
     */
   def q13CustomerDistribution(spark: SparkSession, dir: String): DataFrame = {
     registerViews(spark, dir)
-    spark.sql(
-      """SELECT c_count, count(*) AS custdist
-        |FROM (SELECT c_custkey, count(o_orderkey) AS c_count
-        |      FROM customer LEFT OUTER JOIN orders
-        |        ON c_custkey = o_custkey
-        |        AND o_orderpriority = '1-URGENT'
-        |      GROUP BY c_custkey)
-        |GROUP BY c_count
-        |ORDER BY custdist DESC, c_count DESC""".stripMargin)
+    spark.sql(q13CustomerDistributionSql)
   }
 
   val q13CustomerDistributionSql: String =
@@ -504,14 +454,7 @@ object SqlSurface {
     */
   def lateralTopkOrders(spark: SparkSession, dir: String): DataFrame = {
     registerViews(spark, dir)
-    spark.sql(
-      """SELECT c_custkey, t.o_orderkey, t.o_totalprice
-        |FROM customer, LATERAL (
-        |  SELECT o_orderkey, o_totalprice FROM orders
-        |  WHERE o_custkey = c_custkey
-        |  ORDER BY o_totalprice DESC, o_orderkey LIMIT 3) t
-        |WHERE c_custkey < 100
-        |ORDER BY c_custkey, o_totalprice DESC, o_orderkey""".stripMargin)
+    spark.sql(lateralTopkOrdersSql)
   }
 
   val lateralTopkOrdersSql: String =
@@ -535,17 +478,7 @@ object SqlSurface {
     */
   def globalRankAuto(spark: SparkSession, dir: String): DataFrame = {
     registerViews(spark, dir)
-    spark.sql(
-      """SELECT q, CAST(count(*) AS BIGINT) AS n,
-        |  CAST(min(rn) AS BIGINT) AS rn_lo, CAST(max(rn) AS BIGINT) AS rn_hi,
-        |  round(min(o_totalprice), 2) AS price_lo,
-        |  round(max(o_totalprice), 2) AS price_hi
-        |FROM (
-        |  SELECT o_totalprice,
-        |    row_number() OVER (ORDER BY o_totalprice DESC, o_orderkey) AS rn,
-        |    ntile(8) OVER (ORDER BY o_totalprice DESC, o_orderkey) AS q
-        |  FROM orders)
-        |GROUP BY q ORDER BY q""".stripMargin)
+    spark.sql(globalRankAutoSql)
   }
 
   val globalRankAutoSql: String =
@@ -574,16 +507,7 @@ object SqlSurface {
     */
   def globalRankDense(spark: SparkSession, dir: String): DataFrame = {
     registerViews(spark, dir)
-    spark.sql(
-      """SELECT dr, CAST(count(*) AS BIGINT) AS n,
-        |  CAST(min(r) AS BIGINT) AS r_lo, CAST(max(r) AS BIGINT) AS r_hi,
-        |  round(min(l_quantity), 1) AS qty
-        |FROM (
-        |  SELECT l_quantity,
-        |    dense_rank() OVER (ORDER BY l_quantity DESC) AS dr,
-        |    rank() OVER (ORDER BY l_quantity DESC) AS r
-        |  FROM lineitem)
-        |GROUP BY dr ORDER BY dr""".stripMargin)
+    spark.sql(globalRankDenseSql)
   }
 
   val globalRankDenseSql: String =
@@ -618,18 +542,7 @@ object SqlSurface {
     */
   def globalRunningAuto(spark: SparkSession, dir: String): DataFrame = {
     registerViews(spark, dir)
-    spark.sql(
-      """SELECT l_shipdate, CAST(max(cum_n) AS BIGINT) AS n_cum,
-        |  CAST(max(cum_qty) AS BIGINT) AS qty_cum,
-        |  CAST(max(cum_qty) AS DOUBLE) / CAST(max(cum_n) AS DOUBLE) AS avg_cum,
-        |  CAST(max(cum_max) AS BIGINT) AS max_cum
-        |FROM (
-        |  SELECT l_shipdate,
-        |    count(*) OVER (ORDER BY l_shipdate) AS cum_n,
-        |    sum(CAST(l_quantity AS BIGINT)) OVER (ORDER BY l_shipdate) AS cum_qty,
-        |    max(CAST(l_quantity AS BIGINT)) OVER (ORDER BY l_shipdate) AS cum_max
-        |  FROM lineitem)
-        |GROUP BY l_shipdate ORDER BY l_shipdate""".stripMargin)
+    spark.sql(globalRunningAutoSql)
   }
 
   val globalRunningAutoSql: String =
@@ -655,22 +568,7 @@ object SqlSurface {
     */
   def globalRunningRows(spark: SparkSession, dir: String): DataFrame = {
     registerViews(spark, dir)
-    spark.sql(
-      """SELECT o_orderkey, cum_cents, cum_n, min_price
-        |FROM (
-        |  SELECT o_orderkey,
-        |    CAST(sum(CAST(round(o_totalprice * 100) AS BIGINT)) OVER
-        |      (ORDER BY o_orderkey
-        |       ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT) AS cum_cents,
-        |    count(*) OVER
-        |      (ORDER BY o_orderkey
-        |       ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS cum_n,
-        |    min(o_totalprice) OVER
-        |      (ORDER BY o_orderkey
-        |       ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS min_price
-        |  FROM orders)
-        |WHERE o_orderkey % 97 = 0
-        |ORDER BY o_orderkey""".stripMargin)
+    spark.sql(globalRunningRowsSql)
   }
 
   val globalRunningRowsSql: String =
@@ -706,18 +604,7 @@ object SqlSurface {
     */
   def globalOffsetAuto(spark: SparkSession, dir: String): DataFrame = {
     registerViews(spark, dir)
-    spark.sql(
-      """SELECT o_orderkey, prev_price, next2_key, first_price, prev3
-        |FROM (
-        |  SELECT o_orderkey,
-        |    lag(o_totalprice) OVER (ORDER BY o_orderkey) AS prev_price,
-        |    lead(o_orderkey, 2) OVER (ORDER BY o_orderkey) AS next2_key,
-        |    first_value(o_totalprice) OVER (ORDER BY o_orderkey) AS first_price,
-        |    lag(o_totalprice, 3, CAST(-1 AS DOUBLE)) OVER
-        |      (ORDER BY o_orderkey) AS prev3
-        |  FROM orders)
-        |WHERE o_orderkey % 97 = 0
-        |ORDER BY o_orderkey""".stripMargin)
+    spark.sql(globalOffsetAutoSql)
   }
 
   val globalOffsetAutoSql: String =
@@ -745,17 +632,7 @@ object SqlSurface {
     */
   def globalShareAuto(spark: SparkSession, dir: String): DataFrame = {
     registerViews(spark, dir)
-    spark.sql(
-      """SELECT l_returnflag, CAST(sum(qty) AS BIGINT) AS flag_qty,
-        |  CAST(max(total_qty) AS BIGINT) AS total_qty,
-        |  CAST(max(total_n) AS BIGINT) AS total_n,
-        |  CAST(sum(qty) AS DOUBLE) / CAST(max(total_qty) AS DOUBLE) AS share
-        |FROM (
-        |  SELECT l_returnflag, CAST(l_quantity AS BIGINT) AS qty,
-        |    sum(CAST(l_quantity AS BIGINT)) OVER () AS total_qty,
-        |    count(*) OVER () AS total_n
-        |  FROM lineitem)
-        |GROUP BY l_returnflag ORDER BY l_returnflag""".stripMargin)
+    spark.sql(globalShareAutoSql)
   }
 
   val globalShareAutoSql: String =
@@ -844,30 +721,39 @@ object SqlSurface {
     */
   def windowPartitionedAuto(spark: SparkSession, dir: String): DataFrame = {
     val t = graft.ops.CatalogStats.ensureStarStats(spark, dir)
-    val sql =
-      s"""SELECT l_orderkey, l_linenumber, rn, cum FROM (
-         |  SELECT l_orderkey, l_linenumber,
-         |    row_number() OVER (PARTITION BY l_linenumber
-         |                       ORDER BY l_orderkey) AS rn,
-         |    sum(l_cents) OVER (PARTITION BY l_linenumber
-         |      ORDER BY l_orderkey
-         |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS cum
-         |  FROM (SELECT l_linenumber, l_orderkey,
-         |          CAST(sum(CAST(round(l_extendedprice*100) AS BIGINT))
-         |            AS BIGINT) AS l_cents
-         |        FROM ${t("lineitem")} GROUP BY 1, 2))
-         |WHERE l_orderkey % 37 = 0
-         |ORDER BY l_linenumber, l_orderkey""".stripMargin
-    // floor 0: this key EXERCISES the rewritten plan tri-scale (that is
-    // what it demonstrates and what the bench tracks); the production
-    // default refuses below the measured rows-per-key crossover, where
-    // the naive plan wins — honest cost: ~2× slower than naive at sf0.1,
-    // near-flat vs naive's NDV(7)-capped linear growth (NOTES_r11/12)
+    partitionedRewrite(spark, windowPartitionedAutoText(
+      "l_orderkey, l_linenumber, rn, cum", t("lineitem")))
+  }
+
+  /** `sql` planned under CBO with the partitioned rewrite's rows-per-key
+    * floor at 0. Floor 0: these keys EXERCISE the rewritten plan
+    * tri-scale (that is what they demonstrate and what the bench
+    * tracks); the production default refuses below the measured
+    * rows-per-key crossover, where the naive plan wins — honest cost:
+    * ~2× slower than naive at sf0.1, near-flat vs naive's NDV(7)-capped
+    * linear growth (NOTES_r11/12).
+    */
+  private def partitionedRewrite(spark: SparkSession, sql: String): DataFrame =
     graft.ops.CatalogStats.withConf(spark,
       DistributeGlobalRank.PartitionedMinRowsKey -> "0") {
       graft.ops.CatalogStats.cboOptimized(spark)(spark.sql(sql))
     }
-  }
+
+  /** [[windowPartitionedAuto]]'s query over `lineitem`, projecting `out`. */
+  private def windowPartitionedAutoText(out: String, lineitem: String): String =
+    s"""SELECT $out FROM (
+       |  SELECT l_orderkey, l_linenumber,
+       |    row_number() OVER (PARTITION BY l_linenumber
+       |                       ORDER BY l_orderkey) AS rn,
+       |    sum(l_cents) OVER (PARTITION BY l_linenumber
+       |      ORDER BY l_orderkey
+       |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS cum
+       |  FROM (SELECT l_linenumber, l_orderkey,
+       |          CAST(sum(CAST(round(l_extendedprice*100) AS BIGINT))
+       |            AS BIGINT) AS l_cents
+       |        FROM $lineitem GROUP BY 1, 2))
+       |WHERE l_orderkey % 37 = 0
+       |ORDER BY l_linenumber, l_orderkey""".stripMargin
 
   /** The RANGE-frame leg of the partitioned rewrite, on the RAW
     * lineitem: `sum(cents) OVER (PARTITION BY l_linenumber ORDER BY
@@ -885,24 +771,26 @@ object SqlSurface {
   def windowPartitionedRangeAuto(spark: SparkSession, dir: String)
   : DataFrame = {
     val t = graft.ops.CatalogStats.ensureStarStats(spark, dir)
-    val sql =
-      s"""SELECT l_orderkey, l_linenumber, cum, cnt FROM (
-         |  SELECT l_orderkey, l_linenumber,
-         |    sum(l_cents) OVER (PARTITION BY l_linenumber
-         |                       ORDER BY l_orderkey) AS cum,
-         |    count(*) OVER (PARTITION BY l_linenumber
-         |                   ORDER BY l_orderkey) AS cnt
-         |  FROM (SELECT l_orderkey, l_linenumber,
-         |          CAST(round(l_extendedprice*100) AS BIGINT) AS l_cents
-         |        FROM ${t("lineitem")}))
-         |WHERE l_orderkey % 41 = 0
-         |ORDER BY l_linenumber, l_orderkey, cum""".stripMargin
-    // floor 0 for the same demo reason as [[windowPartitionedAuto]]
-    graft.ops.CatalogStats.withConf(spark,
-      DistributeGlobalRank.PartitionedMinRowsKey -> "0") {
-      graft.ops.CatalogStats.cboOptimized(spark)(spark.sql(sql))
-    }
+    partitionedRewrite(spark, windowPartitionedRangeAutoText(
+      "l_orderkey, l_linenumber, cum, cnt", t("lineitem")))
   }
+
+  /** [[windowPartitionedRangeAuto]]'s query over `lineitem`, projecting
+    * `out`.
+    */
+  private def windowPartitionedRangeAutoText(out: String, lineitem: String)
+      : String =
+    s"""SELECT $out FROM (
+       |  SELECT l_orderkey, l_linenumber,
+       |    sum(l_cents) OVER (PARTITION BY l_linenumber
+       |                       ORDER BY l_orderkey) AS cum,
+       |    count(*) OVER (PARTITION BY l_linenumber
+       |                   ORDER BY l_orderkey) AS cnt
+       |  FROM (SELECT l_orderkey, l_linenumber,
+       |          CAST(round(l_extendedprice*100) AS BIGINT) AS l_cents
+       |        FROM $lineitem))
+       |WHERE l_orderkey % 41 = 0
+       |ORDER BY l_linenumber, l_orderkey, cum""".stripMargin
 
   /** The STRING-key leg of the partitioned rewrite: `PARTITION BY
     * l_returnflag` (a 3-value string — the same shape as the analyst's
@@ -918,81 +806,45 @@ object SqlSurface {
   def windowPartitionedStringAuto(spark: SparkSession, dir: String)
   : DataFrame = {
     val t = graft.ops.CatalogStats.ensureStarStats(spark, dir)
-    val sql =
-      s"""SELECT l_orderkey, l_returnflag, rn, cum FROM (
-         |  SELECT l_orderkey, l_returnflag,
-         |    row_number() OVER (PARTITION BY l_returnflag
-         |                       ORDER BY l_orderkey) AS rn,
-         |    sum(l_cents) OVER (PARTITION BY l_returnflag
-         |      ORDER BY l_orderkey
-         |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS cum
-         |  FROM (SELECT l_returnflag, l_orderkey,
-         |          CAST(sum(CAST(round(l_extendedprice*100) AS BIGINT))
-         |            AS BIGINT) AS l_cents
-         |        FROM ${t("lineitem")} GROUP BY 1, 2))
-         |WHERE l_orderkey % 43 = 0
-         |ORDER BY l_returnflag, l_orderkey""".stripMargin
-    graft.ops.CatalogStats.withConf(spark,
-      DistributeGlobalRank.PartitionedMinRowsKey -> "0") {
-      graft.ops.CatalogStats.cboOptimized(spark)(spark.sql(sql))
-    }
+    partitionedRewrite(spark, windowPartitionedStringAutoText(
+      "l_orderkey, l_returnflag, rn, cum", t("lineitem")))
   }
 
-  val windowPartitionedStringAutoSql: String =
-    """SELECT l_orderkey, l_returnflag, CAST(rn AS INTEGER) AS rn,
-      |  CAST(cum AS BIGINT) AS cum FROM (
-      |  SELECT l_orderkey, l_returnflag,
-      |    row_number() OVER (PARTITION BY l_returnflag
-      |                       ORDER BY l_orderkey) AS rn,
-      |    sum(l_cents) OVER (PARTITION BY l_returnflag
-      |      ORDER BY l_orderkey
-      |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS cum
-      |  FROM (SELECT l_returnflag, l_orderkey,
-      |          CAST(sum(CAST(round(l_extendedprice*100) AS BIGINT))
-      |            AS BIGINT) AS l_cents
-      |        FROM lineitem GROUP BY 1, 2))
-      |WHERE l_orderkey % 43 = 0
-      |ORDER BY l_returnflag, l_orderkey""".stripMargin
+  /** [[windowPartitionedStringAuto]]'s query over `lineitem`, projecting
+    * `out`.
+    */
+  private def windowPartitionedStringAutoText(out: String, lineitem: String)
+      : String =
+    s"""SELECT $out FROM (
+       |  SELECT l_orderkey, l_returnflag,
+       |    row_number() OVER (PARTITION BY l_returnflag
+       |                       ORDER BY l_orderkey) AS rn,
+       |    sum(l_cents) OVER (PARTITION BY l_returnflag
+       |      ORDER BY l_orderkey
+       |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS cum
+       |  FROM (SELECT l_returnflag, l_orderkey,
+       |          CAST(sum(CAST(round(l_extendedprice*100) AS BIGINT))
+       |            AS BIGINT) AS l_cents
+       |        FROM $lineitem GROUP BY 1, 2))
+       |WHERE l_orderkey % 43 = 0
+       |ORDER BY l_returnflag, l_orderkey""".stripMargin
 
-  val windowPartitionedRangeAutoSql: String =
-    """SELECT l_orderkey, l_linenumber, CAST(cum AS BIGINT) AS cum,
-      |  CAST(cnt AS BIGINT) AS cnt FROM (
-      |  SELECT l_orderkey, l_linenumber,
-      |    sum(l_cents) OVER (PARTITION BY l_linenumber
-      |                       ORDER BY l_orderkey) AS cum,
-      |    count(*) OVER (PARTITION BY l_linenumber
-      |                   ORDER BY l_orderkey) AS cnt
-      |  FROM (SELECT l_orderkey, l_linenumber,
-      |          CAST(round(l_extendedprice*100) AS BIGINT) AS l_cents
-      |        FROM lineitem))
-      |WHERE l_orderkey % 41 = 0
-      |ORDER BY l_linenumber, l_orderkey, cum""".stripMargin
+  // the oracles run the same text over the plain view names, with the
+  // result types DuckDB needs to match Spark's
+  val windowPartitionedStringAutoSql: String = windowPartitionedStringAutoText(
+    "l_orderkey, l_returnflag, CAST(rn AS INTEGER) AS rn,\n  CAST(cum AS BIGINT) AS cum",
+    "lineitem")
 
-  val windowPartitionedAutoSql: String =
-    """SELECT l_orderkey, l_linenumber, CAST(rn AS INTEGER) AS rn,
-      |  CAST(cum AS BIGINT) AS cum FROM (
-      |  SELECT l_orderkey, l_linenumber,
-      |    row_number() OVER (PARTITION BY l_linenumber
-      |                       ORDER BY l_orderkey) AS rn,
-      |    sum(l_cents) OVER (PARTITION BY l_linenumber
-      |      ORDER BY l_orderkey
-      |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS cum
-      |  FROM (SELECT l_linenumber, l_orderkey,
-      |          CAST(sum(CAST(round(l_extendedprice*100) AS BIGINT))
-      |            AS BIGINT) AS l_cents
-      |        FROM lineitem GROUP BY 1, 2))
-      |WHERE l_orderkey % 37 = 0
-      |ORDER BY l_linenumber, l_orderkey""".stripMargin
+  val windowPartitionedRangeAutoSql: String = windowPartitionedRangeAutoText(
+    "l_orderkey, l_linenumber, CAST(cum AS BIGINT) AS cum,\n  CAST(cnt AS BIGINT) AS cnt",
+    "lineitem")
+
+  val windowPartitionedAutoSql: String = windowPartitionedAutoText(
+    "l_orderkey, l_linenumber, CAST(rn AS INTEGER) AS rn,\n  CAST(cum AS BIGINT) AS cum",
+    "lineitem")
 
   val cboJoinReorderSql: String =
-    """SELECT l_returnflag, count(*) AS n_rows,
-      |  CAST(sum(l_quantity) AS BIGINT) AS qty_total,
-      |  CAST(count(DISTINCT o_orderkey) AS BIGINT) AS n_orders
-      |FROM lineitem l
-      |JOIN orders o ON l.l_orderkey = o.o_orderkey
-      |JOIN part p ON l.l_partkey = p.p_partkey
-      |WHERE p.p_partkey < 20
-      |GROUP BY l_returnflag ORDER BY l_returnflag""".stripMargin
+    cboStarSql(Seq("lineitem", "orders", "part").map(t => t -> t).toMap)
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     "cbo_join_reorder" -> cboJoinReorder,

@@ -60,6 +60,21 @@ object TextQueries {
        |)""".stripMargin
   }
 
+  /** DuckDB twin of the LSH band join over signature rows `a` and `b`:
+    * the OR of per-band equalities (any band equal makes a candidate)
+    * and the count of equal min-hash positions behind `est_sim`.
+    */
+  private def lshMatchSql: (String, String) = {
+    val bands = (0 until K by TextDedup.BandSize).map { s =>
+      "(" + (s until s + TextDedup.BandSize)
+        .map(i => s"a.mh$i = b.mh$i").mkString(" AND ") + ")"
+    }.mkString("\n     OR ")
+    val eqPos = (0 until K)
+      .map(i => s"CASE WHEN a.mh$i = b.mh$i THEN 1 ELSE 0 END")
+      .mkString(" + ")
+    (bands, eqPos)
+  }
+
   val minhashSignaturesSql: String =
     s"""WITH $shingleCte,
        |$sigCte
@@ -80,13 +95,7 @@ object TextQueries {
   }
 
   val dedupMinhashLshSql: String = {
-    val bands = (0 until K by TextDedup.BandSize).map { s =>
-      "(" + (s until s + TextDedup.BandSize)
-        .map(i => s"a.mh$i = b.mh$i").mkString(" AND ") + ")"
-    }.mkString("\n     OR ")
-    val eqPos = (0 until K)
-      .map(i => s"CASE WHEN a.mh$i = b.mh$i THEN 1 ELSE 0 END")
-      .mkString(" + ")
+    val (bands, eqPos) = lshMatchSql
     s"""WITH $shingleCte,
        |$sigCte
        |SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
@@ -130,13 +139,7 @@ object TextQueries {
   }
 
   val sourceOverlapSql: String = {
-    val bands = (0 until K by TextDedup.BandSize).map { s =>
-      "(" + (s until s + TextDedup.BandSize)
-        .map(i => s"a.mh$i = b.mh$i").mkString(" AND ") + ")"
-    }.mkString("\n     OR ")
-    val eqPos = (0 until K)
-      .map(i => s"CASE WHEN a.mh$i = b.mh$i THEN 1 ELSE 0 END")
-      .mkString(" + ")
+    val (bands, eqPos) = lshMatchSql
     s"""WITH $shingleCte,
        |$sigCte,
        |pairs AS (
@@ -302,7 +305,13 @@ object TextQueries {
     * those candidates → thresholded duplicate pairs. No stage is ever
     * quadratic in the corpus.
     */
-  def dedupPipeline(spark: SparkSession, dir: String): DataFrame = {
+  def dedupPipeline(spark: SparkSession, dir: String): DataFrame =
+    verifiedPairs(spark, dir).orderBy("doc_a", "doc_b")
+
+  /** The pipeline's Jaccard-verified duplicate pairs (`doc_a`, `doc_b`,
+    * `jaccard` ≥ 0.5), unordered.
+    */
+  private def verifiedPairs(spark: SparkSession, dir: String): DataFrame = {
     val docs = Readers.table(spark, dir, "documents")
     // one logical distinct-shingle frame for signature generation and
     // verification (MinHash over the distinct set is the same signature).
@@ -327,7 +336,6 @@ object TextQueries {
       .localCheckpoint(false)
     TextDedup.jaccardFromShingleSet(shSet, candidates, "doc_id")
       .filter(col("jaccard") >= 0.5)
-      .orderBy("doc_a", "doc_b")
   }
 
   /** Pipeline SQL without the final ORDER BY — reusable as a derived CTE
@@ -393,18 +401,7 @@ object TextQueries {
     * "keep one per group" dedup decisions.
     */
   def dedupClusters(spark: SparkSession, dir: String): DataFrame = {
-    val docs = Readers.table(spark, dir, "documents")
-    val shSet = TextDedup.distinctShingles(docs, "doc_id", "text")
-    val sigs = TextDedup.minhashFromShingleSet(shSet, "doc_id", K)
-    // pinned (r17): same three-consumer verification shape as
-    // [[dedupPipeline]] — without the pin the whole LSH candidate subtree
-    // re-executed per consumer inside the Jaccard stage
-    val candidates = TextDedup.lshCandidatePairs(sigs, "doc_id", K)
-      .select("doc_a", "doc_b")
-      .localCheckpoint(false)
-    val pairs = TextDedup.jaccardFromShingleSet(shSet, candidates, "doc_id")
-      .filter(col("jaccard") >= 0.5)
-      .select("doc_a", "doc_b")
+    val pairs = verifiedPairs(spark, dir).select("doc_a", "doc_b")
     val clusters = TextDedup.duplicateClusters(pairs)
     val sizes = clusters.groupBy("cluster")
       .agg(count(lit(1)).as("cluster_size"))
@@ -418,8 +415,8 @@ object TextQueries {
     * consumer (keep-best today; keep-first, stats, audits in a real
     * pipeline) — [[dedupClusters]]'s result is already
     * checkpoint-backed, so caching the frame pins only its tiny label
-    * table, not the pipeline. Same memoization + dead-session eviction
-    * discipline as [[graft.etl.Readers.table]].
+    * table, not the pipeline. Memoized per (session, dir) by a
+    * [[graft.SessionMemo]], like [[graft.etl.Readers.table]].
     *
     * Known trade of `localCheckpoint` backing: if an executor holding
     * the label-table blocks dies, consumers fail with a lost-block error
@@ -431,23 +428,16 @@ object TextQueries {
     * `dedup_keep_best` reports the marginal cost GIVEN shared
     * assignment, which is the production contract being modeled.
     */
-  private val clusterCache =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), DataFrame]()
+  private val clusterCache = new graft.SessionMemo[String, DataFrame]
 
-  def sharedClusters(spark: SparkSession, dir: String): DataFrame = {
-    val it = clusterCache.keySet.iterator()
-    while (it.hasNext) if (it.next()._1.sparkContext.isStopped) it.remove()
-    clusterCache.computeIfAbsent((spark, dir),
-      kv => dedupClusters(kv._1, kv._2))
-  }
+  def sharedClusters(spark: SparkSession, dir: String): DataFrame =
+    clusterCache(spark, dir)(dedupClusters(spark, dir))
 
   /** Drop the memoized cluster frame (all dirs) for `spark` — recovery
     * hook for lost `localCheckpoint` blocks after executor loss.
     */
-  def invalidateSharedClusters(spark: SparkSession): Unit = {
-    val it = clusterCache.keySet.iterator()
-    while (it.hasNext) if (it.next()._1 eq spark) it.remove()
-  }
+  def invalidateSharedClusters(spark: SparkSession): Unit =
+    clusterCache.invalidate(spark)
 
   val dedupClustersSql: String = {
     s"""WITH RECURSIVE vpairs AS (
@@ -780,6 +770,38 @@ object TextQueries {
       .localCheckpoint(false)
       .orderBy("doc_id")
 
+  /** DuckDB twin of [[TextStats.langIdStruct]]'s function-word layer
+    * over a token list `t`: `scoreExprs` defines one `s_<lang>` column
+    * per profile (the matched-token fraction), `scoreCols` lists them,
+    * `bestExpr` is their max and `predCase` the CASE arms naming the
+    * first profile that reaches it (profile order breaks ties, as in
+    * Spark). `cjkFraction` is the Han-script layer: the Han share `cjk`
+    * of `text`'s non-space characters (the quality filter's oracle
+    * spells it over `coalesce(text, '')` instead). The `lang_id`,
+    * `lang_id_multi`, `cjk_unsegmented` and `quality_filter_lang`
+    * oracles score through this one text.
+    */
+  private[queries] object LangScoreSql {
+    private val langs = TextStats.LangProfiles.map(_._1)
+    val scoreExprs: String = TextStats.LangProfiles.map { case (l, ws) =>
+      val lst = ws.map(w => s"'$w'").mkString(", ")
+      s"len(list_filter(t, x -> list_contains([$lst], x)))::DOUBLE" +
+        s" / len(t) AS s_$l"
+      // joined WITHOUT margin pipes: stripMargin runs after interpolation
+      // and must not eat anything inside generated fragments
+    }.mkString(",\n    ")
+    val scoreCols: String = langs.map("s_" + _).mkString(", ")
+    val bestExpr: String = s"greatest($scoreCols)"
+    val predCase: String = langs.map(l => s"WHEN s_$l = best THEN '$l'")
+      .mkString(" ")
+    val cjkFraction: String =
+      """CASE WHEN length(regexp_replace(text, '\s', '', 'g')) > 0
+        |      THEN length(regexp_replace(text,
+        |             '[^\x{4e00}-\x{9fff}]', '', 'g'))::DOUBLE
+        |           / length(regexp_replace(text, '\s', '', 'g'))
+        |      ELSE 0.0::DOUBLE END AS cjk""".stripMargin
+  }
+
   // Twin-simplification note (r16): langIdStruct now also routes
   // ja/ko/ar/hi/th from their script ranges; this oracle keeps the
   // Han-only CASE because its input provably contains NO characters
@@ -787,17 +809,7 @@ object TextQueries {
   // arms emit only Han), so the extra branches cannot fire. The full
   // six-script routing has its own exact twin in langIdScriptsSql.
   val langIdSql: String = {
-    val langs = TextStats.LangProfiles.map(_._1)
-    val scoreExprs = TextStats.LangProfiles.map { case (l, ws) =>
-      val lst = ws.map(w => s"'$w'").mkString(", ")
-      s"len(list_filter(t, x -> list_contains([$lst], x)))::DOUBLE" +
-        s" / len(t) AS s_$l"
-      // joined WITHOUT margin pipes: stripMargin runs after interpolation
-      // and must not eat anything inside generated fragments
-    }.mkString(",\n    ")
-    val bestExpr = s"greatest(${langs.map("s_" + _).mkString(", ")})"
-    val predCase = langs.map(l => s"WHEN s_$l = best THEN '$l'")
-      .mkString(" ")
+    import LangScoreSql._
     val cjkMin = TextStats.CjkMinFraction
     s"""WITH tok AS (
        |  SELECT doc_id, lang, coalesce(text, '') AS text,
@@ -806,15 +818,11 @@ object TextQueries {
        |), sc AS (
        |  SELECT doc_id, lang,
        |    $scoreExprs,
-       |    CASE WHEN length(regexp_replace(text, '\\s', '', 'g')) > 0
-       |      THEN length(regexp_replace(text,
-       |             '[^\\x{4e00}-\\x{9fff}]', '', 'g'))::DOUBLE
-       |           / length(regexp_replace(text, '\\s', '', 'g'))
-       |      ELSE 0.0::DOUBLE END AS cjk
+       |    $cjkFraction
        |  FROM tok
        |), dec AS (
        |  SELECT doc_id, lang, cjk, $bestExpr AS best,
-       |    ${langs.map(l => s"s_$l").mkString(", ")}
+       |    $scoreCols
        |  FROM sc
        |)
        |SELECT doc_id,
@@ -894,26 +902,14 @@ object TextQueries {
       .orderBy("lang_label")
   }
 
-  // Twin-simplification note (r16): langIdStruct now also routes
-  // ja/ko/ar/hi/th from their script ranges; this oracle keeps the
-  // Han-only CASE because its input provably contains NO characters
-  // from the new ranges (raw driver docs are Latin-only; the synth
-  // arms emit only Han), so the extra branches cannot fire. The full
-  // six-script routing has its own exact twin in langIdScriptsSql.
+  // Han-only CASE: see the twin-simplification note on langIdSql.
   val langIdMultiSql: String = {
-    val langs = TextStats.LangProfiles.map(_._1)
+    import LangScoreSql._
     val prof = TextStats.LangProfiles.toMap
     def vocabSql(ws: Seq[String]) = ws.map(w => s"'$w'").mkString("[", ", ", "]")
     def remapSql(ws: Seq[String]) =
       s"list_transform(w0, x -> list_extract(${vocabSql(ws)}, " +
         s"(length(x) % ${ws.size}) + 1))"
-    val scoreExprs = TextStats.LangProfiles.map { case (l, ws) =>
-      s"len(list_filter(t, x -> list_contains(${vocabSql(ws)}, x)))::DOUBLE" +
-        s" / len(t) AS s_$l"
-    }.mkString(",\n    ")
-    val bestExpr = s"greatest(${langs.map("s_" + _).mkString(", ")})"
-    val predCase = langs.map(l => s"WHEN s_$l = best THEN '$l'")
-      .mkString(" ")
     val cjkMin = TextStats.CjkMinFraction
     s"""WITH tok0 AS (
        |  SELECT doc_id, lang, string_split(coalesce(text, ''), ' ') AS w0
@@ -932,15 +928,11 @@ object TextQueries {
        |), sc AS (
        |  SELECT doc_id, lang,
        |    $scoreExprs,
-       |    CASE WHEN length(regexp_replace(text, '\\s', '', 'g')) > 0
-       |      THEN length(regexp_replace(text,
-       |             '[^\\x{4e00}-\\x{9fff}]', '', 'g'))::DOUBLE
-       |           / length(regexp_replace(text, '\\s', '', 'g'))
-       |      ELSE 0.0::DOUBLE END AS cjk
+       |    $cjkFraction
        |  FROM s2
        |), dec AS (
        |  SELECT doc_id, lang, cjk, $bestExpr AS best,
-       |    ${langs.map(l => s"s_$l").mkString(", ")}
+       |    $scoreCols
        |  FROM sc
        |), cl AS (
        |  SELECT doc_id, lang,
@@ -1027,25 +1019,12 @@ object TextQueries {
   }
 
   // lazy: SubstringSpanTokens is defined later in the file (val init order)
-  // Twin-simplification note (r16): langIdStruct now also routes
-  // ja/ko/ar/hi/th from their script ranges; this oracle keeps the
-  // Han-only CASE because its input provably contains NO characters
-  // from the new ranges (raw driver docs are Latin-only; the synth
-  // arms emit only Han), so the extra branches cannot fire. The full
-  // six-script routing has its own exact twin in langIdScriptsSql.
+  // Han-only CASE: see the twin-simplification note on langIdSql.
   lazy val cjkUnsegmentedSql: String = {
     val wn = SubstringSpanTokens
     val cn = CjkSpanChars
-    val langs = TextStats.LangProfiles.map(_._1)
+    import LangScoreSql._
     val vocab = HanVocab.map(w => s"'$w'").mkString("[", ", ", "]")
-    val scoreExprs = TextStats.LangProfiles.map { case (l, ws) =>
-      val lst = ws.map(w => s"'$w'").mkString(", ")
-      s"len(list_filter(t, x -> list_contains([$lst], x)))::DOUBLE" +
-        s" / len(t) AS s_$l"
-    }.mkString(",\n    ")
-    val bestExpr = s"greatest(${langs.map("s_" + _).mkString(", ")})"
-    val predCase = langs.map(l => s"WHEN s_$l = best THEN '$l'")
-      .mkString(" ")
     val cjkMin = TextStats.CjkMinFraction
     s"""WITH tok0 AS (
        |  SELECT doc_id, string_split(coalesce(text, ''), ' ') AS w0
@@ -1061,11 +1040,7 @@ object TextQueries {
        |), sc2 AS (
        |  SELECT doc_id, text,
        |    $scoreExprs,
-       |    CASE WHEN length(regexp_replace(text, '\\s', '', 'g')) > 0
-       |      THEN length(regexp_replace(text,
-       |             '[^\\x{4e00}-\\x{9fff}]', '', 'g'))::DOUBLE
-       |           / length(regexp_replace(text, '\\s', '', 'g'))
-       |      ELSE 0.0::DOUBLE END AS cjk
+       |    $cjkFraction
        |  FROM sc
        |), pred AS (
        |  SELECT doc_id,
@@ -1076,7 +1051,7 @@ object TextQueries {
        |    CAST(greatest(len(string_split(text, ' ')) - ${wn - 1}, 0)
        |      AS BIGINT) AS word_spans
        |  FROM (SELECT doc_id, text, cjk, $bestExpr AS best,
-       |          ${langs.map(l => s"s_$l").mkString(", ")}
+       |          $scoreCols
        |        FROM sc2)
        |), csh AS (
        |  SELECT DISTINCT doc_id,
@@ -1429,12 +1404,12 @@ object TextQueries {
       |FROM (SELECT unnest(string_split(text, ' ')) AS word FROM documents)
       |GROUP BY word ORDER BY word_id""".stripMargin
 
-  /** TF-IDF scores: term frequency × ln(N / document frequency), the
-    * classic sparse text-feature weighting. Per-doc term counts and
-    * corpus document frequencies are two aggregates joined on the word;
-    * every stage is linear in total tokens.
+  /** The TF-IDF inputs: per-(doc, word) term counts `tf`, per-word
+    * document counts `df`, and the corpus size `__n_docs` as a 1-row
+    * frame.
     */
-  def tfIdf(spark: SparkSession, dir: String): DataFrame = {
+  private def termFrequencies(spark: SparkSession, dir: String)
+      : (DataFrame, DataFrame, DataFrame) = {
     val docs = Readers.table(spark, dir, "documents")
     // corpus size rides in the plan as a broadcast 1-row frame — a
     // driver-side docs.count() here would fire a full scan at query
@@ -1453,6 +1428,16 @@ object TextQueries {
     // from `terms` would re-run the corpus explode AND pay a distinct
     // shuffle of every token occurrence
     val df_ = tf.groupBy("word").agg(count(lit(1)).as("df"))
+    (tf, df_, nDocs)
+  }
+
+  /** TF-IDF scores: term frequency × ln(N / document frequency), the
+    * classic sparse text-feature weighting. Per-doc term counts and
+    * corpus document frequencies are two aggregates joined on the word;
+    * every stage is linear in total tokens.
+    */
+  def tfIdf(spark: SparkSession, dir: String): DataFrame = {
+    val (tf, df_, nDocs) = termFrequencies(spark, dir)
     tf.join(df_, Seq("word"))
       .filter(col("doc_id") < 20)
       .crossJoin(broadcast(nDocs))
@@ -1757,16 +1742,7 @@ object TextQueries {
     * Ties break by word so the boundary row is engine-stable.
     */
   def keywordsTopk(spark: SparkSession, dir: String): DataFrame = {
-    val docs = Readers.table(spark, dir, "documents")
-    // corpus size as a broadcast 1-row frame (see [[tfIdf]]) — never a
-    // construction-time driver count()
-    val nDocs = docs.agg(count(lit(1)).cast("double").as("__n_docs"))
-    val terms = Readers.fanOut(docs.select("doc_id", "text"))
-      .select(col("doc_id"), explode(split(col("text"), " ")).as("word"))
-    // pinned (r17): same two-consumer shape as [[tfIdf]]'s tf table
-    val tf = terms.groupBy("doc_id", "word").agg(count(lit(1)).as("tf"))
-      .localCheckpoint(false)
-    val df_ = tf.groupBy("word").agg(count(lit(1)).as("df"))
+    val (tf, df_, nDocs) = termFrequencies(spark, dir)
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy("doc_id")
       .orderBy(col("tfidf").desc, col("word"))

@@ -41,6 +41,50 @@ object VectorQueries {
        |      (sqrt(list_dot_product($a.embedding::DOUBLE[], $a.embedding::DOUBLE[])) *
        |       sqrt(list_dot_product($b.embedding::DOUBLE[], $b.embedding::DOUBLE[])))""".stripMargin
 
+  /** DuckDB twin of the IVF cell assignment: each embedding with its
+    * nearest of the first `k` vectors (rounded cosine, ties by id).
+    */
+  private def assignedCte(k: Int): String =
+    s"""assigned AS (
+       |  SELECT vec_id, embedding, centroid_id FROM (
+       |    SELECT v.vec_id, v.embedding, c.vec_id AS centroid_id,
+       |      row_number() OVER (PARTITION BY v.vec_id
+       |        ORDER BY round(${cosSql("v", "c")}, 6) DESC, c.vec_id) AS rn
+       |    FROM embeddings v, embeddings c
+       |    WHERE c.vec_id < $k)
+       |  WHERE rn = 1
+       |)""".stripMargin
+
+  /** The first `k` vectors of `emb` as centroid seeds (`centroid_id`,
+    * `c_emb`); `vec_id` is unique, so the limit only makes the bound
+    * structural.
+    */
+  private def seeds(emb: DataFrame, k: Int): DataFrame =
+    emb.filter(col("vec_id") < k).limit(k)
+      .select(col("vec_id").as("centroid_id"), col("embedding").as("c_emb"))
+
+  /** The IVF cells every IVF and SemDeDup key starts from: the
+    * `(vec_id, embedding)` corpus, its first-`k` [[seeds]], and each
+    * vector assigned to its nearest seed with its norm `_n`, pinned.
+    * The pin exists because the queries and the candidates both embed
+    * the assignment subtree (embeddings × centroids argmax); unpinned,
+    * Spark computes it twice. localCheckpoint(false), NOT cache():
+    * CacheManager matches by canonicalized plan, so a cache() here is
+    * silently re-served to every later construction in the session and
+    * the bench's min becomes a warm-cache figure (r16 ADVICE); the lazy
+    * checkpoint is scoped to THIS instance — every fresh run recomputes,
+    * within-query reuse only.
+    */
+  private def ivfCells(spark: SparkSession, dir: String, k: Int)
+      : (DataFrame, DataFrame, DataFrame) = {
+    val emb = Readers.table(spark, dir, "embeddings").select("vec_id", "embedding")
+    val centroids = seeds(emb, k)
+    val assigned = Vectors.assignToCentroids(emb, "vec_id", centroids)
+      .withColumn("_n", Vectors.norm(col("embedding")))
+      .localCheckpoint(false)
+    (emb, centroids, assigned)
+  }
+
   def annBruteforce(spark: SparkSession, dir: String): DataFrame = {
     val emb = Readers.table(spark, dir, "embeddings")
     val queries = emb.filter(col("vec_id") < NumQueries).limit(NumQueries)
@@ -69,19 +113,7 @@ object VectorQueries {
     annIvfK(spark, dir, NumCentroids)
 
   def annIvfK(spark: SparkSession, dir: String, k: Int): DataFrame = {
-    val emb = Readers.table(spark, dir, "embeddings").select("vec_id", "embedding")
-    val centroids = emb.filter(col("vec_id") < k).limit(k)
-      .select(col("vec_id").as("centroid_id"), col("embedding").as("c_emb"))
-    // pinned: both self-join sides embed this assignment subtree
-    // (embeddings × centroids argmax) — unpinned, Spark computes it twice.
-    // localCheckpoint(false), NOT cache(): CacheManager matches by
-    // canonicalized plan, so a cache() here is silently re-served to every
-    // later construction in the session and the bench's min becomes a
-    // warm-cache figure (r16 ADVICE); the lazy checkpoint is scoped to
-    // THIS instance — every fresh run recomputes, within-query reuse only
-    val assigned = Vectors.assignToCentroids(emb, "vec_id", centroids)
-      .withColumn("_n", Vectors.norm(col("embedding")))
-      .localCheckpoint(false)
+    val (_, _, assigned) = ivfCells(spark, dir, k)
     val queries = assigned.filter(col("vec_id") < NumQueries).limit(NumQueries)
       .select(col("vec_id").as("query_id"), col("embedding").as("q_emb"),
         col("centroid_id"), col("_n").as("_qn"))
@@ -96,15 +128,7 @@ object VectorQueries {
   val annIvfSql: String = annIvfSqlK(NumCentroids)
 
   def annIvfSqlK(k: Int): String =
-    s"""WITH assigned AS (
-       |  SELECT vec_id, embedding, centroid_id FROM (
-       |    SELECT v.vec_id, v.embedding, c.vec_id AS centroid_id,
-       |      row_number() OVER (PARTITION BY v.vec_id
-       |        ORDER BY round(${cosSql("v", "c")}, 6) DESC, c.vec_id) AS rn
-       |    FROM embeddings v, embeddings c
-       |    WHERE c.vec_id < $k)
-       |  WHERE rn = 1
-       |)
+    s"""WITH ${assignedCte(k)}
        |SELECT query_id, centroid_id, rank, vec_id, cos FROM (
        |  SELECT q.vec_id AS query_id, q.centroid_id, x.vec_id AS vec_id,
        |    round(${cosSql("q", "x")}, 6) AS cos,
@@ -121,19 +145,7 @@ object VectorQueries {
     * boundary; probing p buckets scans p/k of the corpus instead of 1/k).
     */
   def annIvfProbe2(spark: SparkSession, dir: String): DataFrame = {
-    val emb = Readers.table(spark, dir, "embeddings").select("vec_id", "embedding")
-    val centroids = emb.filter(col("vec_id") < NumCentroids).limit(NumCentroids)
-      .select(col("vec_id").as("centroid_id"), col("embedding").as("c_emb"))
-    // pinned: both self-join sides embed this assignment subtree
-    // (embeddings × centroids argmax) — unpinned, Spark computes it twice.
-    // localCheckpoint(false), NOT cache(): CacheManager matches by
-    // canonicalized plan, so a cache() here is silently re-served to every
-    // later construction in the session and the bench's min becomes a
-    // warm-cache figure (r16 ADVICE); the lazy checkpoint is scoped to
-    // THIS instance — every fresh run recomputes, within-query reuse only
-    val assigned = Vectors.assignToCentroids(emb, "vec_id", centroids)
-      .withColumn("_n", Vectors.norm(col("embedding")))
-      .localCheckpoint(false)
+    val (emb, centroids, assigned) = ivfCells(spark, dir, NumCentroids)
     // query-side: the 2 nearest centroids per query (shared probe operator)
     val qProbes = Vectors.centroidProbes(
         emb.filter(col("vec_id") < NumQueries).limit(NumQueries), "vec_id", centroids, nprobe = 2)
@@ -148,15 +160,7 @@ object VectorQueries {
   }
 
   val annIvfProbe2Sql: String =
-    s"""WITH assigned AS (
-       |  SELECT vec_id, embedding, centroid_id FROM (
-       |    SELECT v.vec_id, v.embedding, c.vec_id AS centroid_id,
-       |      row_number() OVER (PARTITION BY v.vec_id
-       |        ORDER BY round(${cosSql("v", "c")}, 6) DESC, c.vec_id) AS rn
-       |    FROM embeddings v, embeddings c
-       |    WHERE c.vec_id < $NumCentroids)
-       |  WHERE rn = 1
-       |),
+    s"""WITH ${assignedCte(NumCentroids)},
        |probes AS (
        |  SELECT vec_id, embedding, centroid_id FROM (
        |    SELECT v.vec_id, v.embedding, c.vec_id AS centroid_id,
@@ -200,8 +204,7 @@ object VectorQueries {
     */
   def annIvfPruned(spark: SparkSession, dir: String): DataFrame = {
     val emb = Readers.table(spark, dir, "embeddings").select("vec_id", "embedding")
-    val centroids = emb.filter(col("vec_id") < NumCentroids).limit(NumCentroids)
-      .select(col("vec_id").as("centroid_id"), col("embedding").as("c_emb"))
+    val centroids = seeds(emb, NumCentroids)
     val tag = dir.replaceAll("[^A-Za-z0-9]+", "_")
     val path = graft.ops.IvfIndex.ensure(spark,
       s"${graft.ops.Bucketing.scratchRoot()}/ivf/${tag}_k$NumCentroids",
@@ -464,10 +467,13 @@ object VectorQueries {
         "vec_id", PqSubspaces, PqCodebook, Dim)
       .orderBy("vec_id", "sub")
 
-  val pqCodesSql: String = {
+  /** DuckDB twin of the PQ split: the subspace ids `subs`, every vector's
+    * sub-slices `parts` (`sv`) and the first-[[PqCodebook]] vectors'
+    * codewords `cents` (`cv`).
+    */
+  private def pqPartsCtes: String = {
     val subDim = Dim / PqSubspaces
-    def dotSql(a: String, b: String) = s"list_dot_product($a, $b)"
-    s"""WITH subs AS (SELECT unnest(range($PqSubspaces)) AS sub),
+    s"""subs AS (SELECT unnest(range($PqSubspaces)) AS sub),
        |parts AS (
        |  SELECT vec_id, sub,
        |    list_slice(embedding, sub * $subDim + 1,
@@ -479,7 +485,12 @@ object VectorQueries {
        |    list_slice(embedding, sub * $subDim + 1,
        |      sub * $subDim + $subDim)::DOUBLE[] AS cv
        |  FROM embeddings, subs WHERE vec_id < $PqCodebook
-       |),
+       |)""".stripMargin
+  }
+
+  val pqCodesSql: String = {
+    def dotSql(a: String, b: String) = s"list_dot_product($a, $b)"
+    s"""WITH ${pqPartsCtes},
        |scored AS (
        |  SELECT p.vec_id, p.sub, c.code,
        |    round(${dotSql("p.sv", "p.sv")} - 2.0::DOUBLE * ${dotSql("p.sv", "c.cv")}
@@ -522,14 +533,7 @@ object VectorQueries {
     */
   def annIvfPq(spark: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    val emb = Readers.table(spark, dir, "embeddings").select("vec_id", "embedding")
-    val centroids = emb.filter(col("vec_id") < NumCentroids).limit(NumCentroids)
-      .select(col("vec_id").as("centroid_id"), col("embedding").as("c_emb"))
-    // pinned (instance-scoped, not cache() — see annIvfK's note):
-    // queries and candidates both embed the assignment subtree
-    val assigned = Vectors.assignToCentroids(emb, "vec_id", centroids)
-      .withColumn("_n", Vectors.norm(col("embedding")))
-      .localCheckpoint(false)
+    val (emb, _, assigned) = ivfCells(spark, dir, NumCentroids)
     val subDim = Dim / PqSubspaces
     val codes = Vectors.pqAssign(Readers.fanOut(emb), "vec_id",
         PqSubspaces, PqCodebook, Dim)
@@ -568,30 +572,9 @@ object VectorQueries {
       .orderBy("query_id", "rank")
   }
 
-  val annIvfPqSql: String = {
-    val subDim = Dim / PqSubspaces
-    s"""WITH assigned AS (
-       |  SELECT vec_id, embedding, centroid_id FROM (
-       |    SELECT v.vec_id, v.embedding, c.vec_id AS centroid_id,
-       |      row_number() OVER (PARTITION BY v.vec_id
-       |        ORDER BY round(${cosSql("v", "c")}, 6) DESC, c.vec_id) AS rn
-       |    FROM embeddings v, embeddings c
-       |    WHERE c.vec_id < $NumCentroids)
-       |  WHERE rn = 1
-       |),
-       |subs AS (SELECT unnest(range($PqSubspaces)) AS sub),
-       |parts AS (
-       |  SELECT vec_id, sub,
-       |    list_slice(embedding, sub * $subDim + 1,
-       |      sub * $subDim + $subDim)::DOUBLE[] AS sv
-       |  FROM embeddings, subs
-       |),
-       |cents AS (
-       |  SELECT vec_id AS code, sub,
-       |    list_slice(embedding, sub * $subDim + 1,
-       |      sub * $subDim + $subDim)::DOUBLE[] AS cv
-       |  FROM embeddings, subs WHERE vec_id < $PqCodebook
-       |),
+  val annIvfPqSql: String =
+    s"""WITH ${assignedCte(NumCentroids)},
+       |${pqPartsCtes},
        |codes AS (
        |  SELECT vec_id, sub, code FROM (
        |    SELECT p.vec_id, p.sub, c.code,
@@ -643,7 +626,6 @@ object VectorQueries {
        |  FROM shortlist s JOIN embeddings e ON e.vec_id = s.vec_id)
        |WHERE rank <= $IvfK
        |ORDER BY query_id, rank""".stripMargin
-  }
 
   /** Per-label centroid (element-wise mean, components rounded to 6 so
     * downstream dot products run on identical inputs in both engines) and
@@ -810,20 +792,7 @@ object VectorQueries {
     semanticDedupK(spark, dir, NumCentroids)
 
   def semanticDedupK(spark: SparkSession, dir: String, k: Int): DataFrame = {
-    val emb = Readers.table(spark, dir, "embeddings")
-      .select("vec_id", "embedding")
-    val centroids = emb.filter(col("vec_id") < k).limit(k)
-      .select(col("vec_id").as("centroid_id"), col("embedding").as("c_emb"))
-    // pinned: both self-join sides embed this assignment subtree
-    // (embeddings × centroids argmax) — unpinned, Spark computes it twice.
-    // localCheckpoint(false), NOT cache(): CacheManager matches by
-    // canonicalized plan, so a cache() here is silently re-served to every
-    // later construction in the session and the bench's min becomes a
-    // warm-cache figure (r16 ADVICE); the lazy checkpoint is scoped to
-    // THIS instance — every fresh run recomputes, within-query reuse only
-    val assigned = Vectors.assignToCentroids(emb, "vec_id", centroids)
-      .withColumn("_n", Vectors.norm(col("embedding")))
-      .localCheckpoint(false)
+    val (_, _, assigned) = ivfCells(spark, dir, k)
     val a = assigned.select(col("centroid_id"), col("vec_id").as("keep_id"),
       col("embedding").as("e_a"), col("_n").as("n_a"))
     val b = assigned.select(col("centroid_id"), col("vec_id").as("drop_id"),
@@ -840,15 +809,7 @@ object VectorQueries {
   val semanticDedupSql: String = semanticDedupSqlK(NumCentroids)
 
   def semanticDedupSqlK(k: Int): String =
-    s"""WITH assigned AS (
-       |  SELECT vec_id, embedding, centroid_id FROM (
-       |    SELECT v.vec_id, v.embedding, c.vec_id AS centroid_id,
-       |      row_number() OVER (PARTITION BY v.vec_id
-       |        ORDER BY round(${cosSql("v", "c")}, 6) DESC, c.vec_id) AS rn
-       |    FROM embeddings v, embeddings c
-       |    WHERE c.vec_id < $k)
-       |  WHERE rn = 1
-       |)
+    s"""WITH ${assignedCte(k)}
        |SELECT q.centroid_id, q.vec_id AS keep_id, x.vec_id AS drop_id,
        |  round(${cosSql("q", "x")}, 6) AS cos
        |FROM assigned q JOIN assigned x
@@ -893,9 +854,8 @@ object VectorQueries {
     */
   def sampleClusterBalanced(spark: SparkSession, dir: String): DataFrame = {
     val emb = Readers.table(spark, dir, "embeddings").select("vec_id", "embedding")
-    val centroids = emb.filter(col("vec_id") < NumCentroids).limit(NumCentroids)
-      .select(col("vec_id").as("centroid_id"), col("embedding").as("c_emb"))
-    // pinned (instance-scoped, not cache() — see annIvfK's note): the
+    val centroids = seeds(emb, NumCentroids)
+    // pinned (instance-scoped, not cache() — see ivfCells' note): the
     // ranking window and the quota aggregate both embed this assignment
     // subtree (embeddings × centroids argmax)
     val assigned = Vectors.assignToCentroids(emb, "vec_id", centroids)
@@ -950,8 +910,7 @@ object VectorQueries {
 
   def embeddingOutliers(spark: SparkSession, dir: String): DataFrame = {
     val emb = Readers.table(spark, dir, "embeddings").select("vec_id", "embedding")
-    val centroids = emb.filter(col("vec_id") < NumCentroids).limit(NumCentroids)
-      .select(col("vec_id").as("centroid_id"), col("embedding").as("c_emb"))
+    val centroids = seeds(emb, NumCentroids)
     // pinned (r17): the per-cluster stats aggregate and the ranking
     // window both consume this frame — without the pin the corpus ×
     // centroids argmax cross join ran twice. (centroid, vec, cos) is
@@ -981,15 +940,7 @@ object VectorQueries {
   }
 
   val embeddingOutliersSql: String =
-    s"""WITH assigned AS (
-       |  SELECT vec_id, embedding, centroid_id FROM (
-       |    SELECT v.vec_id, v.embedding, c.vec_id AS centroid_id,
-       |      row_number() OVER (PARTITION BY v.vec_id
-       |        ORDER BY round(${cosSql("v", "c")}, 6) DESC, c.vec_id) AS rn
-       |    FROM embeddings v, embeddings c
-       |    WHERE c.vec_id < $NumCentroids)
-       |  WHERE rn = 1
-       |),
+    s"""WITH ${assignedCte(NumCentroids)},
        |wc AS (
        |  SELECT a.centroid_id, a.vec_id, round(${cosSql("a", "c")}, 6) AS cos
        |  FROM assigned a JOIN embeddings c ON c.vec_id = a.centroid_id
@@ -1044,7 +995,7 @@ object VectorQueries {
       .select(col("vec_id"), col("embedding").cast("array<double>").as("emb"))
     val docs = Readers.table(spark, dir, "documents")
       .select(col("doc_id"), col("source"))
-    // pinned (instance-scoped, not cache() — see annIvfK's note; the
+    // pinned (instance-scoped, not cache() — see ivfCells' note; the
     // never-unpersisted cache() here was the r16 ADVICE warm-cache
     // finding): bench, the plant, and the per-source totals all embed
     // this two-table equi-join subtree

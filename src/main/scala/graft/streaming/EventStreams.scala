@@ -79,19 +79,8 @@ object EventStreams {
     * state.
     */
   def clickPurchaseJoin(clicks: DataFrame, purchases: DataFrame,
-                        watermark: String = "1 hour"): DataFrame = {
-    val c = clicks.withWatermark("ts", watermark)
-      .select(col("user_id"), col("ts").as("click_ts"),
-        col("value").as("click_value"))
-    val p = purchases.withWatermark("ts", watermark)
-      .select(col("user_id").as("p_user"), col("ts").as("purchase_ts"),
-        col("value").as("purchase_value"))
-    c.join(p,
-      col("user_id") === col("p_user") &&
-        col("purchase_ts") >= col("click_ts") - expr("INTERVAL 1 HOUR") &&
-        col("purchase_ts") <= col("click_ts"))
-      .select("user_id", "click_ts", "purchase_ts", "purchase_value")
-  }
+                        watermark: String = "1 hour"): DataFrame =
+    intervalJoin(clicks, purchases, watermark, "inner")
 
   /** LEFT OUTER stream-stream interval join: every click eventually
     * emits — matched rows as they pair up, unmatched rows with null
@@ -103,7 +92,14 @@ object EventStreams {
     * variant.
     */
   def clickPurchaseJoinOuter(clicks: DataFrame, purchases: DataFrame,
-                             watermark: String = "1 hour"): DataFrame = {
+                             watermark: String = "1 hour"): DataFrame =
+    intervalJoin(clicks, purchases, watermark, "left_outer")
+
+  /** Clicks joined to the same user's purchases in the hour up to each
+    * click, both sides watermarked by `watermark`.
+    */
+  private def intervalJoin(clicks: DataFrame, purchases: DataFrame,
+                           watermark: String, joinType: String): DataFrame = {
     val c = clicks.withWatermark("ts", watermark)
       .select(col("user_id"), col("ts").as("click_ts"),
         col("value").as("click_value"))
@@ -114,7 +110,7 @@ object EventStreams {
       col("user_id") === col("p_user") &&
         col("purchase_ts") >= col("click_ts") - expr("INTERVAL 1 HOUR") &&
         col("purchase_ts") <= col("click_ts"),
-      "left_outer")
+      joinType)
       .select("user_id", "click_ts", "purchase_ts", "purchase_value")
   }
 

@@ -53,6 +53,36 @@ class DedupSpec extends AnyFunSuite {
     assert(out == Seq("first"))   // from the lexicographically-first file
   }
 
+  test("keepFirstFileOrder keeps file order when one file is read as many splits") {
+    import java.nio.file.Files
+    // rows 2j and 2j+1 share key j, so many pairs straddle a split
+    // boundary; a second pass repeats every key far from its first row
+    val n = 40
+    val keys = (0 until n).map(_ / 2) ++ (0 until n).map(_ / 2)
+    val header = ",order_source_id,order_created_datetime,customer_id," +
+      "status,sum,quantity,name,surname,patronymic,product_id"
+    val lines = keys.zipWithIndex.map { case (k, row) =>
+      s"$row,${5000 + k},2021-03-01 10:00:00,$row,paid,10.5,1," +
+        s"Ivan,Petrov,Ivanovich,${100 + k % 3}"
+    }
+    val dir = Files.createTempDirectory("graft-dedup-splits")
+    val path = dir.resolve("orders.csv")
+    Files.writeString(path, (header +: lines).mkString("", "\n", "\n"))
+    val (splits, kept) = graft.ops.CatalogStats.withConf(spark,
+        "spark.sql.files.maxPartitionBytes" -> "300") {
+      val df = Readers.ordersCsv(spark, path.toString)
+      (df.rdd.getNumPartitions,
+        Dedup.keepFirstFileOrder(df, Seq("order_source_id", "product_id"))
+          .select("order_source_id", "customer_id").as[(String, String)]
+          .collect().toMap)
+    }
+    assert(splits >= 4)
+    val firstRow = keys.zipWithIndex.groupBy(_._1).map { case (k, rs) =>
+      (5000 + k).toString -> rs.map(_._2).min.toString
+    }
+    assert(kept == firstRow)
+  }
+
   test("dedup row count never exceeds input and never loses keys") {
     val df = Seq.tabulate(100)(i => (i % 7L, i % 3L, i.toLong))
       .toDF("a", "b", "seq")
