@@ -3,16 +3,35 @@ package graft
 import org.apache.spark.sql.SparkSession
 
 /** One place for the engine's local-session contract, used by every shipped
-  * main (Bench/BenchStream/Verify/Smoke/Dev): shuffle partitions sized to cores,
-  * UTC, the nanos-as-long flag the events table requires, the graft
-  * extensions (operator lowering + SQL functions), and the RocksDB state
-  * store the streaming ops need. Config drift between
-  * mains — e.g. one missing `nanosAsLong` and failing on the events
-  * parquet — is exactly the bug this prevents.
+  * main (Bench/Verify/Smoke/Dev), the perfbench harness and the test
+  * session: shuffle partitions sized to cores, UTC, the nanos-as-long flag
+  * the events table requires, the graft extensions (operator lowering + SQL
+  * functions), and the RocksDB state store the streaming ops need. Config
+  * drift between sessions — e.g. one missing `nanosAsLong` and failing on
+  * the events parquet — is exactly the bug this prevents.
   */
 object SparkSessions {
-  def local(cpus: String): SparkSession = {
-    val spark = SparkSession.builder()
+
+  /** Scratch root for shuffle/spill files and the engine's own scratch
+    * tables (bucketed copies, IVF indexes): tmpfs when available. This
+    * harness's virtual disk sustains ~8 MB/s synced writes (measured
+    * round 7), so on /tmp the shuffle-heaviest queries time the disk, not
+    * the engine — dedup_ngram_jaccard degraded 12x while scan-shaped
+    * queries moved 2x. A real cluster provisions NVMe scratch for exactly
+    * this reason; tmpfs is this single-node box's equivalent. sf0.1
+    * shuffle volumes are ≤ a few GB against 126 GB of tmpfs.
+    */
+  def scratchDir(): String =
+    sys.env.getOrElse("SPARK_GRAFT_LOCAL_DIR",
+      if (new java.io.File("/dev/shm").canWrite) "/dev/shm/graft-scratch"
+      else System.getProperty("java.io.tmpdir"))
+
+  /** The configured builder behind [[local]], for callers that add their
+    * own settings (the test session adds its warehouse dir) on top of the
+    * same contract.
+    */
+  def builder(cpus: String): SparkSession.Builder =
+    SparkSession.builder()
       .master(s"local[$cpus]")
       .config("spark.sql.shuffle.partitions", cpus)
       .config("spark.ui.enabled", "false")
@@ -26,25 +45,14 @@ object SparkSessions {
       // byte-identical to r1; the 36-query r1 suite mostly fit the cache).
       // A long-lived analytics session should size this to its working set.
       .config("spark.sql.codegen.cache.maxEntries", "8000")
-      // Shuffle/spill scratch on tmpfs when available: this harness's
-      // virtual disk sustains ~8 MB/s synced writes (measured round 7),
-      // so on /tmp the shuffle-heaviest queries time the disk, not the
-      // engine — dedup_ngram_jaccard degraded 12x while scan-shaped
-      // queries moved 2x. A real cluster provisions NVMe scratch for
-      // exactly this reason; tmpfs is this single-node box's equivalent.
-      // sf0.1 shuffle volumes are ≤ a few GB against 126 GB of tmpfs.
-      .config("spark.local.dir",
-        sys.env.getOrElse("SPARK_GRAFT_LOCAL_DIR",
-          if (new java.io.File("/dev/shm").canWrite) "/dev/shm/graft-scratch"
-          else System.getProperty("java.io.tmpdir")))
+      .config("spark.local.dir", scratchDir())
       .config("spark.sql.extensions", "graft.plans.GraftExtensions")
       // every custom stateful streaming op runs on transformWithState,
       // which refuses the default HDFS-backed state store
       .config("spark.sql.streaming.stateStore.providerClass",
         "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-      .getOrCreate()
-    spark
-  }
+
+  def local(cpus: String): SparkSession = builder(cpus).getOrCreate()
 
   /** cpus from SPARK_GRAFT_CPUS, defaulting as the driver harness does. */
   def localFromEnv(): SparkSession =

@@ -31,12 +31,17 @@ object CleanNames {
 
   val Vowels = "aoueiyаяєоуиіїе"
 
+  /** Python's `\s` (`str.isspace`): Java's `(?U)\s` plus U+001C–U+001F,
+    * the file, group, record and unit separators, which Java leaves out.
+    */
+  private val Space = "[\\s\\x{1C}-\\x{1F}]"
+
   /** Blank test, anchored at position 0: the value does not start with
     * whitespace (else the reference's `\s` branch wins position 0 first)
     * and is entirely vowels or entirely non-vowels (each class includes
     * the empty string, so `""` and `"-"` both blank).
     */
-  private val blankPattern = s"(?U)^(?!\\s)([$Vowels]*|[^$Vowels]*)$$"
+  private val blankPattern = s"(?U)^(?!$Space)([$Vowels]*|[^$Vowels]*)$$"
 
   /** Full pipeline over one column. Null in → null out (pandas would throw
     * on NaN; our data has none, and null-passthrough is the safer engine
@@ -47,12 +52,12 @@ object CleanNames {
     * never starts a second entity, and a numeric entity like `&#8217;` is
     * decoded before the digit-strip step could destroy its digits.
     * Regexes carry `(?U)` so `\d`/`\s` are Unicode-aware like Python's,
-    * not ASCII-only like Java's default.
+    * not ASCII-only like Java's default; whitespace is [[Space]].
     */
   def clean(c: Column): Column = {
     val unescaped = graft.functions.StringExpressions.htmlUnescape(c)
     val noDigits  = regexp_replace(lower(unescaped), "(?U)\\d", "")
     when(noDigits.rlike(blankPattern), lit(""))
-      .otherwise(regexp_replace(noDigits, "(?U)\\s", ""))
+      .otherwise(regexp_replace(noDigits, s"(?U)$Space", ""))
   }
 }

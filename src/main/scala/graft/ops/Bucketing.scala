@@ -56,14 +56,4 @@ object Bucketing {
       .mode(SaveMode.Overwrite)
       .saveAsTable(table)
   }
-
-  /** Scratch root for bucketed-table files: prefer the same fast local
-    * volume the shuffle scratch uses (this harness's /tmp disk sustains
-    * ~8 MB/s synced writes — a bucketed copy of sf0.1 lineitem would time
-    * the disk, not the layout).
-    */
-  def scratchRoot(): String =
-    sys.env.getOrElse("SPARK_GRAFT_LOCAL_DIR",
-      if (new java.io.File("/dev/shm").canWrite) "/dev/shm/graft-scratch"
-      else System.getProperty("java.io.tmpdir"))
 }

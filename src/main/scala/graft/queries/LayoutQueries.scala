@@ -80,7 +80,7 @@ object LayoutQueries {
     */
   def bucketedJoin(spark: SparkSession, dir: String): DataFrame = {
     val tag = dir.replaceAll("[^A-Za-z0-9]+", "_")
-    val root = s"${Bucketing.scratchRoot()}/bucketed/$tag"
+    val root = s"${graft.SparkSessions.scratchDir()}/bucketed/$tag"
     Bucketing.writeBucketed(spark,
       Readers.table(spark, dir, "orders").select("o_orderkey", "o_orderpriority"),
       s"graft_b_orders_$tag", s"$root/orders", "o_orderkey", BucketCount)

@@ -207,7 +207,7 @@ object VectorQueries {
     val centroids = seeds(emb, NumCentroids)
     val tag = dir.replaceAll("[^A-Za-z0-9]+", "_")
     val path = graft.ops.IvfIndex.ensure(spark,
-      s"${graft.ops.Bucketing.scratchRoot()}/ivf/${tag}_k$NumCentroids",
+      s"${graft.SparkSessions.scratchDir()}/ivf/${tag}_k$NumCentroids",
       Vectors.assignToCentroids(emb, "vec_id", centroids)
         .withColumn("_n", Vectors.norm(col("embedding"))))
     // partition-column type inference reads centroid_id back as INT; the

@@ -51,10 +51,10 @@ import org.apache.spark.sql.streaming.{ExpiredTimerInfo, OutputMode,
   * maintenance task is a JVM-wide singleton that captures its tick
   * period when the FIRST stateful query of the process starts — a
   * maintenanceInterval set after any stateful query ran is a silent
-  * no-op for the life of the JVM. [[graft.BenchStream]]'s cadence row
-  * therefore refuses to run unless it is the process's first stateful
-  * query (`only`-scoped, fresh JVM); set the interval in the session
-  * conf BEFORE the first `start()` in production too.
+  * no-op for the life of the JVM. The r15 cadence row was therefore
+  * measured as its process's first stateful query, in a fresh JVM; set
+  * the interval in the session conf BEFORE the first `start()` in
+  * production too.
   */
 object TwsGates {
 
@@ -341,8 +341,8 @@ object TwsGates {
     * eviction; the quota gate never reads it). Callers must acknowledge
     * by setting
     * `spark.sql.streaming.statefulOperator.checkCorrectness.enabled=false`
-    * before starting the query (CuratedNeardupQuotaSpec and the
-    * STREAMBENCH row do; parity with the sequential batch rule is what
+    * before starting the query (CuratedNeardupQuotaSpec and perfbench's
+    * `stream_curation` do; parity with the sequential batch rule is what
     * makes the acknowledgement safe rather than hopeful).
     */
   def curatedNeardupQuotaTws(docs: DataFrame, budget: Long,

@@ -4,15 +4,13 @@ import java.nio.file.{Files, Path, Paths}
 
 import graft.{Bench, SparkEntry, SparkSessions}
 import graft.plans.PlanLint
-import org.apache.spark.sql.{SQLContext, SparkSession}
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.{FileSourceScanExec, FormattedMode,
   RDDScanExec, SparkPlan}
 import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec,
   AdaptiveSparkPlanHelper}
 import org.apache.spark.sql.execution.exchange.{BroadcastExchangeLike,
   ReusedExchangeExec, ShuffleExchangeLike}
-import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-import org.apache.spark.sql.functions.{col, count, lit}
 
 /** Dev entry point: plan inspection and per-key timing next to the
   * Bench/Verify/Smoke mains. Every subcommand takes the session it runs
@@ -30,7 +28,6 @@ object Dev extends AdaptiveSparkPlanHelper {
       |  explain <outDir> <suffix> <k1,...>  formatted explain to <outDir>/<key>_<suffix>.txt
       |  lint [k1,k2,...]                    PlanLint findings (default: every key)
       |  one <k1,...> [reps]                 noop-sink timings between Bench calibrations
-      |  stream-probe [ckptRoot] [batches]   micro-batch cost of a zero-work stream
       |Env: SPARK_GRAFT_SF_DIR (default sf0.01), SPARK_GRAFT_CPUS""".stripMargin
 
   /** Operator counts of one physical plan. `scans` is per table;
@@ -129,10 +126,6 @@ object Dev extends AdaptiveSparkPlanHelper {
       case "one" =>
         val (ks, reps) = (keys(arg(1, "keys")), args.lift(2).fold(3)(_.toInt))
         (s, sf) => one(s, sf, ks, reps)
-      case "stream-probe" =>
-        val root = args.lift(1).getOrElse("/dev/shm/graft-streamprobe")
-        val batches = args.lift(2).fold(6)(_.toInt)
-        (s, _) => streamProbe(s, root, batches)
       case other =>
         throw new IllegalArgumentException(s"unknown subcommand '$other'")
     }
@@ -234,43 +227,6 @@ object Dev extends AdaptiveSparkPlanHelper {
       println(f"[benchone] $key rep$i: ${(System.nanoTime() - t0) / 1e9}%.3f s")
     }
     cal("after")
-  }
-
-  /** Structured Streaming's fixed micro-batch cost with ZERO op work: the
-    * smallest stateful query (global count of a 3-int batch) and a
-    * stateless passthrough, per-batch wall times. Framework cost
-    * (incremental re-plan, offset/commit WAL, state commit, no-data
-    * batch) is what remains; compare cores, the checkpoint medium
-    * (`root`) and the batch count.
-    */
-  def streamProbe(spark: SparkSession, root: String, batches: Int): Unit = {
-    spark.conf.set("spark.sql.streaming.checkpoint.fileChecksum.enabled", "false")
-    import spark.implicits._
-    implicit val sqlCtx: SQLContext = spark.sqlContext
-    def probe(tag: String, partitions: Int, stateful: Boolean): Unit = {
-      spark.conf.set("spark.sql.shuffle.partitions", partitions.toString)
-      val mem = MemoryStream[Int]
-      val out =
-        if (stateful) mem.toDS().groupBy().agg(count(lit(1)).as("n"))
-        else mem.toDS().select((col("value") + 1).as("v"))
-      val q = out.writeStream.format("noop")
-        .outputMode(if (stateful) "update" else "append")
-        .option("checkpointLocation", s"$root/${System.nanoTime()}")
-        .start()
-      val times = (1 to batches).map { i =>
-        val t0 = System.nanoTime()
-        mem.addData(i, i + 1, i + 2)
-        q.processAllAvailable()
-        (System.nanoTime() - t0) / 1e9
-      }
-      q.stop()
-      println(s"probe[$tag] batch secs: " +
-        times.map(t => f"$t%.2f").mkString(", "))
-    }
-    probe("stateless p8", 8, stateful = false)
-    probe("count p1", 1, stateful = true)
-    probe("count p8", 8, stateful = true)
-    probe("count p32", 32, stateful = true)
   }
 
   def main(args: Array[String]): Unit = {

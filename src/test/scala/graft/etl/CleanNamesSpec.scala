@@ -70,6 +70,10 @@ class CleanNamesSpec extends AnyFunSuite {
   test("Unicode whitespace and digits are stripped like Python's \\s and \\d") {
     // NBSP ( ) is \s in Python but not in default Java regex
     assert(cleanAll(Seq("оль га", "кіт١")) == Seq("ольга", "кіт"))
+    // U+001C–U+001F are \s in Python (str.isspace) but not in Java's (?U)\s;
+    // expectations from the reference pipeline run in python3
+    assert(cleanAll(Seq("ab\u001Fcd", "\u001Cbc", "\u001Fb")) ==
+      Seq("abcd", "bc", "b"))
   }
 
   test("null passes through") {
@@ -80,7 +84,8 @@ class CleanNamesSpec extends AnyFunSuite {
   }
 
   private val alphabet: IndexedSeq[Char] =
-    ('a' to 'z') ++ ('а' to 'я') ++ Seq('і', 'ї', 'є', ' ', '-', '\'', '1', '7')
+    ('a' to 'z') ++ ('а' to 'я') ++ Seq('і', 'ї', 'є', ' ', '-', '\'', '1', '7') ++
+      ('\u001C' to '\u001F')
 
   private def randomNames(n: Int, seed: Long): Seq[String] = {
     val rnd = new scala.util.Random(seed)
@@ -90,11 +95,18 @@ class CleanNamesSpec extends AnyFunSuite {
   test("property: clean is idempotent for non-leading-whitespace input") {
     // (a leading-whitespace all-consonant value like " bc" survives pass 1
     // but blanks on pass 2 — the reference's single-pass quirk, covered
-    // above; excluded here)
-    val in = randomNames(400, seed = 42L).filterNot(_.startsWith(" "))
+    // above; excluded here. Char.isWhitespace covers ' ' and U+001C–U+001F
+    // of the alphabet.) Interior whitespace carries the same quirk: "a a"
+    // is mixed, so pass 1 keeps it as "aa", which is all vowels and blanks
+    // on pass 2. That is the only change a second pass may make.
+    val in = randomNames(400, seed = 42L).filterNot(_.headOption.exists(_.isWhitespace))
     val once = cleanAll(in)
     val twice = cleanAll(once)
-    assert(twice == once)
+    def uniform(v: String): Boolean =
+      v.forall(CleanNames.Vowels.contains(_)) || !v.exists(CleanNames.Vowels.contains(_))
+    in.lazyZip(once).lazyZip(twice).foreach { (i, o, t) =>
+      if (t != o) assert(t == "" && uniform(o) && i.exists(_.isWhitespace), (i, o, t))
+    }
   }
 
   test("property: output never contains digits or whitespace") {

@@ -21,7 +21,7 @@ class DedupSkewPlanSpec extends AnyFunSuite {
 
   test("keepFirst plans a Partial WindowGroupLimit below the exchange") {
     // parquet-backed (a LocalRelation is bounded and plans differently)
-    val path = graft.ops.Bucketing.scratchRoot() + "/dedup_skew"
+    val path = graft.SparkSessions.scratchDir() + "/dedup_skew"
     (0 until 500).map(i => (if (i % 10 < 7) 42L else i.toLong, i.toLong))
       .toDF("k", "ord").write.mode("overwrite").parquet(path)
     val df = spark.read.parquet(path)

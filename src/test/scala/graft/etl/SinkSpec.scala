@@ -1,6 +1,7 @@
 package graft.etl
 
 import graft.TestSpark
+import org.apache.spark.sql.functions.{col, lit, raise_error, when}
 import org.scalatest.funsuite.AnyFunSuite
 import java.nio.file.Files
 
@@ -24,6 +25,29 @@ class SinkSpec extends AnyFunSuite {
       root, "orders.denormalized")
     val second = spark.read.parquet(s"$root/orders/denormalized")
     assert(second.as[(Long, String)].collect().toSeq == Seq((9L, "z")))
+  }
+
+  test("a failed overwrite leaves the previous table whole") {
+    val root = Files.createTempDirectory("graft-sink").toString
+    val path = s"$root/orders/denormalized"
+    Sink.overwriteTable(spark.range(1000).toDF("id"), root, "orders.denormalized")
+    assert(spark.read.parquet(path).count() == 1000)
+
+    // two partitions: the first writes its file before row 900 fails
+    val failing = spark.range(0, 1000, 1, 2).select(
+      when(col("id") === 900, raise_error(lit("bad order row 900")))
+        .otherwise(col("id")).as("id"))
+    val e = intercept[Exception] {
+      Sink.overwriteTable(failing, root, "orders.denormalized")
+    }
+    val messages = Iterator.iterate[Throwable](e)(_.getCause)
+      .takeWhile(_ != null).map(t => String.valueOf(t.getMessage)).toSeq
+    assert(messages.exists(_.contains("bad order row 900")), messages)
+
+    assert(spark.read.parquet(path).as[Long].collect().sorted.toSeq ==
+      (0L until 1000L))
+    // no staging or trash directory left beside the table
+    assert(new java.io.File(s"$root/orders").list().toSeq == Seq("denormalized"))
   }
 
   test("rejects table names outside the dataset.tablename contract") {

@@ -50,7 +50,7 @@ class BucketingSpec extends AnyFunSuite {
   test("one file per bucket (sort-trusted layout)") {
     LayoutQueries.bucketedJoin(spark, dir)
     val tag = dir.replaceAll("[^A-Za-z0-9]+", "_")
-    val root = s"${Bucketing.scratchRoot()}/bucketed/$tag/lineitem"
+    val root = s"${graft.SparkSessions.scratchDir()}/bucketed/$tag/lineitem"
     val files = new java.io.File(root).listFiles()
       .filter(f => f.getName.startsWith("part-") && f.getName.endsWith(".parquet"))
     assert(files.length == LayoutQueries.BucketCount,

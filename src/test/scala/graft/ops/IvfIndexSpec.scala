@@ -67,7 +67,7 @@ class IvfIndexSpec extends AnyFunSuite {
 
   test("a static cell filter prunes without the join (literal IN path)") {
     val tag = dir.replaceAll("[^A-Za-z0-9]+", "_")
-    val path = s"${Bucketing.scratchRoot()}/ivf/${tag}_k${graft.queries.VectorQueries.NumCentroids}"
+    val path = s"${graft.SparkSessions.scratchDir()}/ivf/${tag}_k${graft.queries.VectorQueries.NumCentroids}"
     // the index exists (either memo-built by a prior test or rebuilt here)
     graft.queries.VectorQueries.annIvfPruned(spark, dir).collect()
     import org.apache.spark.sql.functions.col

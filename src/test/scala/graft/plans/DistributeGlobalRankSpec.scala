@@ -32,7 +32,7 @@ class DistributeGlobalRankSpec extends AnyFunSuite {
       val s = rnd.alphanumeric.take(rnd.nextInt(6)).mkString
       (i.toLong, v, s)
     }
-    val path = graft.ops.Bucketing.scratchRoot() + "/dgr_messy"
+    val path = graft.SparkSessions.scratchDir() + "/dgr_messy"
     rows.toDF("id", "v", "s").write.mode("overwrite").parquet(path)
     val df = spark.read.parquet(path)
     df.createOrReplaceTempView("messy")
@@ -378,7 +378,7 @@ class DistributeGlobalRankSpec extends AnyFunSuite {
         if (rnd.nextDouble() < 0.15) null else rnd.nextInt(100).toLong
       (i % 3, i.toLong, v)
     }
-    val path = graft.ops.Bucketing.scratchRoot() + "/dgr_part"
+    val path = graft.SparkSessions.scratchDir() + "/dgr_part"
     rows.toDF("k", "ord", "v").write.mode("overwrite").parquet(path)
     val name = "graft_dgr_part_fixture"
     spark.sql(s"DROP TABLE IF EXISTS $name")
@@ -463,7 +463,7 @@ class DistributeGlobalRankSpec extends AnyFunSuite {
     // fires on the stale stats, the out-of-bounds fractions clamp into
     // [0, 1), and the results must still equal the naive plan exactly
     val name = partTable
-    val path = graft.ops.Bucketing.scratchRoot() + "/dgr_part"
+    val path = graft.SparkSessions.scratchDir() + "/dgr_part"
     val extra = (0 until 60).map(i => (i % 4, 100000L + i, // ord ≫ max(299)
       java.lang.Long.valueOf(i.toLong)))
     extra.toDF("k", "ord", "v").write.mode("append").parquet(path)
@@ -508,7 +508,7 @@ class DistributeGlobalRankSpec extends AnyFunSuite {
       (2, 10L, Some(4L))
     ).map { case (k, o, v) =>
       (k, o, v.map(java.lang.Long.valueOf).orNull) }
-    val path = graft.ops.Bucketing.scratchRoot() + "/dgr_range"
+    val path = graft.SparkSessions.scratchDir() + "/dgr_range"
     rows.toDF("k", "ord", "v").write.mode("overwrite").parquet(path)
     val name = "graft_dgr_range_fixture"
     spark.sql(s"DROP TABLE IF EXISTS $name")
@@ -560,7 +560,7 @@ class DistributeGlobalRankSpec extends AnyFunSuite {
         if (i % 5 == 0) null else java.lang.Long.valueOf((i % 97).toLong)
       (k1, k2, i.toLong, v)
     }
-    val path = graft.ops.Bucketing.scratchRoot() + "/dgr_multi"
+    val path = graft.SparkSessions.scratchDir() + "/dgr_multi"
     rows.toDF("k1", "k2", "ord", "v").write.mode("overwrite").parquet(path)
     val name = "graft_dgr_multi_fixture"
     spark.sql(s"DROP TABLE IF EXISTS $name")
@@ -611,7 +611,7 @@ class DistributeGlobalRankSpec extends AnyFunSuite {
         if (i % 5 == 0) null else java.lang.Long.valueOf((i % 89).toLong)
       (k, i.toLong, v)
     }
-    val path = graft.ops.Bucketing.scratchRoot() + "/dgr_strkey"
+    val path = graft.SparkSessions.scratchDir() + "/dgr_strkey"
     rows.toDF("k", "ord", "v").write.mode("overwrite").parquet(path)
     val name = "graft_dgr_strkey_fixture"
     spark.sql(s"DROP TABLE IF EXISTS $name")
@@ -671,7 +671,7 @@ class DistributeGlobalRankSpec extends AnyFunSuite {
         else Seq("crawl", "books", "code")(i % 3)
       (k, (i % 2).toLong, i.toLong, (i % 89).toLong)
     }
-    val path = graft.ops.Bucketing.scratchRoot() + "/dgr_strkey_mixed"
+    val path = graft.SparkSessions.scratchDir() + "/dgr_strkey_mixed"
     rows.toDF("k", "par", "ord", "v").write.mode("overwrite").parquet(path)
     val name = "graft_dgr_strkey_mixed_fixture"
     spark.sql(s"DROP TABLE IF EXISTS $name")
@@ -709,7 +709,7 @@ class DistributeGlobalRankSpec extends AnyFunSuite {
     val base = 1L << 62
     val rows = for (k <- 0 until 8; o <- 0 until 40)
       yield (base + k.toLong, (k * 40 + o).toLong, (o % 7).toLong)
-    val path = graft.ops.Bucketing.scratchRoot() + "/dgr_himag"
+    val path = graft.SparkSessions.scratchDir() + "/dgr_himag"
     rows.toDF("k", "ord", "v").write.mode("overwrite").parquet(path)
     val name = "graft_dgr_himag_fixture"
     spark.sql(s"DROP TABLE IF EXISTS $name")
@@ -752,7 +752,7 @@ class DistributeGlobalRankSpec extends AnyFunSuite {
     val rows = Seq(
       (0L, 0L, 1L, 1L), ((1L << 53), (1L << 40), 2L, 2L),
       (0L, (1L << 40), 3L, 3L), ((1L << 53), 0L, 4L, 4L))
-    val path = graft.ops.Bucketing.scratchRoot() + "/dgr_widespan"
+    val path = graft.SparkSessions.scratchDir() + "/dgr_widespan"
     rows.toDF("k1", "k2", "ord", "v").write.mode("overwrite").parquet(path)
     val name = "graft_dgr_widespan_fixture"
     spark.sql(s"DROP TABLE IF EXISTS $name")
@@ -835,7 +835,7 @@ class DistributeGlobalRankSpec extends AnyFunSuite {
     graft.ops.CatalogStats.withCbo(spark) {
       withRule(true) { withFloor(1) {
         // path-based read: no column stats at all
-        spark.read.parquet(graft.ops.Bucketing.scratchRoot() + "/dgr_part")
+        spark.read.parquet(graft.SparkSessions.scratchDir() + "/dgr_part")
           .createOrReplaceTempView("dgr_part_raw")
         assert(!spark.sql(partSql.replace("TBL", "dgr_part_raw"))
           .queryExecution.optimizedPlan.toString.contains("__graft"),

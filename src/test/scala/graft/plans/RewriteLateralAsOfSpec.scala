@@ -35,7 +35,7 @@ class RewriteLateralAsOfSpec extends AnyFunSuite {
       (9L, java.lang.Long.valueOf(2L), ts("2024-01-01 08:00:00"), "purchase", 3.0),
       (10L, java.lang.Long.valueOf(2L), null.asInstanceOf[java.sql.Timestamp], "purchase", 4.0) // null-ts purchase
     ).toDF("event_id", "user_id", "ts", "event_type", "value")
-    val path = graft.ops.Bucketing.scratchRoot() + "/lat_asof"
+    val path = graft.SparkSessions.scratchDir() + "/lat_asof"
     rows.write.mode("overwrite").parquet(path)
     spark.read.parquet(path).createOrReplaceTempView("lat_asof")
   }

@@ -55,7 +55,7 @@ class DiversitySampleSpec extends AnyFunSuite {
   test("the SampleCap literal plans a partial WindowGroupLimit below the exchange") {
     // same shape as the query body, on a parquet-backed skewed fixture:
     // one centroid holds 70% of the rows
-    val path = graft.ops.Bucketing.scratchRoot() + "/diversity_skew"
+    val path = graft.SparkSessions.scratchDir() + "/diversity_skew"
     (0 until 400)
       .map(i => (if (i % 10 < 7) 7L else (i % 10).toLong, i.toLong))
       .toDF("centroid_id", "vec_id").write.mode("overwrite").parquet(path)

@@ -35,7 +35,7 @@ class AnnEnrichStreamSpec extends AnyFunSuite {
       .select("vec_id", "embedding")
     val tag = Dir.replaceAll("[^A-Za-z0-9]+", "_")
     val path = IvfIndex.ensure(spark,
-      s"${graft.ops.Bucketing.scratchRoot()}/ivf/${tag}_k$K",
+      s"${graft.SparkSessions.scratchDir()}/ivf/${tag}_k$K",
       Vectors.assignToCentroids(emb, "vec_id", centroids)
         .withColumn("_n", Vectors.norm(col("embedding"))))
     spark.read.parquet(path)
@@ -108,7 +108,7 @@ class AnnEnrichStreamSpec extends AnyFunSuite {
       .select(col("vec_id").as("centroid_id"), col("embedding").as("c_emb"))
     val tag = Dir.replaceAll("[^A-Za-z0-9]+", "_")
     val path = IvfIndex.ensure(spark,
-      s"${graft.ops.Bucketing.scratchRoot()}/ivf/${tag}_enrich_k$k",
+      s"${graft.SparkSessions.scratchDir()}/ivf/${tag}_enrich_k$k",
       Vectors.assignToCentroids(emb, "vec_id", cents64)
         .withColumn("_n", Vectors.norm(col("embedding"))))
     val idx64 = spark.read.parquet(path)

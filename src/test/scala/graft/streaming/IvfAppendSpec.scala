@@ -47,7 +47,7 @@ class IvfAppendSpec extends AnyFunSuite {
       .select(col("vec_id").as("centroid_id"), col("embedding").as("c_emb"))
 
   test("streamed appends: batch parity, idempotent replay, pruning through the union") {
-    val path = graft.ops.Bucketing.scratchRoot() + "/ivf_stream_test"
+    val path = graft.SparkSessions.scratchDir() + "/ivf_stream_test"
     val (baseHalf, streamHalf) = corpus.splitAt(corpus.size / 2)
     graft.ops.Vectors
       .assignToCentroids(baseHalf.toDF().select("vec_id", "embedding"),

@@ -185,6 +185,36 @@ class NeardupStreamSpec extends AnyFunSuite {
     assert(!got(5L)._1, "pre-restart claims were lost")
   }
 
+  test("band-claim state falls once event time passes the eviction horizon") {
+    implicit val sqlCtx = spark.sqlContext
+    val mem = MemoryStream[Doc]
+    val q = TwsGates.neardupStreamTws(mem.toDF())
+      .writeStream.format("memory").queryName("neardup_evict")
+      .outputMode("append").start()
+    def stateRows(): Long = {
+      val ops = q.lastProgress.stateOperators
+      assert(ops.length == 1, "one stateful operator: the band-claim store")
+      ops.head.numRowsTotal
+    }
+    try {
+      mem.addData(feed: _*); q.processAllAvailable()
+      val primed = stateRows()
+      assert(primed > 0)
+      // the feed's claims are due at t0 + horizon; one later document moves
+      // the watermark (its ts − horizon) past them, and the no-data batch
+      // that follows fires their eviction timers
+      val horizon = TwsGates.horizonMillis("2 hours")
+      val late = new java.sql.Timestamp(t0.getTime + 2 * horizon + 60000L)
+      mem.addData(Doc(8L, "a late document on checkpoint compaction and " +
+        "snapshot uploads that arrives well after the eviction horizon", 7L,
+        late))
+      q.processAllAvailable()
+      val after = stateRows()
+      assert(after < primed,
+        s"state did not fall past the horizon: $primed -> $after rows")
+    } finally q.stop()
+  }
+
   test("JVM signature equals the batch aggregate on adversarial texts") {
     // seeded adversarial corpus: unicode (incl. astral), empty words from
     // doubled/leading/trailing spaces, sub-shingle-length and null texts —
