@@ -13,13 +13,14 @@ import org.apache.spark.sql.SparkSession
 object SparkSessions {
 
   /** Scratch root for shuffle/spill files and the engine's own scratch
-    * tables (bucketed copies, IVF indexes): tmpfs when available. This
-    * harness's virtual disk sustains ~8 MB/s synced writes (measured
-    * round 7), so on /tmp the shuffle-heaviest queries time the disk, not
-    * the engine — dedup_ngram_jaccard degraded 12x while scan-shaped
-    * queries moved 2x. A real cluster provisions NVMe scratch for exactly
-    * this reason; tmpfs is this single-node box's equivalent. sf0.1
-    * shuffle volumes are ≤ a few GB against 126 GB of tmpfs.
+    * tables (bucketed copies, IVF indexes): `SPARK_GRAFT_LOCAL_DIR`, else
+    * tmpfs when writable, else the JVM temp dir. On a VM whose virtual
+    * disk sustained ~8 MB/s synced writes (measured round 7), scratch on
+    * that disk made the shuffle-heaviest queries time the disk, not the
+    * engine — dedup_ngram_jaccard degraded 12x while scan-shaped queries
+    * moved 2x. A cluster provisions NVMe scratch for the same reason;
+    * tmpfs is a single node's equivalent, and sf0.1 shuffle volumes are
+    * ≤ a few GB.
     */
   def scratchDir(): String =
     sys.env.getOrElse("SPARK_GRAFT_LOCAL_DIR",
