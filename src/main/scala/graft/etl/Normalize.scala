@@ -21,10 +21,22 @@ object Normalize {
     regexp_replace(c, ",", ".").cast(DoubleType)
 
   /** Strip every non-digit then cast, e.g. `"529629c"` → `529629L`
-    * (reference `etl/orders_etl.py:157-159`).
+    * (reference `etl/orders_etl.py:157-159`). Python's `\D` and pandas'
+    * int parse are Unicode-aware, so a decimal digit of any script counts:
+    * `(?U)\D` strips, then each Nd code point becomes its ASCII value
+    * (`"12٣"` → 123). Java's plain `\D` is ASCII-only.
     */
   def digitsToLong(c: Column): Column =
-    regexp_replace(c, "\\D", "").cast(LongType)
+    translate(regexp_replace(c, "(?U)\\D", ""), unicodeDigits, asciiDigits)
+      .cast(LongType)
+
+  /** Every `Character.DECIMAL_DIGIT_NUMBER` code point, and its value. */
+  private val (unicodeDigits, asciiDigits) = {
+    val nd = (0 to Character.MAX_CODE_POINT)
+      .filter(Character.getType(_) == Character.DECIMAL_DIGIT_NUMBER)
+    (nd.map(cp => Character.toString(cp)).mkString,
+      nd.map(cp => Character.forDigit(Character.digit(cp, 10), 10)).mkString)
+  }
 
   /** Apply the full orders TYPES_SCHEMA (reference `etl/orders_etl.py:34-42`,
     * `:149-161`): comma-decimal `sum`, dirty `product_id`, ISO-8601

@@ -1,34 +1,30 @@
 package graft.ops
 
-import org.apache.spark.sql.{Column, DataFrame}
+import scala.collection.mutable
+
+import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 
 /** Distributed BPE (byte-pair-encoding) merge-rule training — the
-  * tokenizer-learning step of an LLM data pipeline, as ONE lazy Spark
-  * plan: no driver loop, no collect.
+  * tokenizer-learning step of an LLM data pipeline — as one task-side
+  * fold over the capped vocabulary: no driver loop, no driver collect,
+  * and no Spark job at construction.
   *
   * Round structure (classic Sennrich/GPT BPE over a word-frequency
   * table):
   *   1. count adjacent symbol pairs, weighted by word frequency
   *      (adjacent-position counting, overlaps included — the standard);
   *   2. the argmax pair (ties broken lexicographically, so every engine
-  *      agrees) becomes merge rule r;
-  *   3. apply the merge to every word — LEFTMOST-NON-OVERLAPPING, via an
-  *      `aggregate` fold over the symbol array (the fold appends, or
-  *      replaces its last element when (last, next) equals the rule —
-  *      exactly the sequential semantics, in a parallel map).
+  *      agrees) becomes merge rule r; a round with no pair left emits the
+  *      no-op rule ("", "", 0), since the empty string is never a symbol;
+  *   3. apply the merge to every word, LEFTMOST-NON-OVERLAPPING.
   *
-  * The trick that keeps it lazy: each round's rule is a ONE-ROW frame
-  * (`orderBy.limit(1)`) cross-joined (broadcast) into the next round's
-  * fold, which references its columns instead of driver-collected
-  * literals. R rounds = R nested folds in one DAG; Catalyst plans the
-  * whole chain, and nothing executes until the sink asks.
-  *
-  * Scale: the corpus reduces ONCE to a word-frequency table (the only
-  * data-sized pass); every round then runs over vocab-sized data. At
-  * 100 TB the vocab table is millions of rows — each round is a
-  * hash-aggregate + a 1-row TakeOrdered over it, embarrassingly small
-  * next to the corpus scan that produced it.
+  * Scale: the corpus reduces once to a word-frequency table, the only
+  * data-sized pass, and stays distributed. `orderBy(c desc, w).limit`
+  * already hands the `maxWords`-capped vocabulary to a single task, so the
+  * R rounds run there as plain Scala instead of as R distributed jobs.
+  * Applying the learned rules to every distinct word is data-sized again
+  * and runs as a distributed per-word map.
   */
 object Bpe {
 
@@ -40,8 +36,10 @@ object Bpe {
     * affordable.
     */
   def wordTable(docs: DataFrame, textCol: String, maxWords: Int): DataFrame =
-    wordCounts(docs, textCol)
-      .orderBy(col("c").desc, col("w")).limit(maxWords)
+    capped(wordCounts(docs, textCol), maxWords)
+
+  private def capped(counts: DataFrame, maxWords: Int): DataFrame =
+    counts.orderBy(col("c").desc, col("w")).limit(maxWords)
 
   /** The one word-normalization contract (explode → lower → alphabet
     * filter → count) — every consumer and both DuckDB oracles must agree
@@ -53,89 +51,73 @@ object Bpe {
       .filter(col("w").rlike("^[a-z]+$"))
       .groupBy("w").agg(count(lit(1)).as("c"))
 
-  /** Split words into character symbols; Spark's split keeps the
-    * trailing zero-width match as an empty string — drop it.
-    */
-  private def withSyms(df: DataFrame): DataFrame =
-    df.select(col("w"), col("c"),
-      filter(split(col("w"), "(?!^)"), x => length(x) > 0).as("syms"))
+  /** One rule: (a, b, pair_count). */
+  private type Rule = (String, String, Long)
 
-  /** One merge round over (w, c, syms): returns (rule, merged) where
-    * `rule` is the 1-row argmax frame (a, b, pair_count) and `merged` the
-    * vocabulary with the rule applied.
+  /** The learned rules as a ONE-row frame (in round order),
+    * computed in the single task that holds the capped vocabulary. The
+    * global aggregate always yields its one row, an empty corpus included,
+    * so a crossJoin onto it never drops words.
     */
-  private def round(vocab: DataFrame): (DataFrame, DataFrame) = {
-    val pairs = vocab
-      .select(col("c"), explode(zip_with(
-        slice(col("syms"), lit(1), size(col("syms")) - 1),
-        slice(col("syms"), lit(2), size(col("syms")) - 1),
-        (a, b) => struct(a.as("a"), b.as("b")))).as("p"))
-      .groupBy(col("p.a").as("a"), col("p.b").as("b"))
-      .agg(sum(col("c")).as("pair_count"))
-    // the sentinel no-op rule (a = b = '' — the empty string is never a
-    // symbol) guarantees the rule frame is EXACTLY one row even when the
-    // vocabulary has no pairs left: an empty argmax would otherwise
-    // crossJoin-annihilate the whole word table, silently losing every
-    // tokenization. An exhausted round emits the explicit no-op instead.
-    val sentinel = vocab.sparkSession.range(1)
-      .select(lit("").as("a"), lit("").as("b"), lit(0L).as("pair_count"))
-    val rule = pairs.orderBy(col("pair_count").desc, col("a"), col("b"))
-      .limit(1)
-      .unionAll(sentinel)
-      .orderBy(col("pair_count").desc, col("a"), col("b")).limit(1)
-    (rule, applyRule(vocab, rule))
+  private def learned(capped: DataFrame, rounds: Int): Dataset[Seq[Rule]] = {
+    import capped.sparkSession.implicits._
+    capped.select(collect_list(struct(col("w").as("_1"), col("c").as("_2"))))
+      .as[Seq[(String, Long)]]
+      .map(words => learn(words, rounds))
   }
+
+  private def learn(words: Seq[(String, Long)], rounds: Int): Seq[Rule] = {
+    var vocab = words.map { case (w, c) => (w.map(_.toString).toVector, c) }
+    (1 to rounds).map { _ =>
+      val pairs = mutable.HashMap.empty[(String, String), Long]
+      for ((syms, c) <- vocab; i <- 1 until syms.size) {
+        val p = (syms(i - 1), syms(i))
+        pairs(p) = pairs.getOrElse(p, 0L) + c
+      }
+      // Scala's String order (UTF-16 units) equals Spark's byte order
+      // here only because wordCounts keeps `^[a-z]+$`: symbols are ASCII
+      val ((a, b), n) = pairs.minByOption { case ((a, b), n) => (-n, a, b) }
+        .getOrElse((("", ""), 0L))
+      vocab = vocab.map { case (syms, c) => (merge(syms, a, b), c) }
+      (a, b, n)
+    }
+  }
+
+  /** Leftmost-non-overlapping merge: append each symbol, or replace the
+    * last one when (last, next) is (a, b). The no-op rule ("", "") never
+    * matches a symbol.
+    */
+  private def merge(syms: Vector[String], a: String, b: String): Vector[String] =
+    if (syms.isEmpty) syms
+    else syms.tail.foldLeft(Vector(syms.head)) { (acc, x) =>
+      if (acc.last == a && x == b) acc.init :+ (a + b) else acc :+ x
+    }
 
   /** Apply `rounds` learned merge rules to EVERY distinct word (not just
     * the capped training vocabulary) and return (w, n_tokens) — the
-    * tokenizer's inference path. Same lazy shape as training: each rule
-    * is a 1-row broadcast crossJoin feeding the next fold; the word list
-    * is distinct-word-sized, so a corpus tokenizes by a broadcast join
+    * tokenizer's inference path. The one-row rule frame is broadcast
+    * onto the distinct-word table and folded per word; the word list is
+    * distinct-word-sized, so a corpus tokenizes by a broadcast join
     * against this table instead of folding per occurrence.
     */
   def tokenizeWords(docs: DataFrame, textCol: String, rounds: Int,
                     maxWords: Int): DataFrame = {
-    // ONE data-sized pass: the word-count table feeds BOTH the capped
-    // training vocabulary and the full word list (a second corpus
-    // explode for the distinct words would double the only cost that
-    // scales with the data)
-    val counts = wordCounts(docs, textCol).localCheckpoint(false)
-    var vocab = withSyms(counts.orderBy(col("c").desc, col("w"))
-      .limit(maxWords)).localCheckpoint(false)
-    var all = withSyms(counts.select(col("w"), lit(1L).as("c")))
-      .localCheckpoint(false)
-    (1 to rounds).foreach { r =>
-      val (rule, mergedTrain) = round(vocab)
-      // the rule LEARNED on the training vocab applies to ALL words.
-      // Checkpoint cadence is per-chain, measured (NOTES_r10): `all` is
-      // single-referenced per round, so a cadence-5 checkpoint saves 8
-      // stage materializations of the distinct-words table per 10 rounds
-      // and costs only deeper (≤5) nested-fold codegen — 2.9 → 2.6s warm
-      // at sf0.1. Cadence 1 on vocab stands: round() reads it twice
-      // (pairs + merge), and both the r9 everywhere-experiment and the
-      // r10 vocab-only retry measured the uncheckpointed double
-      // reference SLOWER (3.7s / 2.9s); zero `all` checkpoints also
-      // loses (3.1s — 10 nested folds of optimizer/codegen depth).
-      all = applyRule(all, rule)
-      if (r % 5 == 0 || r == rounds) all = all.localCheckpoint(false)
-      vocab = mergedTrain.localCheckpoint(false)
-    }
-    all.select(col("w"), size(col("syms")).as("n_tokens"))
+    import docs.sparkSession.implicits._
+    // one word-count table feeds both the capped training vocabulary and
+    // the full word list, so the plan reuses its exchange: one corpus scan.
+    // Both sides keep `c`: pruning it from the word list would change that
+    // side's aggregate and defeat the reuse
+    val counts = wordCounts(docs, textCol)
+    counts.crossJoin(broadcast(learned(capped(counts, maxWords), rounds)))
+      .as[(String, Long, Seq[Rule])]
+      .map { case (w, _, rules) =>
+        val syms = rules.foldLeft(w.map(_.toString).toVector) {
+          case (s, (a, b, _)) => merge(s, a, b)
+        }
+        (w, syms.size)
+      }
+      .toDF("w", "n_tokens")
   }
-
-  private def applyRule(vocab: DataFrame, rule: DataFrame): DataFrame =
-    vocab.crossJoin(broadcast(rule))
-      .select(col("w"), col("c"),
-        when(size(col("syms")) < 2, col("syms")).otherwise(
-          aggregate(
-            slice(col("syms"), lit(2), size(col("syms")) - 1),
-            slice(col("syms"), lit(1), lit(1)),
-            (acc, x) =>
-              when(element_at(acc, -1) === col("a") && x === col("b"),
-                concat(slice(acc, lit(1), size(acc) - 1),
-                  array(concat(col("a"), col("b")))))
-                .otherwise(concat(acc, array(x)))))
-          .as("syms"))
 
   /** Train `rounds` merge rules; returns one row per rule:
     * (round, a, b, merged, pair_count).
@@ -143,20 +125,11 @@ object Bpe {
   def trainMerges(docs: DataFrame, textCol: String, rounds: Int,
                   maxWords: Int): DataFrame = {
     require(rounds >= 1, "need at least one merge round")
-    var vocab = withSyms(wordTable(docs, textCol, maxWords))
-    val rules = (1 to rounds).map { r =>
-      // lazily checkpoint each vocab stage (the Graph.scala iteration
-      // pattern): rule r's subtree otherwise contains the whole chain up
-      // to r, so the union of R rules costs O(R²) corpus scans and the
-      // nested fold expressions blow up optimizer/codegen memory; with
-      // ≤maxWords-row stages materialized once, it is one corpus scan +
-      // R tiny rounds, and the plan stays round-constant
-      vocab = vocab.localCheckpoint(false)
-      val (rule, merged) = round(vocab)
-      vocab = merged
-      rule.select(lit(r).as("round"), col("a"), col("b"),
-        concat(col("a"), col("b")).as("merged"), col("pair_count"))
-    }
-    rules.reduce(_.unionAll(_)).orderBy("round")
+    import docs.sparkSession.implicits._
+    learned(wordTable(docs, textCol, maxWords), rounds)
+      .flatMap(_.zipWithIndex.map { case ((a, b, n), i) =>
+        (i + 1, a, b, a + b, n)
+      })
+      .toDF("round", "a", "b", "merged", "pair_count")
   }
 }

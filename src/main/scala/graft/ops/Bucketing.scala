@@ -42,7 +42,11 @@ object Bucketing {
 
   /** Write `df` as a bucketed, bucket-sorted external parquet table and
     * register it in the session catalog under `table` (dropped first if
-    * present — same truncate-and-load contract as [[graft.etl.Sink]]).
+    * present). The write is NOT atomic, unlike [[graft.etl.Sink]]'s staged
+    * truncate-and-load: the drop and `SaveMode.Overwrite` remove the old
+    * table before the job runs, so a failed write leaves no table. It is
+    * for scratch copies only, which `bucketed_join` rewrites on every
+    * construction.
     */
   def writeBucketed(spark: SparkSession, df: DataFrame, table: String,
                     path: String, key: String, nBuckets: Int): Unit = {

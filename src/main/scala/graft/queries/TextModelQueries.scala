@@ -132,13 +132,13 @@ object TextModelQueries {
   val BpeRounds   = 10
   val BpeMaxWords = 2000
 
-  /** Distributed BPE merge-rule training ([[graft.ops.Bpe]]): 10 rounds
-    * learned as ONE lazy DAG — each round's argmax pair is a 1-row
-    * broadcast into the next round's merge fold, never a driver collect.
-    * The oracle replays every round (pair count → argmax → leftmost-
-    * non-overlapping merge via a string fold), so a divergence in ANY
-    * round's counting, tie-break, or merge application breaks every
-    * subsequent row.
+  /** Distributed BPE merge-rule training ([[graft.ops.Bpe]]): the corpus
+    * reduces to a word-frequency table, then 10 rounds run as one
+    * task-side fold over the `BpeMaxWords`-capped vocabulary — no driver
+    * collect, no job per round. The oracle replays every round (pair
+    * count → argmax → leftmost-non-overlapping merge via a string fold),
+    * so a divergence in ANY round's counting, tie-break, or merge
+    * application breaks every subsequent row.
     */
   def bpeTrain(spark: SparkSession, dir: String): DataFrame =
     graft.ops.Bpe.trainMerges(
@@ -203,8 +203,9 @@ object TextModelQueries {
   }
 
   /** The tokenizer's INFERENCE path: apply the 10 learned merges to
-    * every distinct word (a broadcast-rule fold over the distinct-word
-    * table — per-word work, never per-occurrence), then tokenize the
+    * every distinct word (the one-row rule frame broadcast onto the
+    * distinct-word table and folded per word in a typed map — per-word
+    * work, never per-occurrence), then tokenize the
     * corpus by joining doc words against that table. Per-doc output:
     * word/token/char counts and chars-per-token — the compression the
     * learned vocab actually buys. Oracle replays training AND applies

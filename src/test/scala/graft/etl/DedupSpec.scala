@@ -13,6 +13,18 @@ class DedupSpec extends AnyFunSuite {
   private val spark = TestSpark.spark
   import spark.implicits._
 
+  /** An orders CSV with one line per (row, key, customer_id): key `k` is
+    * order_source_id 5000 + k with product_id 100 + k % 3.
+    */
+  private def ordersCsv(lines: Seq[(Int, Int, Int)]): String = {
+    val header = ",order_source_id,order_created_datetime,customer_id," +
+      "status,sum,quantity,name,surname,patronymic,product_id"
+    (header +: lines.map { case (row, k, customer) =>
+      s"$row,${5000 + k},2021-03-01 10:00:00,$customer,paid,10.5,1," +
+        s"Ivan,Petrov,Ivanovich,${100 + k % 3}"
+    }).mkString("", "\n", "\n")
+  }
+
   test("keepFirst keeps the row ranked first by the order column") {
     val df = Seq(
       (1L, "a", 10L, "first"),
@@ -59,15 +71,10 @@ class DedupSpec extends AnyFunSuite {
     // boundary; a second pass repeats every key far from its first row
     val n = 40
     val keys = (0 until n).map(_ / 2) ++ (0 until n).map(_ / 2)
-    val header = ",order_source_id,order_created_datetime,customer_id," +
-      "status,sum,quantity,name,surname,patronymic,product_id"
-    val lines = keys.zipWithIndex.map { case (k, row) =>
-      s"$row,${5000 + k},2021-03-01 10:00:00,$row,paid,10.5,1," +
-        s"Ivan,Petrov,Ivanovich,${100 + k % 3}"
-    }
     val dir = Files.createTempDirectory("graft-dedup-splits")
     val path = dir.resolve("orders.csv")
-    Files.writeString(path, (header +: lines).mkString("", "\n", "\n"))
+    Files.writeString(path, ordersCsv(keys.zipWithIndex.map {
+      case (k, row) => (row, k, row) }))
     val (splits, kept) = graft.ops.CatalogStats.withConf(spark,
         "spark.sql.files.maxPartitionBytes" -> "300") {
       val df = Readers.ordersCsv(spark, path.toString)
@@ -81,6 +88,35 @@ class DedupSpec extends AnyFunSuite {
       (5000 + k).toString -> rs.map(_._2).min.toString
     }
     assert(kept == firstRow)
+  }
+
+  test("keepFirstFileOrder keeps (path, line) order over several files of several splits") {
+    import java.nio.file.Files
+    // three files, each later-named one larger; every key recurs within a
+    // file (adjacent rows, so pairs straddle split boundaries) and in the
+    // other files, so the first row must win across files AND splits
+    val dir = Files.createTempDirectory("graft-dedup-files")
+    val rows = Seq("orders-a.csv" -> 12, "orders-b.csv" -> 30,
+        "orders-c.csv" -> 60).zipWithIndex.flatMap { case ((name, n), f) =>
+      val keys = (0 until n).map(i => (i / 2 + 3 * f) % 10)
+      Files.writeString(dir.resolve(name), ordersCsv(keys.zipWithIndex.map {
+        case (k, row) => (row, k, 1000 * f + row) }))
+      keys.zipWithIndex.map { case (k, row) => (k, (f, row)) }
+    }
+    val (splits, kept) = graft.ops.CatalogStats.withConf(spark,
+        "spark.sql.files.maxPartitionBytes" -> "300") {
+      val df = Readers.ordersCsv(spark, dir.toString)
+      (df.rdd.getNumPartitions,
+        Dedup.keepFirstFileOrder(df, Seq("order_source_id", "product_id"))
+          .select("order_source_id", "customer_id").as[(String, String)]
+          .collect().toMap)
+    }
+    assert(splits >= 9)
+    val firstRow = rows.groupBy(_._1).map { case (k, rs) =>
+      val (f, row) = rs.map(_._2).min
+      (5000 + k).toString -> (1000 * f + row).toString
+    }
+    assert(kept.size == 10 && kept == firstRow)
   }
 
   test("dedup row count never exceeds input and never loses keys") {

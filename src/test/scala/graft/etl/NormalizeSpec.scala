@@ -60,6 +60,13 @@ class NormalizeSpec extends AnyFunSuite {
     val ok = Seq("12x3", "00529629c").toDF("v")
       .select(Normalize.digitsToLong($"v").as("n")).as[Long].collect().toSeq
     assert(ok == Seq(123L, 529629L))
+    // any script's decimal digits count, as in Python's \D and pandas'
+    // int parse: Arabic-Indic, fullwidth, and supplementary-plane
+    // mathematical digits (U+1D7D9, U+1D7DA)
+    val unicode = Seq("12\u0663", "\u0663\u0664\u0665", "\uFF11\uFF12x",
+        "\uD835\uDFD9\uD835\uDFDA7").toDF("v")
+      .select(Normalize.digitsToLong($"v").as("n")).as[Long].collect().toSeq
+    assert(unicode == Seq(123L, 345L, 12L, 127L))
     // value with no digits at all → empty string → ANSI cast throws, the
     // same fail-fast contract as pandas astype(int) (SURVEY §2.5)
     intercept[Exception] {

@@ -1,6 +1,7 @@
 package graft.ops
 
 import graft.TestSpark
+import org.apache.spark.JobCounter
 import org.scalatest.funsuite.AnyFunSuite
 
 class BpeSpec extends AnyFunSuite {
@@ -68,5 +69,29 @@ class BpeSpec extends AnyFunSuite {
       .collect().map(r => (r.getString(0), r.getLong(1)))
     // 'foo'×2 first, then the count-1 words in word order: 'bar'
     assert(words.toSeq == Seq(("foo", 2L), ("bar", 1L)))
+  }
+
+  test("job shape: building runs no job, training is one task-side fold") {
+    // the rounds run in the one task that holds the capped vocabulary,
+    // not as one distributed job per round (30 and 40 jobs before, 19 of
+    // them at construction)
+    val docs = Seq("the the the cat thecat", "the cat sat on a mat",
+      "aaaa aaaa banana bandana").toDF("text")
+    val jobsOf = new JobCounter(spark.sparkContext)
+    try {
+      var train, tok: org.apache.spark.sql.DataFrame = null
+      assert(jobsOf { train = Bpe.trainMerges(docs, "text", 10, 5) } == 0)
+      assert(jobsOf { tok = Bpe.tokenizeWords(docs, "text", 10, 5) } == 0)
+      assert(jobsOf(train.collect()) <= 2)
+      assert(jobsOf(tok.collect()) <= 4)
+    } finally jobsOf.close()
+  }
+
+  test("an empty corpus yields one no-op rule per round and no words") {
+    val docs = Seq.empty[String].toDF("text")
+    val rules = Bpe.trainMerges(docs, "text", rounds = 2, maxWords = 10)
+      .collect().map(r => (r.getInt(0), r.getString(3), r.getLong(4)))
+    assert(rules.toSeq == Seq((1, "", 0L), (2, "", 0L)))
+    assert(Bpe.tokenizeWords(docs, "text", 2, 10).collect().isEmpty)
   }
 }

@@ -47,11 +47,6 @@ class LazyConstructionSpec extends AnyFunSuite {
     "pagerank", "lpa_communities", "graph_triangles", "graph_khop",
     "funnel_latency", "rfm_segments",
     "outlier_mad", // r8: med/bounds scalar frames checkpointed (3.1s→1.85s)
-    "bpe_train", // r8: per-round vocab stages checkpointed — un-checkpointed,
-                 // the union of R rules is O(R²) corpus scans and the nested
-                 // folds OOM'd codegen (measured: heap exhaustion at R=10)
-    "bpe_tokenize", // r8: same checkpointed round chain, plus the all-words
-                    // table it folds the learned rules over
     "split_leakage", // r14: the (doc, split, fingerprint) frame feeds three
                      // consumers; un-checkpointed the shingle explode ran
                      // SIX times (no ReuseExchange across the aggregate
