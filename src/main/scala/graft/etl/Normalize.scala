@@ -26,20 +26,16 @@ object Normalize {
     * `(?U)\D` strips, then each Nd code point becomes its ASCII value
     * (`"12٣"` → 123). Java's plain `\D` is ASCII-only.
     */
-  def digitsToLong(c: Column): Column = {
-    val digits = regexp_replace(c, "(?U)\\D", "")
-    // translate allocates per character, so run it only when a non-ASCII
-    // digit survived: an all-ASCII value has as many bytes as characters
-    when(octet_length(digits) === length(digits), digits)
-      .otherwise(translate(digits, unicodeDigits, asciiDigits)).cast(LongType)
-  }
+  def digitsToLong(c: Column): Column =
+    translate(regexp_replace(c, "(?U)\\D", ""), unicodeDigits, asciiDigits)
+      .cast(LongType)
 
   /** Every `Character.DECIMAL_DIGIT_NUMBER` code point, and its value. */
   private val (unicodeDigits, asciiDigits) = {
     val nd = (0 to Character.MAX_CODE_POINT)
       .filter(Character.getType(_) == Character.DECIMAL_DIGIT_NUMBER)
     (nd.map(cp => Character.toString(cp)).mkString,
-      nd.map(cp => Character.forDigit(Character.digit(cp, 10), 10)).mkString)
+      nd.map(Character.digit(_, 10)).mkString)
   }
 
   /** Apply the full orders TYPES_SCHEMA (reference `etl/orders_etl.py:34-42`,

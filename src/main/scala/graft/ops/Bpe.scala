@@ -1,7 +1,5 @@
 package graft.ops
 
-import scala.collection.mutable
-
 import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 
@@ -54,26 +52,24 @@ object Bpe {
   /** One rule: (a, b, pair_count). */
   private type Rule = (String, String, Long)
 
-  /** The learned rules as a ONE-row frame (in round order),
-    * computed in the single task that holds the capped vocabulary. The
-    * global aggregate always yields its one row, an empty corpus included,
-    * so a crossJoin onto it never drops words.
+  /** The learned rules, in round order, as a ONE-row frame computed in
+    * the single task that holds the capped vocabulary. A global aggregate
+    * yields its one row even for an empty corpus, where
+    * `coalesce(1).mapPartitions` would see no partition and emit no rule.
     */
-  private def learned(capped: DataFrame, rounds: Int): Dataset[Seq[Rule]] = {
-    import capped.sparkSession.implicits._
-    capped.select(collect_list(struct(col("w").as("_1"), col("c").as("_2"))))
+  private def learned(vocab: DataFrame, rounds: Int): Dataset[Seq[Rule]] = {
+    import vocab.sparkSession.implicits._
+    vocab.select(collect_list(struct(col("w").as("_1"), col("c").as("_2"))))
       .as[Seq[(String, Long)]]
       .map(words => learn(words, rounds))
   }
 
   private def learn(words: Seq[(String, Long)], rounds: Int): Seq[Rule] = {
-    var vocab = words.map { case (w, c) => (w.map(_.toString).toVector, c) }
+    var vocab = words.map { case (w, c) => (symbols(w), c) }
     (1 to rounds).map { _ =>
-      val pairs = mutable.HashMap.empty[(String, String), Long]
-      for ((syms, c) <- vocab; i <- 1 until syms.size) {
-        val p = (syms(i - 1), syms(i))
-        pairs(p) = pairs.getOrElse(p, 0L) + c
-      }
+      val pairs = vocab.flatMap { case (syms, c) =>
+        syms.sliding(2).collect { case Seq(a, b) => ((a, b), c) }
+      }.groupMapReduce(_._1)(_._2)(_ + _)
       // Scala's String order (UTF-16 units) equals Spark's byte order
       // here only because wordCounts keeps `^[a-z]+$`: symbols are ASCII
       val ((a, b), n) = pairs.minByOption { case ((a, b), n) => (-n, a, b) }
@@ -82,6 +78,9 @@ object Bpe {
       (a, b, n)
     }
   }
+
+  /** One symbol per character: words are `^[a-z]+$`, so no surrogates. */
+  private def symbols(w: String): Vector[String] = w.map(_.toString).toVector
 
   /** Leftmost-non-overlapping merge: append each symbol, or replace the
     * last one when (last, next) is (a, b). The no-op rule ("", "") never
@@ -111,7 +110,7 @@ object Bpe {
     counts.crossJoin(broadcast(learned(capped(counts, maxWords), rounds)))
       .as[(String, Long, Seq[Rule])]
       .map { case (w, _, rules) =>
-        val syms = rules.foldLeft(w.map(_.toString).toVector) {
+        val syms = rules.foldLeft(symbols(w)) {
           case (s, (a, b, _)) => merge(s, a, b)
         }
         (w, syms.size)
