@@ -4,10 +4,12 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 /** Near-duplicate detection for document corpora — the MinHash/LSH and
-  * SimHash family, built entirely from codegen'd built-ins (split /
-  * transform / explode / md5 / min aggregates). No UDFs, no driver-side
-  * loops: every step is a narrow map or a keyed aggregate, so the pipeline
-  * scales to corpus sizes where O(n²) comparison is impossible.
+  * SimHash family. No driver-side loops: every step is a narrow map or a
+  * keyed aggregate, so the pipeline scales to corpus sizes where O(n²)
+  * comparison is impossible. The MinHash signature is one JVM fold per
+  * document ([[minhashSignatureJvm]]), shared by batch and stream; every
+  * other step is built from codegen'd built-ins (split / transform /
+  * explode / md5 / aggregates).
   *
   * Hashing: `md5(salt || shingle)` with lexicographic `min` as the hash-family
   * member. md5 is deterministic and identical across engines (unlike
@@ -15,7 +17,7 @@ import org.apache.spark.sql.functions._
   * oracle-checkable in DuckDB.
   *
   * Scale shape (N docs, s shingles/doc):
-  *   - shingle+signature: one explode (N·s rows) + one groupBy(doc) — linear;
+  *   - signature: one map pass, one row per document — linear;
   *   - LSH banding: b band keys per doc, self-join on band key — output is
   *     only genuinely-colliding pairs, the whole point of LSH (b·r = k
   *     signature positions; P[collide] = 1-(1-j^r)^b for Jaccard j);
@@ -103,8 +105,9 @@ object TextDedup {
     // shared-frame shape splitRebalance pins). The pinned frame is one
     // row per DISTINCT (doc, window) — bounded by corpus token count;
     // materializing it once vs hashing every window twice is the same
-    // trade the fps pin in splitRebalance documents. Lazy — construction
-    // stays job-free.
+    // trade the fps pin in splitRebalance documents. Lazy (no driver
+    // action), but under AQE building the frame runs the aggregate's
+    // shuffle map stage.
     val perDocFp = spans.groupBy(col(idCol), col("fp"))
       .agg(count(lit(1)).as("c"))
       .localCheckpoint(false)
@@ -179,62 +182,45 @@ object TextDedup {
         coalesce(col("cleaned_md5"), md5(lit(""))).as("cleaned_md5"))
   }
 
-  /** MinHash signature: one row per doc, columns mh0..mh{k-1} (LongType,
-    * each an unsigned 32-bit hash value).
+  /** MinHash signature: one row per input row, columns mh0..mh{k-1}
+    * (LongType, each an unsigned 32-bit hash value). Documents with fewer
+    * than `shingleN` words (null text included) get no row.
     *
     * Hash family: each salted md5 yields four independent 32-bit (8 hex
     * char) hash values — `k` hashes cost only ceil(k/4) md5 evaluations per
     * shingle instead of k.
     *
-    * The hex slice is converted to a numeric value BEFORE the min
-    * aggregation (order-equivalent: fixed-width lowercase hex sorts
-    * lexicographically = numerically). This is a plan-shape decision, not
-    * cosmetics: `min(long)` has a fixed-width mutable buffer so Spark plans
-    * a HashAggregate with map-side partial aggregation over the exploded
-    * shingles; `min(string)` forces a SortAggregate — a full sort of the
-    * N·s shingle rows per side — which is the difference between linear
-    * and n·log(n) at corpus scale.
+    * Plan shape: a map-only pass that runs [[minhashSignatureJvm]] once per
+    * row through a udf — no explode, no aggregate, no exchange of its own,
+    * and the same function the streaming near-dup gate runs. The udf
+    * decodes the UTF-8 text to a Java `String` before splitting and
+    * hashing, exactly as the stream does, so text that is not valid UTF-8
+    * hashes its replacement characters. Rows are not grouped by `idCol`:
+    * callers pass unique ids (every query key passes `doc_id`).
     */
   def minhashSignatures(docs: DataFrame, idCol: String, textCol: String,
-                        k: Int = NumHashes, shingleN: Int = 3): DataFrame =
-    minhashFromShingleSet(shingleRows(docs, idCol, textCol, shingleN), idCol, k)
-
-  /** MinHash signatures from pre-built (id, s) shingle rows. Duplicate
-    * shingles are harmless (`min` is idempotent), so this accepts either
-    * the raw exploded rows — the standalone path, where the map-side
-    * partial `min` means the shingle set itself never shuffles — or an
-    * already-distinct shingle frame shared with a Jaccard verification
-    * stage (see [[distinctShingles]]): MinHash over the distinct SET is
-    * definitionally the same signature.
-    */
-  def minhashFromShingleSet(shingleSet: DataFrame, idCol: String,
-                            k: Int = NumHashes): DataFrame = {
-    val mins = (0 until k).map { i =>
-      val salt = i / 4
-      val off = (i % 4) * 8 + 1
-      min(conv(substring(md5(concat(lit(s"s$salt|"), col("s"))), off, 8),
-        16, 10).cast("long")).as(s"mh$i")
-    }
-    shingleSet.groupBy(idCol).agg(mins.head, mins.tail: _*)
+                        k: Int = NumHashes, shingleN: Int = 3): DataFrame = {
+    val sign = udf((text: String) => minhashSignatureJvm(text, k, shingleN))
+    graft.etl.Readers.fanOut(docs.select(col(idCol), col(textCol)))
+      .select(col(idCol), sign(col(textCol)).as("__mh"))
+      .filter(col("__mh").isNotNull)
+      .select(col(idCol) +: (0 until k).map(i => col("__mh")(i).as(s"mh$i")): _*)
   }
 
-  /** ROW-LOCAL MinHash signature columns — the streaming twin of
-    * [[minhashFromShingleSet]]: identical per-position hash (salted md5,
-    * four 32-bit lanes per salt) folded with `array_min` over the
-    * document's own shingle array instead of a grouped `min`, so the
-    * signature needs NO aggregate and fuses into a stream's source scan
-    * (a streaming groupBy would be a stateful operator; a document is a
-    * bounded row, so the fold belongs inside it). Bit-identical to the
-    * batch signature by construction — NeardupStreamSpec's "row-local
-    * MinHash equals the batch aggregate signature" pins it.
+  /** ROW-LOCAL MinHash signature columns — the Column-expression
+    * reference for [[minhashSignatureJvm]]: the same per-position hash
+    * (salted md5, four 32-bit lanes per salt) folded with `array_min` over
+    * the document's own shingle array, built only from Spark built-ins so
+    * it checks the JVM fold independently. NeardupStreamSpec pins the two,
+    * and [[minhashSignatures]], equal.
     *
     * `shingles` must be a BOUND attribute holding the document's shingle
     * array ([[shinglesFromWords]] projected to a column first) — an
     * inline expression would be duplicated into every one of the k
     * min-folds. Documents with an empty shingle array (fewer than n
-    * words) yield null columns (the batch path gives them no signature
-    * row at all) — callers must route them around any bucket keying,
-    * never into it.
+    * words) yield null columns ([[minhashSignatures]] gives them no row
+    * at all) — callers must route them around any bucket keying, never
+    * into it.
     */
   def rowMinhashCols(shingles: Column, k: Int = NumHashes): Seq[Column] =
     rowMinhashFromHashes(rowMinhashSaltArrays(shingles, k), k)
@@ -254,8 +240,8 @@ object TextDedup {
     }
 
   /** Signature lanes from bound salt arrays: lane i reads 8 hex chars of
-    * salt array i/4 at offset (i%4)·8 — identical lane layout to the
-    * batch [[minhashFromShingleSet]].
+    * salt array i/4 at offset (i%4)·8 — identical lane layout to
+    * [[minhashSignatureJvm]].
     */
   def rowMinhashFromHashes(hashArrays: Seq[Column],
                            k: Int = NumHashes): Seq[Column] =
@@ -266,21 +252,20 @@ object TextDedup {
         .as(s"mh$i")
     }
 
-  /** Plain-JVM per-document MinHash — the HOT row-local path. The Column
+  /** Plain-JVM per-document MinHash — the one production signature:
+    * [[minhashSignatures]] runs it per row in batch and
+    * [[graft.streaming.TwsGates]] per streamed document. The Column
     * formulation above is correct but every per-shingle step runs inside
     * higher-order-function lambdas, which Spark evaluates INTERPRETED
     * (ArrayTransform is outside whole-stage codegen) — measured ~2.4 ms
-    * per document, 10× the batch explode+codegen pipeline's per-doc cost.
-    * A stream cannot use the batch shape (the min would be a stateful
-    * aggregation), so the fold runs as one tight JVM loop per document
-    * instead: same split/shingle/salted-md5/lane layout, byte-identical
-    * output. NeardupStreamSpec pins this JVM path, the Column path above
-    * and the batch aggregate equal, on its fixture and on adversarial
-    * texts; [[graft.streaming.TwsGates]] runs it per streamed document.
+    * per document. A document is a bounded row, so the fold runs as one
+    * tight JVM loop per document instead: same split/shingle/salted-md5/
+    * lane layout, byte-identical output. NeardupStreamSpec pins this fold
+    * and the Column path equal, on its fixture and on adversarial texts.
     *
     * Returns null when the document has fewer than `shingleN` words (no
-    * signature — the batch path emits no row); callers route those around
-    * bucket keying.
+    * signature; [[minhashSignatures]] emits no row); callers route those
+    * around bucket keying.
     */
   def minhashSignatureJvm(text: String, k: Int = NumHashes,
                           shingleN: Int = 3): Array[Long] = {
@@ -321,15 +306,8 @@ object TextDedup {
     mh
   }
 
-  /** The distinct (id, s) shingle set — one logical frame the composed
-    * pipeline shares between signature generation and Jaccard
-    * verification. The optimizer specializes it per consumer rather than
-    * materializing it: the MinHash branch strips the distinct again
-    * (RemoveRedundantAggregates — min is duplicate-agnostic) keeping its
-    * zero-shuffle partial-min shape, and the verification branch pushes
-    * its candidate semi-join below the explode. Sharing the val is still
-    * the right API: semantics stay in one place and the planner picks the
-    * per-consumer physical form.
+  /** The distinct (id, s) shingle set — the input of Jaccard
+    * verification ([[jaccardOnPairs]]) and of `Curation.contamination`.
     */
   def distinctShingles(docs: DataFrame, idCol: String, textCol: String,
                        shingleN: Int = 3): DataFrame =
@@ -411,17 +389,7 @@ object TextDedup {
     * mathematically consistent answer.
     */
   def jaccardOnPairs(docs: DataFrame, pairs: DataFrame, idCol: String,
-                     textCol: String, shingleN: Int = 3): DataFrame =
-    jaccardFromShingleSet(distinctShingles(docs, idCol, textCol, shingleN),
-      pairs, idCol)
-
-  /** [[jaccardOnPairs]] over a pre-built distinct shingle frame — pass the
-    * same [[distinctShingles]] value the MinHash stage consumed so the
-    * shingle semantics live in one val (see [[distinctShingles]] for how
-    * the optimizer specializes each consumer).
-    */
-  def jaccardFromShingleSet(shingleSet: DataFrame, pairs: DataFrame,
-                            idCol: String): DataFrame = {
+                     textCol: String, shingleN: Int = 3): DataFrame = {
     // the intersection must count each pair's shingle matches exactly
     // once: a duplicated (doc_a, doc_b) row would k-fold-inflate n_inter
     // (and an inflated n_inter can zero the union denominator — an ANSI
@@ -432,7 +400,7 @@ object TextDedup {
     val uniq = pairs.select("doc_a", "doc_b").distinct()
     val members = uniq
       .select(explode(array(col("doc_a"), col("doc_b"))).as("jid")).distinct()
-    val sh = shingleSet
+    val sh = distinctShingles(docs, idCol, textCol, shingleN)
       .withColumnRenamed(idCol, "jid")
       .join(members, Seq("jid"), "left_semi")
       .repartition(col("jid"))

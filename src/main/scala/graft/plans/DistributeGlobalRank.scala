@@ -110,7 +110,6 @@ import org.apache.spark.sql.types._
 object DistributeGlobalRank extends Rule[LogicalPlan] {
 
   val ConfKey = "spark.graft.distributeGlobalRank"
-  val PartitionedConfKey = "spark.graft.distributePartitionedWindow"
 
   /** Cost floor for the partitioned leg: refuse unless stats prove at
     * least this many rows per key (rowCount / Πndv — a LOWER bound on
@@ -741,13 +740,8 @@ object DistributeGlobalRank extends Rule[LogicalPlan] {
     *     (two pipelines + two join-backs would beat no plan);
     *   - same bounded-child / WindowGroupLimit / filter-consumed
     *     guards as the unpartitioned leg.
-    *
-    * Disable independently with
-    * `spark.graft.distributePartitionedWindow=false`.
     */
   private def rewritePartitioned(w: Window): Option[LogicalPlan] = {
-    if (!conf.getConfString(PartitionedConfKey, "true").toBoolean)
-      return None
     if (w.orderSpec.isEmpty || w.windowExpressions.isEmpty) return None
     if (!w.child.resolved || w.child.maxRows.isDefined) return None
     if (w.child.isInstanceOf[WindowGroupLimit]) return None

@@ -30,6 +30,13 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     // would fire on shapes it must leave alone (see the rule's scaladoc)
     ext.injectOptimizerRule(_ => DistributeGlobalRank)
 
+    def intLit(e: org.apache.spark.sql.catalyst.expressions.Expression,
+               what: String): Int = e match {
+      case Literal(v: Int, IntegerType) => v
+      case other => throw new IllegalArgumentException(
+        s"$what must be an integer literal, got $other")
+    }
+
     ext.injectFunction((
       FunctionIdentifier("float_array_dot"),
       new ExpressionInfo(classOf[FloatArrayDot].getName, "float_array_dot"),
@@ -60,12 +67,8 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
       (children: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) => {
         require(children.length == 3,
           "graft_top_k expects (score, id, k literal)")
-        val k = children(2) match {
-          case Literal(v: Int, IntegerType) => v
-          case other => throw new IllegalArgumentException(
-            s"graft_top_k: k must be an integer literal, got $other")
-        }
-        TopKStructs(children(0), children(1), k)
+        TopKStructs(children(0), children(1),
+          intLit(children(2), "graft_top_k: k"))
       }))
 
     ext.injectFunction((
@@ -75,12 +78,8 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
       (children: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) => {
         require(children.length == 2,
           "graft_heavy_hitters expects (item, k literal)")
-        val k = children(1) match {
-          case Literal(v: Int, IntegerType) => v
-          case other => throw new IllegalArgumentException(
-            s"graft_heavy_hitters: k must be an integer literal, got $other")
-        }
-        HeavyHittersSketch(children(0), k)
+        HeavyHittersSketch(children(0),
+          intLit(children(1), "graft_heavy_hitters: k"))
       }))
 
     ext.injectFunction((
@@ -90,13 +89,6 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
         require(children.length == 1, "unicode_nfc expects 1 argument")
         UnicodeNfc(children.head)
       }))
-
-    def intLit(e: org.apache.spark.sql.catalyst.expressions.Expression,
-               what: String): Int = e match {
-      case Literal(v: Int, IntegerType) => v
-      case other => throw new IllegalArgumentException(
-        s"$what must be an integer literal, got $other")
-    }
 
     ext.injectFunction((
       FunctionIdentifier("winnow_fingerprints"),

@@ -209,9 +209,11 @@ object CurationQueries {
     // subtrees, so without the pin the md5 fingerprint + 48-bit SimHash
     // pipeline executed once per consumer (measured 11 parquet scans in
     // the executed plan; 3 after). (doc_id, fp, simhash) is per-doc
-    // metadata — exactly what a production dedup INDEX materializes. Lazy,
-    // so construction stays job-free. This is what the "ONE pass, then
-    // split" contract below always meant; now the plan does it too.
+    // metadata — exactly what a production dedup INDEX materializes. Lazy
+    // (no driver action), but under AQE building the frame runs the
+    // join's and SimHash aggregate's shuffle map stages. This is what the
+    // "ONE pass, then split" contract below always meant; now the plan
+    // does it too.
     val base = docs
       .select(col("doc_id"), TextStats.fingerprint(col("text")).as("fp"))
       .join(TextDedup.simhash(docs, "doc_id", "text", IndexSimhashBits),
@@ -569,8 +571,9 @@ object CurationQueries {
       // join) read this frame; without materialization the scan + split
       // + shingle explode re-runs per consumer (measured: SIX Generate
       // explodes in the plan, ReuseExchange never fired across the
-      // aggregate shapes) — lazy (eager=false) so query CONSTRUCTION
-      // stays job-free (LazyConstructionSpec's contract); same
+      // aggregate shapes) — lazy (eager=false), so no driver action,
+      // but under AQE building the frame runs the distinct's shuffle map
+      // stage (LazyConstructionSpec lists this key as eager); same
       // convention as the funnel stages above
       .localCheckpoint(false)
     val leaked = fps.groupBy("fp")
@@ -663,7 +666,8 @@ object CurationQueries {
       .select(col("doc_id"), md5(col("s")).as("fp"))
       .distinct()
       // consumed by the star-edge build AND the final audit join — lazy
-      // so construction stays job-free (LazyConstructionSpec contract)
+      // (no driver action), but under AQE building the frame runs the
+      // distinct's shuffle map stage
       .localCheckpoint(false)
     val edges = fps
       .join(fps.groupBy("fp").agg(min("doc_id").as("root")), Seq("fp"))
@@ -1051,15 +1055,14 @@ object CurationQueries {
       .localCheckpoint(false)
 
     val kept2Docs = docs.join(kept2, Seq("doc_id"), "left_semi")
-    val shSet = TextDedup.distinctShingles(kept2Docs, "doc_id", "text")
-    val sigs = TextDedup.minhashFromShingleSet(shSet, "doc_id",
+    val sigs = TextDedup.minhashSignatures(kept2Docs, "doc_id", "text",
       TextDedup.NumHashes)
     val cands = TextDedup.lshCandidatePairs(sigs, "doc_id",
         TextDedup.NumHashes).select("doc_a", "doc_b")
       // pinned (r17): the Jaccard stage consumes the candidate set three
       // ways (see dedupPipeline) — one LSH execution, not one per consumer
       .localCheckpoint(false)
-    val pairs = TextDedup.jaccardFromShingleSet(shSet, cands, "doc_id")
+    val pairs = TextDedup.jaccardOnPairs(kept2Docs, cands, "doc_id", "text")
       .filter(col("jaccard") >= 0.5).select("doc_a", "doc_b")
     val nonCanonical = TextDedup.duplicateClusters(pairs)
       .filter(col("doc") =!= col("cluster"))

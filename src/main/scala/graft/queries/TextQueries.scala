@@ -313,15 +313,7 @@ object TextQueries {
     */
   private def verifiedPairs(spark: SparkSession, dir: String): DataFrame = {
     val docs = Readers.table(spark, dir, "documents")
-    // one logical distinct-shingle frame for signature generation and
-    // verification (MinHash over the distinct set is the same signature).
-    // The optimizer then specializes each consumer: the MinHash branch
-    // drops the redundant distinct (min is duplicate-agnostic) and keeps
-    // the zero-shuffle map-side-partial shape, while the verification
-    // branch pushes its candidate semi-join BELOW the shingle explode —
-    // so at corpus scale the second explode runs only over candidate docs
-    val shSet = TextDedup.distinctShingles(docs, "doc_id", "text")
-    val sigs = TextDedup.minhashFromShingleSet(shSet, "doc_id", K)
+    val sigs = TextDedup.minhashSignatures(docs, "doc_id", "text", K)
     // pinned (r17): the verification stage consumes the candidate set
     // THREE ways (distinct pair-driver, its member list, and the output
     // join that preserves caller-duplicate rows), each keyed differently —
@@ -334,7 +326,7 @@ object TextQueries {
     val candidates = TextDedup.lshCandidatePairs(sigs, "doc_id", K)
       .select("doc_a", "doc_b")
       .localCheckpoint(false)
-    TextDedup.jaccardFromShingleSet(shSet, candidates, "doc_id")
+    TextDedup.jaccardOnPairs(docs, candidates, "doc_id", "text")
       .filter(col("jaccard") >= 0.5)
   }
 
@@ -1648,8 +1640,9 @@ object TextQueries {
     // measured 14 parquet scans / 38 exchanges in the executed plan
     // (8 reused), vs 0 scans / 10 exchanges above the pin. The weight
     // table is the doc slice's (doc, token, w) rows — bounded by the
-    // CosSlice design, tiny next to the corpus. Lazy, construction stays
-    // job-free.
+    // CosSlice design, tiny next to the corpus. Lazy (no driver action),
+    // but under AQE building the frame runs the tf and df aggregates'
+    // shuffle map stages.
     val norms = w.groupBy("doc_id").agg(sqrt(sum(col("w") * col("w"))).as("norm"))
     val dots = w.as("a")
       .join(w.as("b").hint("shuffle_hash"),

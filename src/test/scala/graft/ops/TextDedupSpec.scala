@@ -1,6 +1,11 @@
 package graft.ops
 
 import graft.TestSpark
+import org.apache.spark.JobCounter
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+import org.apache.spark.sql.execution.aggregate.BaseAggregateExec
+import org.apache.spark.sql.execution.exchange.Exchange
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -38,6 +43,45 @@ class TextDedupSpec extends AnyFunSuite {
     val est12 = pairs.find(p => (p._1, p._2) == (1L, 2L)).get._3
     assert(est12 == 1.0)
     sigs.unpersist()
+  }
+
+  test("minhashSignatures is one map-only pass") {
+    // two input partitions, so the fan-out adds no exchange of its own, and
+    // an RDD source, so the optimizer cannot fold the fixture into a local
+    // relation
+    val docs = spark.sparkContext.parallelize(Seq(
+      (1L, "the quick brown fox jumps over the lazy dog"),
+      (2L, "the quick brown fox jumps over the lazy cat"),
+      (3L, "too short"),
+      (4L, null),
+      (5L, " doubled  spaces, é and 😀 survive the fold ")), 2)
+      .toDF("doc_id", "text")
+    var sigs: DataFrame = null
+    val jobsOf = new JobCounter(spark.sparkContext)
+    try assert(jobsOf {
+      sigs = TextDedup.minhashSignatures(docs, "doc_id", "text") } == 0)
+    finally jobsOf.close()
+    val plan = sigs.queryExecution.executedPlan match {
+      case a: AdaptiveSparkPlanExec => a.executedPlan
+      case p => p
+    }
+    assert(plan.collect {
+      case a: BaseAggregateExec => a
+      case e: Exchange => e
+    }.isEmpty, s"signature plan aggregates or shuffles:\n$plan")
+
+    val lanes = (0 until TextDedup.NumHashes).map(i => s"mh$i")
+    assert(sigs.columns.toSeq == "doc_id" +: lanes)
+    val ref = docs
+      .withColumn("__sh", TextDedup.shinglesFromWords(
+        split(coalesce(col("text"), lit("")), " "), 3))
+      .select((col("doc_id") +: TextDedup.rowMinhashCols(col("__sh"))): _*)
+      .filter(col("mh0").isNotNull)
+    def rows(df: DataFrame) = df.collect()
+      .map(r => r.getLong(0) -> lanes.indices.map(i => r.getLong(i + 1))).toMap
+    val got = rows(sigs)
+    assert(got.keySet == Set(1L, 2L, 5L))   // short and null texts: no row
+    assert(got == rows(ref))
   }
 
   test("jaccardOnPairs: exact trigram jaccard on known sets") {

@@ -9,8 +9,10 @@ import org.scalatest.funsuite.AnyFunSuite
 
 /** [[TwsGates.neardupStreamTws]] certification:
   *
-  *  1. the row-local MinHash signature is bit-identical to the batch
-  *     [[TextDedup.minhashSignatures]] aggregate (same salted-md5 lanes);
+  *  1. the JVM fold the stream runs, and the batch
+  *     [[TextDedup.minhashSignatures]] built on it, are bit-identical to
+  *     the Column-expression reference [[TextDedup.rowMinhashCols]] (same
+  *     salted-md5 lanes);
   *  2. stream decisions match a sequential-greedy replay of the band-claim
   *     rule over the SAME band keys, at one-batch, many-batch, and
   *     scrambled-within-batch feeds (seq order is the determinism
@@ -108,24 +110,32 @@ class NeardupStreamSpec extends AnyFunSuite {
     } finally q.stop()
   }
 
-  test("row-local MinHash equals the batch aggregate signature") {
-    val docs = feed.toDF().filter(length(col("text")) > 20)
-    val batch = TextDedup.minhashSignatures(docs, "doc_id", "text")
-      .collect().map(r => r.getLong(0) ->
-        (1 to TextDedup.NumHashes).map(r.getLong)).toMap
-    val row = docs
+  /** The Column-expression signature of every document with at least
+    * three words, keyed by `doc_id` — the independent reference.
+    */
+  private def columnSignatures(docs: org.apache.spark.sql.DataFrame)
+  : Map[Long, Seq[Long]] =
+    signatureMap(docs
       .withColumn("__w", split(coalesce(col("text"), lit("")), " "))
       .withColumn("__sh", TextDedup.shinglesFromWords(col("__w"), 3))
-      .select((col("doc_id")
-        +: TextDedup.rowMinhashCols(col("__sh"))): _*)
-      .filter(col("mh0").isNotNull)
-      .collect().map(r => r.getLong(0) ->
-        (1 to TextDedup.NumHashes).map(r.getLong)).toMap
-    assert(row == batch)
-    // and the hot JVM fold the stream actually runs matches both
-    val jvm = feed.filter(_.text.length > 20).map(d =>
-      d.doc_id -> TextDedup.minhashSignatureJvm(d.text).toSeq).toMap
-    assert(jvm == batch.map { case (k, v) => k -> v.toSeq })
+      .select((col("doc_id") +: TextDedup.rowMinhashCols(col("__sh"))): _*)
+      .filter(col("mh0").isNotNull))
+
+  private def signatureMap(sigs: org.apache.spark.sql.DataFrame)
+  : Map[Long, Seq[Long]] =
+    sigs.collect().map(r => r.getLong(0) ->
+      (1 to TextDedup.NumHashes).map(r.getLong).toSeq).toMap
+
+  test("batch and JVM MinHash signatures equal the Column reference") {
+    val docs = feed.toDF()
+    val ref = columnSignatures(docs)
+    assert(ref.keySet == feed.map(_.doc_id).toSet - 6L)
+    assert(signatureMap(
+      TextDedup.minhashSignatures(docs, "doc_id", "text")) == ref)
+    // the fold the stream runs per document
+    val jvm = feed.flatMap(d => Option(TextDedup.minhashSignatureJvm(d.text))
+      .map(d.doc_id -> _.toSeq)).toMap
+    assert(jvm == ref)
     // too-short docs: no batch row, null JVM signature
     assert(TextDedup.minhashSignatureJvm("tiny doc") == null)
   }
@@ -215,12 +225,14 @@ class NeardupStreamSpec extends AnyFunSuite {
     } finally q.stop()
   }
 
-  test("JVM signature equals the batch aggregate on adversarial texts") {
-    // seeded adversarial corpus: unicode (incl. astral), empty words from
+  test("signatures equal the Column reference on adversarial texts") {
+    // seeded adversarial corpus: unicode (supplementary-plane characters,
+    // combining marks, lone and stacked), empty words from
     // doubled/leading/trailing spaces, sub-shingle-length and null texts —
     // the places split/md5/lane parity could silently diverge
     val rnd = new scala.util.Random(0x13)
-    val alpha = Vector("a", "bb", "é", "дом", "😀", "𝒜x", "", "z9")
+    val alpha = Vector("a", "bb", "é", "дом", "😀", "𝒜x", "", "z9",
+      "\uD840\uDC00", "e\u0301", "\u0301", "a\u0308\u0323", "👩\u200D💻")
     val texts: Seq[String] = (0 until 200).map { i =>
       if (i % 37 == 0) null
       else {
@@ -233,16 +245,15 @@ class NeardupStreamSpec extends AnyFunSuite {
     }
     val df = texts.zipWithIndex
       .map { case (t, i) => (i.toLong, t) }.toDF("doc_id", "text")
-    val batch = TextDedup.minhashSignatures(df, "doc_id", "text")
-      .collect().map(r => r.getLong(0) ->
-        (1 to TextDedup.NumHashes).map(r.getLong).toSeq).toMap
+    val ref = columnSignatures(df)
+    assert(signatureMap(TextDedup.minhashSignatures(df, "doc_id", "text")) == ref)
     texts.zipWithIndex.foreach { case (t, i) =>
       val jvm = Option(TextDedup.minhashSignatureJvm(t)).map(_.toSeq)
-      assert(jvm == batch.get(i.toLong),
-        s"doc $i (${Option(t).map(_.take(40))}): jvm=$jvm batch=${batch.get(i.toLong)}")
+      assert(jvm == ref.get(i.toLong),
+        s"doc $i (${Option(t).map(_.take(40))}): jvm=$jvm ref=${ref.get(i.toLong)}")
     }
     // the generator must exercise both branches
-    assert(batch.nonEmpty && batch.size < texts.size)
+    assert(ref.nonEmpty && ref.size < texts.size)
   }
 
   test("horizonMillis parses every watermark delay Spark accepts") {
