@@ -1,7 +1,8 @@
 package graft.ops
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Encoders, Row}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{LongType, StructField, StructType}
 
 /** Near-duplicate detection for document corpora — the MinHash/LSH and
   * SimHash family. No driver-side loops: every step is a narrow map or a
@@ -191,20 +192,24 @@ object TextDedup {
     * shingle instead of k.
     *
     * Plan shape: a map-only pass that runs [[minhashSignatureJvm]] once per
-    * row through a udf — no explode, no aggregate, no exchange of its own,
-    * and the same function the streaming near-dup gate runs. The udf
-    * decodes the UTF-8 text to a Java `String` before splitting and
-    * hashing, exactly as the stream does, so text that is not valid UTF-8
-    * hashes its replacement characters. Rows are not grouped by `idCol`:
-    * callers pass unique ids (every query key passes `doc_id`).
+    * row — no explode, no aggregate, no exchange of its own, and the same
+    * function the streaming near-dup gate runs. It is a typed `flatMap`,
+    * not a udf plus a null filter: the optimizer copies such a filter below
+    * the fan-out, which signs every document twice, once in the unsplit
+    * scan. The text is decoded from UTF-8 to a Java `String` before
+    * splitting and hashing, exactly as the stream does, so text that is not
+    * valid UTF-8 hashes its replacement characters. Rows are not grouped by
+    * `idCol`: callers pass unique ids (every query key passes `doc_id`).
     */
   def minhashSignatures(docs: DataFrame, idCol: String, textCol: String,
                         k: Int = NumHashes, shingleN: Int = 3): DataFrame = {
-    val sign = udf((text: String) => minhashSignatureJvm(text, k, shingleN))
-    graft.etl.Readers.fanOut(docs.select(col(idCol), col(textCol)))
-      .select(col(idCol), sign(col(textCol)).as("__mh"))
-      .filter(col("__mh").isNotNull)
-      .select(col(idCol) +: (0 until k).map(i => col("__mh")(i).as(s"mh$i")): _*)
+    val in = graft.etl.Readers.fanOut(docs.select(col(idCol), col(textCol)))
+    val out = StructType(in.schema.head +:
+      (0 until k).map(i => StructField(s"mh$i", LongType, nullable = false)))
+    in.flatMap { r =>
+      Option(minhashSignatureJvm(r.getString(1), k, shingleN))
+        .map(mh => Row.fromSeq(r.get(0) +: mh.toSeq))
+    }(Encoders.row(out))
   }
 
   /** ROW-LOCAL MinHash signature columns — the Column-expression

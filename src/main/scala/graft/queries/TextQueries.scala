@@ -84,10 +84,10 @@ object TextQueries {
     * candidate pairs with estimated similarity.
     */
   def dedupMinhashLsh(spark: SparkSession, dir: String): DataFrame = {
-    // the band self-join recomputes the signature subtree per side; a
-    // localCheckpoint here was MEASURED SLOWER at sf0.1 (eager
-    // materialization costs more than the recompute) — don't "optimize"
-    // this without re-measuring
+    // both sides of the band self-join are one canonical subtree, so AQE
+    // reuses the band exchange and the signatures are computed once; a
+    // localCheckpoint here was MEASURED SLOWER at sf0.1 — don't add one
+    // without re-measuring
     val sigs = TextDedup.minhashSignatures(
       Readers.table(spark, dir, "documents"), "doc_id", "text", K)
     TextDedup.lshCandidatePairs(sigs, "doc_id", K)
