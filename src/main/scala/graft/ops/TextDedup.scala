@@ -321,7 +321,8 @@ object TextDedup {
   /** LSH candidate pairs: docs sharing at least one band (all `BandSize`
     * signature positions equal within the band), with the MinHash-estimated
     * similarity (fraction of equal signature positions). `a < b` dedupes
-    * the symmetric pairs.
+    * the symmetric pairs, and a pair that collides in several bands is
+    * kept only in the lowest of them, so no distinct aggregate is needed.
     *
     * Plan shape: each signature row explodes into one (band, bucket-key)
     * row per band, and candidates come from a *hash equi-join* on that key.
@@ -348,15 +349,18 @@ object TextDedup {
     // shuffle_hash hint keeps the tiny-data case off the broadcast path —
     // a driver collect+rebroadcast of the whole signature table that a
     // real corpus could never take anyway.
+    val firstEqualBand = coalesce((0 until k by BandSize).map { s =>
+      when((s until s + BandSize).map(i => col(s"x.mh$i") === col(s"y.mh$i"))
+        .reduce(_ && _), lit(s))
+    }: _*)
     val j = bands.as("x").join(bands.as("y").hint("shuffle_hash"),
       col("x.band") === col("y.band") && col("x.bkey") === col("y.bkey")
-        && col("x.doc") < col("y.doc"))
+        && col("x.doc") < col("y.doc") && col("x.band") === firstEqualBand)
     val equalPositions = (0 until k)
       .map(i => when(col(s"x.mh$i") === col(s"y.mh$i"), 1).otherwise(0))
       .reduce(_ + _)
     j.select(col("x.doc").as("doc_a"), col("y.doc").as("doc_b"),
         (equalPositions.cast("double") / k).as("est_sim"))
-      .distinct()   // a pair can collide in several bands
   }
 
   /** Exact n-gram Jaccard similarity for an explicit pair set — the
