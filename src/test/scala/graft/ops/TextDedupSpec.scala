@@ -84,6 +84,17 @@ class TextDedupSpec extends AnyFunSuite {
     assert(got == rows(ref))
   }
 
+  test("lshCandidatePairs: one row per pair, however many bands collide") {
+    val docs = Seq((1L, "a b c d e f"), (2L, "a b c d e f"),
+      (3L, "a b c d e g"), (4L, "u v w x y z")).toDF("doc_id", "text")
+    val pairs = TextDedup.lshCandidatePairs(
+        TextDedup.minhashSignatures(docs, "doc_id", "text"), "doc_id")
+      .as[(Long, Long, Double)].collect()
+    // 1 and 2 are identical, so they collide in all four bands
+    assert(pairs.contains((1L, 2L, 1.0)))
+    assert(pairs.map(p => (p._1, p._2)).distinct.length == pairs.length)
+  }
+
   test("jaccardOnPairs: exact trigram jaccard on known sets") {
     // doc1: shingles {a b c, b c d}; doc2: {a b c, b c e}
     // intersection 1, union 3 → jaccard 1/3
