@@ -60,15 +60,6 @@ object TextDedup {
   def shingles(text: Column, n: Int = 3): Column =
     shinglesFromWords(split(text, " "), n)
 
-  /** (id, shingle) exploded rows with the word split bound to an attribute
-    * so it evaluates once per document.
-    */
-  private def shingleRows(docs: DataFrame, idCol: String, textCol: String,
-                          shingleN: Int): DataFrame =
-    graft.etl.Readers.fanOut(docs.select(col(idCol), col(textCol)))
-      .select(col(idCol), split(col(textCol), " ").as("__w"))
-      .select(col(idCol), explode(shinglesFromWords(col("__w"), shingleN)).as("s"))
-
   /** Exact repeated-span (substring) dedup profile — the sub-chunk-grain
     * member of the dedup family. Suffix-array approaches ("Deduplicating
     * Training Data Makes Language Models Better", Lee et al. 2022) find
@@ -313,10 +304,15 @@ object TextDedup {
 
   /** The distinct (id, s) shingle set — the input of Jaccard
     * verification ([[jaccardOnPairs]]) and of `Curation.contamination`.
+    * The word split is bound to an attribute so it evaluates once per
+    * document.
     */
   def distinctShingles(docs: DataFrame, idCol: String, textCol: String,
                        shingleN: Int = 3): DataFrame =
-    shingleRows(docs, idCol, textCol, shingleN).distinct()
+    graft.etl.Readers.fanOut(docs.select(col(idCol), col(textCol)))
+      .select(col(idCol), split(col(textCol), " ").as("__w"))
+      .select(col(idCol), explode(shinglesFromWords(col("__w"), shingleN)).as("s"))
+      .distinct()
 
   /** LSH candidate pairs: docs sharing at least one band (all `BandSize`
     * signature positions equal within the band), with the MinHash-estimated
