@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Smoke-check main mirroring the driver's entry check: runs
   * `SparkEntry.entry` and prints the row count (must be > 0).
   */

@@ -1,6 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -290,8 +290,7 @@ object Multimodal {
       math.floor(bright * 1e6 + 0.5) / 1e6)
   }
 
-  def extractFeatures(spark: SparkSession, media: DataFrame,
-                      batchSize: Int = 64): DataFrame = {
+  def extractFeatures(media: DataFrame, batchSize: Int = 64): DataFrame = {
     val enc = org.apache.spark.sql.catalyst.encoders.RowEncoder
       .encoderFor(featureSchema)
     media.select("media_id", "media").mapPartitions { rows =>

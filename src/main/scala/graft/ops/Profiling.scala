@@ -91,7 +91,7 @@ object Profiling {
         (abs(c(s"${f.name}__nd_est") - c(s"${f.name}__nd_exact"))
           <= c(s"${f.name}__nd_exact") * lit(0.06)).as("nd_ok"))
     }
-    one.select(explode(array(stacked: _*)).as("r")).select(col("r.*"))
+    one.select(explode(array(stacked.toIndexedSeq: _*)).as("r")).select(col("r.*"))
   }
 
   /** Fixed-bound equi-width histogram of a numeric column: bucket 0 =

@@ -774,7 +774,7 @@ object Ranking {
     * ~31 × 4 substring evals per row on their string-fraction proxies).
     */
   private def assignRanges(df: DataFrame, headExpr: Column,
-                           splits: Option[Seq[Double]] = None): DataFrame = {
+                           splits: Option[Seq[Double]]): DataFrame = {
     // Materialize the range head once per row ONLY when it is computed:
     // CaseWhen conditions are excluded from subexpression elimination, so
     // the unrolled whens would re-evaluate a computed head k times per

@@ -5,6 +5,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
+import scala.annotation.unused
+
 /** Reference-parity queries over the synthetic testdata (SURVEY.md §2 →
   * §7.3 key mapping). Every query is deterministic (explicit total ORDER BY)
   * and every computed column is aliased identically in the Spark plan and
@@ -199,7 +201,7 @@ object Core {
     * certified by its own key (`unicode_nfc`) — non-ASCII literals don't
     * survive source-encoding round-trips reliably.
     */
-  def sqlFunctionSurface(spark: SparkSession, dir: String): DataFrame =
+  def sqlFunctionSurface(spark: SparkSession, @unused dir: String): DataFrame =
     spark.sql(
       """SELECT 'cdc_chunks' AS fn,
         |  CAST(size(cdc_chunks('the quick brown fox jumps over the lazy dog',

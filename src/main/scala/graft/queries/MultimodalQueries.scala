@@ -80,7 +80,7 @@ object MultimodalQueries {
     * filter math, deflate framing, or chunk layout breaks the digest.
     */
   def multimodalFeatures(spark: SparkSession, dir: String): DataFrame =
-    pinSorted(Multimodal.extractFeatures(spark,
+    pinSorted(Multimodal.extractFeatures(
       Multimodal.encodedMediaTable(
         Readers.table(spark, dir, "documents"), "doc_id", "text", "source")),
       "media_id")
@@ -123,7 +123,7 @@ object MultimodalQueries {
     * brightness of the resized raster from the original text.
     */
   def multimodalResize(spark: SparkSession, dir: String): DataFrame =
-    pinSorted(Multimodal.extractFeatures(spark,
+    pinSorted(Multimodal.extractFeatures(
       Multimodal.resizeMedia(
         Multimodal.encodedMediaTable(
           Readers.table(spark, dir, "documents"), "doc_id", "text", "source"),

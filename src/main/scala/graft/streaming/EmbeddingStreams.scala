@@ -83,7 +83,7 @@ object EmbeddingStreams {
                                  // probed-cells / rows-read readout
     val cellFilter =
       if (probedIds.isEmpty) lit(false) // empty batch: right schema, no scan
-      else col("centroid_id").isin(probedIds: _*)
+      else col("centroid_id").isin(probedIds.toIndexedSeq: _*)
     val cells = index.filter(cellFilter)
       .select(col("vec_id"), col("embedding"), col("_n"),
         col("centroid_id"))

@@ -1,8 +1,6 @@
 package graft.etl
 
 import graft.TestSpark
-import org.apache.spark.sql.Row
-import org.apache.spark.sql.types._
 import org.scalatest.funsuite.AnyFunSuite
 import java.sql.Timestamp
 

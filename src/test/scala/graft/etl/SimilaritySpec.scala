@@ -64,7 +64,7 @@ class SimilaritySpec extends AnyFunSuite {
 
   test("score bounds: 0 < s <= 1 for positive prices") {
     val got = Similarity
-      .findSimilar(products, 536469L, products.select("product_id").as[Long].collect())
+      .findSimilar(products, 536469L, products.select("product_id").as[Long].collect().toSeq)
       .as[(Long, Double)].collect()
     assert(got.length == 8)
     got.foreach { case (_, s) => assert(s > 0.0 && s <= 1.0) }

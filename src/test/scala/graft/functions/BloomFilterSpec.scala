@@ -1,7 +1,7 @@
 package graft.functions
 
 import graft.TestSpark
-import graft.functions.BloomFilterFunctions.{bloomAgg, bloomContains}
+import graft.functions.BloomFilterFunctions.bloomAgg
 import graft.ops.RuntimeFilter
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite

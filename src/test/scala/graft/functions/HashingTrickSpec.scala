@@ -8,7 +8,6 @@ import org.scalatest.funsuite.AnyFunSuite
 class HashingTrickSpec extends AnyFunSuite {
 
   private val spark = TestSpark.spark
-  import spark.implicits._
 
   private def md5hex(s: String): String =
     java.security.MessageDigest.getInstance("MD5")

@@ -7,7 +7,6 @@ import org.scalatest.funsuite.AnyFunSuite
 class KllSketchSpec extends AnyFunSuite {
 
   private val spark = TestSpark.spark
-  import spark.implicits._
 
   private def rankError(est: Double, q: Double, data: Array[Double]): Double = {
     val n = data.length.toDouble

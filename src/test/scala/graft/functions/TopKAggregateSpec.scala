@@ -1,7 +1,6 @@
 package graft.functions
 
 import graft.TestSpark
-import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 class TopKAggregateSpec extends AnyFunSuite {

@@ -2,7 +2,6 @@ package graft.functions
 
 import graft.TestSpark
 import graft.ops.Vectors
-import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 /** The native codegen dot product must be bit-identical to the

@@ -1,7 +1,6 @@
 package graft.ops
 
 import graft.TestSpark
-import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Pins the promise the LSH/jaccard docstrings make — "AQE's skew-join

@@ -106,7 +106,6 @@ class BehaviorSpec extends AnyFunSuite {
   test("cohortRetention: offsets count distinct users per week") {
     // user 1 first event 2024-01-01 (Mon), active again +2 weeks
     // user 2 first event 2024-01-08, active same week twice
-    val fmt = java.time.format.DateTimeFormatter.ISO_INSTANT
     def at(s: String) = Timestamp.from(java.time.Instant.parse(s))
     val df = Seq(
       (1L, 1L, at("2024-01-01T10:00:00Z")),

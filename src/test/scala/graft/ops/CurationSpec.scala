@@ -1,8 +1,6 @@
 package graft.ops
 
 import graft.TestSpark
-import org.apache.spark.sql.Row
-import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 class CurationSpec extends AnyFunSuite {

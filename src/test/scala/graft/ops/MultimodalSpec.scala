@@ -73,7 +73,7 @@ class MultimodalSpec extends AnyFunSuite {
     val payloadLen = m.filter($"media_id" === 1L)
       .select(octet_length($"media")).as[Int].collect()(0)
     assert(payloadLen > 19)
-    val f = Multimodal.extractFeatures(spark, m, batchSize = 2)
+    val f = Multimodal.extractFeatures(m, batchSize = 2)
       .collect().map(r => r.getLong(0) -> r).toMap
     assert(f.size == 4)
     val r1 = f(1L)
@@ -95,7 +95,7 @@ class MultimodalSpec extends AnyFunSuite {
 
   test("resizeMedia: real nearest-neighbor resample, re-encoded as PNG") {
     val m = Multimodal.encodedMediaTable(docs, "doc_id", "text", "source")
-    val out = Multimodal.extractFeatures(spark,
+    val out = Multimodal.extractFeatures(
         Multimodal.resizeMedia(m, targetW = 8, targetH = 4))
       .collect().map(r => r.getLong(0) -> r).toMap
     // doc3: 64×2 → 8×2; source pixel (r·2/2)·64 + (c·64/8) = all 'a' region

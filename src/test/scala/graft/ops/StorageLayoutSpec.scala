@@ -14,7 +14,6 @@ import java.nio.file.Files
 class StorageLayoutSpec extends AnyFunSuite {
 
   private val spark = TestSpark.spark
-  import spark.implicits._
 
   private val dir = "/root/testdata/sf0.001"
 

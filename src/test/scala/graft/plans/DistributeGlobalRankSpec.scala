@@ -2,7 +2,6 @@ package graft.plans
 
 import graft.TestSpark
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 /** [[DistributeGlobalRank]] certification: naive global-rank SQL is

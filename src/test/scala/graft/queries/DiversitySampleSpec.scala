@@ -1,7 +1,7 @@
 package graft.queries
 
 import graft.TestSpark
-import graft.ops.{TextDedup, Vectors}
+import graft.ops.TextDedup
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite

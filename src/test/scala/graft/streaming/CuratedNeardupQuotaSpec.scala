@@ -97,7 +97,7 @@ class CuratedNeardupQuotaSpec extends AnyFunSuite {
     val survivors = exactSurvivors.filter(d => ndKept.contains(d._2))
     survivors.groupBy(_._1).toSeq.flatMap { case (src, g) =>
       var cum = 0L
-      g.sortBy(_._4).map { case (_, id0, text, seq0) =>
+      g.sortBy(_._4).map { case (_, id0, text, _) =>
         val n = text.split(" ", -1).length.toLong
         cum += n
         (src, id0, n, cum <= Budget, cum)

@@ -88,7 +88,7 @@ class CuratedQuotaSpec extends AnyFunSuite {
       .sortBy(_._4)
     survivors.groupBy(_._1).toSeq.flatMap { case (src, g) =>
       var cum = 0L
-      g.sortBy(_._4).map { case (_, id0, text, seq0) =>
+      g.sortBy(_._4).map { case (_, id0, text, _) =>
         val n = text.split(" ", -1).length.toLong
         cum += n
         (src, id0, n, cum <= Budget, cum)

@@ -2,7 +2,6 @@ package graft.streaming
 
 import graft.TestSpark
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import java.sql.Timestamp
 

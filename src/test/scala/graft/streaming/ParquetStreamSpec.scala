@@ -2,7 +2,6 @@ package graft.streaming
 
 import graft.TestSpark
 import graft.queries.Analytics
-import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import java.nio.file.{Files, Paths}
 
