@@ -8,6 +8,8 @@ import org.apache.spark.sql.catalyst.plans.logical.Project
 import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.types.StructType
 
+import scala.collection.Searching.Found
+
 /** Drop-in equivalent of the reference's `OrdersEtl` class
   * (reference `etl/orders_etl.py:10-198`): same constructor shape, same
   * three entry points (`process`, `write`, `findSimilarProducts`), Spark
@@ -18,10 +20,12 @@ import org.apache.spark.sql.types.StructType
   *   - the sink targets the warehouse abstraction of [[Sink]] (Parquet
   *     overwrite ≡ BigQuery `if_exists="replace"`; swap in the
   *     spark-bigquery-connector on a connected cluster);
-  *   - `findSimilarProducts` reads the target and candidate rows from a
-  *     pin of the processed products taken on the first lookup (one plain
-  *     Spark job per lookup after that, no SQL query) and scores them on
-  *     the driver with [[Similarity.scoreExpr]], bound once per instance.
+  *   - `findSimilarProducts` looks the target and candidate rows up in
+  *     an index of the processed products by `product_id`, pinned on the
+  *     first lookup (one plain Spark job per lookup after that, no SQL
+  *     query, a binary search per id instead of a scan), and scores them
+  *     on the driver with [[Similarity.scoreExpr]], bound once per
+  *     instance.
   */
 class OrdersEtl(spark: SparkSession, ordersCsv: String, productsCsv: String,
                 warehouseRoot: String, tableName: String) {
@@ -40,12 +44,19 @@ class OrdersEtl(spark: SparkSession, ordersCsv: String, productsCsv: String,
   def write(): Unit = Sink.overwriteTable(output, warehouseRoot, tableName)
 
   /** `processedProducts` (columns of [[Schemas.products]], `product_id`
-    * first) materialized once for the lookups: an eager `localCheckpoint()`,
-    * which runs the products pipeline (scan, casts, keep-first dedup) on the
-    * first lookup, planned once into the RDD of its rows.
+    * first) indexed by `product_id` for the lookups: per partition, one
+    * pinned array of its rows with a non-null id, copied (the iterator
+    * reuses its rows) and sorted by id. The keep-first dedup leaves at most
+    * one row per non-null id, so one binary-search hit is the whole answer
+    * for that id. Built in one pass and `localCheckpoint`ed: taking the RDD
+    * of the adaptive plan runs the products dedup's shuffle stage on the
+    * first lookup, and that lookup's job computes and pins the arrays.
     */
-  private lazy val productsPin: RDD[InternalRow] =
-    processedProducts.localCheckpoint().queryExecution.toRdd
+  private lazy val productsPin: RDD[Array[InternalRow]] =
+    processedProducts.queryExecution.toRdd.mapPartitions { it =>
+      // a null id reads as 0 from getLong
+      Iterator.single(it.filter(!_.isNullAt(0)).map(_.copy()).toArray.sortBy(_.getLong(0)))
+    }.localCheckpoint()
 
   /** [[Similarity.scoreExpr]] bound to a candidate row joined with its
     * target row: the pin's columns, then the same columns again as `t_*`.
@@ -73,11 +84,13 @@ class OrdersEtl(spark: SparkSession, ordersCsv: String, productsCsv: String,
     * or target without a price scores `NaN`, as pandas NaN propagates
     * through the reference's arithmetic.
     *
-    * Each lookup is one Spark job and no SQL query: `runJob` over the pin
-    * returns the rows whose non-null `product_id` is the target or a
-    * candidate, and the driver scores each candidate against the target
-    * with the bound [[Similarity.scoreExpr]]. Nothing is analyzed, planned
-    * or compiled per lookup.
+    * Each lookup is one Spark job and no SQL query: `runJob` over the
+    * index pin binary-searches the target and every candidate in each
+    * partition's sorted array, so a task does O(|ids| · log n) work over
+    * its n rows rather than scanning them, and returns the hits. The
+    * driver scores each candidate against the target with the bound
+    * [[Similarity.scoreExpr]]. Nothing is analyzed, planned or compiled
+    * per lookup.
     *
     * The pin is taken on the first lookup and lives as long as this
     * instance: Spark's context cleaner drops its blocks once the instance
@@ -96,9 +109,8 @@ class OrdersEtl(spark: SparkSession, ordersCsv: String, productsCsv: String,
                           candidateIds: Seq[Long]): Map[Long, Double] = {
     val wanted = candidateIds.toSet
     val ids = wanted + targetId
-    // a null id reads as 0 from getLong; rows are reused by the iterator
-    val rows = spark.sparkContext.runJob(productsPin, (it: Iterator[InternalRow]) =>
-      it.filter(r => !r.isNullAt(0) && ids(r.getLong(0))).map(_.copy()).toArray).flatten
+    val rows = spark.sparkContext.runJob(productsPin, (it: Iterator[Array[InternalRow]]) =>
+      it.flatMap(sorted => ids.iterator.flatMap(OrdersEtl.probe(sorted, _))).toArray).flatten
     val target = rows.find(_.getLong(0) == targetId)
     require(target.isDefined, s"target product $targetId not found")
     rows.filter(r => wanted(r.getLong(0))).map { r =>
@@ -108,4 +120,16 @@ class OrdersEtl(spark: SparkSession, ordersCsv: String, productsCsv: String,
       })
     }.toMap
   }
+}
+
+object OrdersEtl {
+
+  /** The row of `sorted` (ascending by a non-null `product_id`) whose id
+    * is `id`, found by binary search.
+    */
+  private def probe(sorted: Array[InternalRow], id: Long): Option[InternalRow] =
+    sorted.view.map(_.getLong(0)).search(id) match {
+      case Found(i) => Some(sorted(i))
+      case _ => None
+    }
 }

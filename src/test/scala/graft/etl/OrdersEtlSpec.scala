@@ -1,7 +1,9 @@
 package graft.etl
 
 import graft.TestSpark
+import graft.ops.CatalogStats
 import org.apache.spark.JobCounter
+import org.apache.spark.sql.functions.spark_partition_id
 import org.scalatest.funsuite.AnyFunSuite
 
 import java.nio.charset.StandardCharsets.UTF_8
@@ -81,10 +83,10 @@ class OrdersEtlSpec extends AnyFunSuite {
     p.toString
   }
 
-  private def newEtl(): OrdersEtl = {
+  private def newEtl(products: Seq[String] = productsRows): OrdersEtl = {
     val dir = Files.createTempDirectory("graft-etl-facade")
     new OrdersEtl(spark, write(dir, "orders.csv", ordersRows),
-      write(dir, "products.csv", productsRows),
+      write(dir, "products.csv", products),
       dir.resolve("warehouse").toString, "orders.orders_denormalized")
   }
 
@@ -104,13 +106,15 @@ class OrdersEtlSpec extends AnyFunSuite {
     427227L -> Seq(439541L, 528462L, 9L),
     516425L -> Seq(516425L, 296597L))
 
-  test("lookup matches Similarity.findSimilar over processedProducts") {
-    val etl = newEtl()
+  private def assertMatchesFindSimilar(etl: OrdersEtl): Unit =
     lookups.foreach { case (target, cands) =>
       val expected = Similarity.findSimilar(etl.processedProducts, target, cands)
         .as[(Long, Double)].collect().toMap
       assert(etl.findSimilarProducts(target, cands) == expected, s"target $target")
     }
+
+  test("lookup matches Similarity.findSimilar over processedProducts") {
+    assertMatchesFindSimilar(newEtl())
   }
 
   test("concurrent lookups on one instance return the serial maps") {
@@ -143,6 +147,32 @@ class OrdersEtlSpec extends AnyFunSuite {
     assert(first.getMessage == "requirement failed: target product -1 not found")
     assert(etl.findSimilarProducts(516423L, Seq(296597L)) == Map(296597L -> 0.9726))
     intercept[IllegalArgumentException](etl.findSimilarProducts(42L, golden.keys.toSeq))
+  }
+
+  test("a header-only products file: every lookup reports the target not found") {
+    val etl = newEtl(productsRows.take(1))
+    assert(etl.processedProducts.isEmpty)
+    val first = intercept[IllegalArgumentException](etl.findSimilarProducts(516423L, Seq(1L)))
+    assert(first.getMessage == "requirement failed: target product 516423 not found")
+    intercept[IllegalArgumentException](etl.findSimilarProducts(1L, Seq.empty))
+  }
+
+  test("a pin over several partitions finds a target and candidates in different ones") {
+    val etl = newEtl()
+    val parts = spark.conf.get("spark.sql.shuffle.partitions").toInt
+    assert(parts >= 2)
+    CatalogStats.withConf(spark, "spark.sql.adaptive.coalescePartitions.enabled" -> "false") {
+      val partOf = etl.processedProducts.filter($"product_id".isNotNull)
+        .select($"product_id", spark_partition_id()).as[(Long, Int)].collect().toMap
+      // the golden lookup's target and candidates span several partitions
+      assert(golden.keys.map(partOf).toSet.size >= 2)
+      // the first lookup takes the pin under the same conf
+      assertMatchesFindSimilar(etl)
+    }
+    // the pin kept every partition: a later lookup runs one task per partition
+    val jobsOf = new JobCounter(spark.sparkContext)
+    try assert(jobsOf.tasks(etl.findSimilarProducts(516423L, golden.keys.toSeq)) == parts)
+    finally jobsOf.close()
   }
 
   test("a null price on the candidate or the target scores NaN") {
