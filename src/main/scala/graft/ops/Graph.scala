@@ -115,40 +115,38 @@ object Graph {
     val nodes = e.select(col("src").as("node"))
       .union(e.select(col("dst").as("node"))).distinct()
       .localCheckpoint(false)
-    // 1-row count, broadcast into every per-node expression
-    val n = nodes.agg(count(lit(1)).cast("double").as("__n"))
+    // |V| once: a literal in both rank formulas, and the per-iteration
+    // join-strategy decision ([[broadcastIfSmall]] — the node count never
+    // changes across iterations)
+    val nNodes = nodes.count()
+    val n = lit(nNodes.toDouble)
     val deg = e.groupBy(col("src").as("node"))
       .agg(count(lit(1)).cast("double").as("outdeg"))
-    def withBase(df: DataFrame) = df.crossJoin(broadcast(n))
     // (node, outdeg) pinned ONCE (r17): the per-iteration rank rebuild
     // previously re-joined `deg` every pass — the same |V|-sized join
     // repeated `iterations` times for a value that never changes. Folding
     // it into the node table up front drops one join (and the deg
     // re-aggregation) from every iteration; the loop is now exactly the
-    // two exchanges the scaladoc advertises plus one broadcast-joined
-    // |V|-row rebuild.
+    // two exchanges the scaladoc advertises plus one |V|-row rebuild.
     val nodesDeg = nodes
       .join(deg, Seq("node"), "left")
       .select(col("node"), coalesce(col("outdeg"), lit(0.0)).as("outdeg"))
       .localCheckpoint(false)
     // rank and outdeg travel together: the loop below joins edges against
     // ONE table keyed by node (outdeg 0 = sink; contributes nothing)
-    var ranks = withBase(nodesDeg)
-      .select(col("node"), (lit(1.0) / col("__n")).as("rank"), col("outdeg"))
+    var ranks = nodesDeg
+      .select(col("node"), (lit(1.0) / n).as("rank"), col("outdeg"))
       .localCheckpoint(false)
-    // |V| once, for the per-iteration join-strategy decision
-    // ([[broadcastIfSmall]] — node count never changes across iterations)
-    val nNodes = ranks.count()
     for (_ <- 1 to iterations) {
       val inflow = e
         .join(broadcastIfSmall(
           ranks.withColumnRenamed("node", "src"), nNodes), Seq("src"))
         .select(col("dst").as("node"), (col("rank") / col("outdeg")).as("c"))
         .groupBy("node").agg(sum(col("c")).as("inflow"))
-      ranks = withBase(nodesDeg)
+      ranks = nodesDeg
         .join(inflow, Seq("node"), "left")
         .select(col("node"),
-          (lit(1.0 - damping) / col("__n") +
+          (lit(1.0 - damping) / n +
             lit(damping) * coalesce(col("inflow"), lit(0.0))).as("rank"),
           col("outdeg"))
         .localCheckpoint(false)
