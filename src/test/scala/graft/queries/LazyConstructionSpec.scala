@@ -15,16 +15,19 @@ import org.scalatest.funsuite.AnyFunSuite
   * Exceptions are enumerated, not discovered: ops whose CONSTRUCTION is an
   * iterative driver loop with a convergence probe (pointer-jumping
   * connected components short-circuits on `isEmpty`), and the pinning or
-  * writing ops listed below.
+  * writing ops listed below. The list is two-sided: every key on it must
+  * still fire a job in the measured pass, so a key whose construction
+  * became lazy (or whose one-off work is memoized by the warm pass) leaves
+  * the list instead of hiding a later regression. The spec prints each
+  * listed or job-firing key's count.
   */
 class LazyConstructionSpec extends AnyFunSuite {
 
   private val sfDir = "/root/testdata/sf0.001"
 
-  /** Construction may legitimately run jobs for these keys (reason above). */
+  /** Construction runs jobs for exactly these keys (reasons above and inline). */
   private val eagerByDesign = Set(
     "dedup_clusters", // convergence-probed pointer jumping
-    "dedup_keep_best", // builds on dedup_clusters
     "dedup_pipeline", // composes the cluster pass
     "pretrain_pipeline", // stage survivor sets checkpointed + CC stage
     "entity_resolve", // clustering stage is dedup_clusters
@@ -33,11 +36,6 @@ class LazyConstructionSpec extends AnyFunSuite {
     "jsonl_roundtrip", // writes the JSONL files it quarantine-reads
     "orc_roundtrip", // writes the ORC files it reads back
     "cbo_join_reorder", // ANALYZE scans + the CBO-scoped bounded collect
-    "window_partitioned_auto", // ANALYZE scans (memoized) + the CBO-scoped
-                               // optimization forced at construction; the
-                               // RESULT is lazy (r12: collect removed)
-    "window_partitioned_range_auto", // same contract, RANGE-frame leg
-    "window_partitioned_string_auto", // same contract, dense-key-index leg
     // Multi-pass intermediates pinned with localCheckpoint(eager=false):
     // no DRIVER action fires, but AQE materializes the checkpoint's
     // exchange stages when the RDD is resolved at construction. The
@@ -85,14 +83,17 @@ class LazyConstructionSpec extends AnyFunSuite {
       SparkEntry.queries.values.foreach { fn =>
         try fn(spark, sfDir) catch { case _: Throwable => () }
       }
-      val violations = SparkEntry.queries.toSeq.sortBy(_._1).flatMap {
-        case (name, fn) =>
-          val n = jobsOf(fn(spark, sfDir)) // construction only — no action
-          if (n > 0 && !eagerByDesign(name)) Some(s"$name fired $n job(s)")
-          else None
+      val jobs = SparkEntry.queries.toSeq.sortBy(_._1).map {
+        case (name, fn) => name -> jobsOf(fn(spark, sfDir)) // construction only — no action
+      }
+      jobs.filter { case (name, n) => n > 0 || eagerByDesign(name) }
+        .foreach { case (name, n) => info(s"$name: $n construction job(s)") }
+      val violations = jobs.collect {
+        case (name, n) if n > 0 && !eagerByDesign(name) => s"$name fired $n job(s)"
+        case (name, 0) if eagerByDesign(name) => s"$name is allowlisted but fired none"
       }
       assert(violations.isEmpty,
-        s"queries ran jobs at construction:\n  ${violations.mkString("\n  ")}")
+        s"construction jobs off the allowlist:\n  ${violations.mkString("\n  ")}")
     } finally jobsOf.close()
   }
 }
